@@ -35,10 +35,6 @@ WORLD_SIZE = 102400.0  # metres
 DEFAULT_RES = 7  # 128 x 128 cells of 800 m
 
 
-def cell_width(res: int = DEFAULT_RES) -> float:
-    return WORLD_SIZE / (1 << res)
-
-
 # ---------------------------------------------------------------------------
 # numpy side (used inside pixel kernels + tests)
 # ---------------------------------------------------------------------------

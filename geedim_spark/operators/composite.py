@@ -33,7 +33,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geedim_spark import codecs
-from geedim_spark.operators import masks  # noqa: F401 (kernels)
+from geedim_spark.kernels import map_rows
+from geedim_spark.operators import masks
+from geedim_spark.operators.tiler import tile_windows
 
 METHODS = ("mosaic", "q-mosaic", "median", "mean", "mode", "medoid")
 
@@ -252,10 +254,7 @@ def composite_collection(
         pdf = _cap_medoid_stack(pdf, method, medoid_max_stack, "group")
         stacks, valids, dists = [], [], []
         for buf, coll, ts in zip(pdf["bytes"], pdf["collection"], pdf["time_start"]):
-            px = codecs.decode(bytes(buf))
-            names = masks.band_names_for(coll)
-            bands = {n: px[i] for i, n in enumerate(names[: px.shape[0]])}
-            m = masks.masks_for(coll, bands, time_start=ts, **mask_opts)
+            px, _, m = masks.image_masks(buf, coll, ts, **mask_opts)
             stacks.append(px)
             valids.append(m["CLOUDLESS_MASK"])
             if method == "q-mosaic":
@@ -348,56 +347,38 @@ def _pixel_tiles(
     so q-mosaic reducers can compute CLOUD_DIST with cloud-only sources,
     mask.py:102-104).  A caller-attached ``sort_key`` is honoured;
     otherwise capture time is the order."""
-    cols = ["image_id", "bytes", "collection", "time_start"]
     # _with_time_start backfills NULL when the column is absent (a frame
     # carrying only a caller-attached sort_key is a valid input, same as
     # composite_collection)
     images = masks._with_time_start(images)
-    if "sort_key" in images.columns:
-        src = images.select(*cols, "sort_key")
-    else:
-        src = images.select(*cols).withColumn(
+    if "sort_key" not in images.columns:
+        images = images.withColumn(
             "sort_key", F.col("time_start").cast("double")
         )
 
-    def _tiles(it):
-        for pdf in it:
-            rows = []
-            for image_id, buf, coll, sk, ts in zip(
-                pdf["image_id"], pdf["bytes"], pdf["collection"],
-                pdf["sort_key"], pdf["time_start"],
-            ):
-                px = codecs.decode(bytes(buf))
-                names = masks.band_names_for(coll)
-                bands = {n: px[i] for i, n in enumerate(names[: px.shape[0]])}
-                m = masks.masks_for(coll, bands, time_start=ts, **mask_opts)
-                valid = (
-                    m["FILL_MASK"].astype(np.uint8)
-                    + m["CLOUDLESS_MASK"].astype(np.uint8)
-                )
-                _, h, w = px.shape
-                n_tr = -(-h // tile_h)
-                n_tc = -(-w // tile_w)
-                for tr in range(0, h, tile_h):
-                    for tc in range(0, w, tile_w):
-                        blk = px[:, tr:tr + tile_h, tc:tc + tile_w]
-                        vblk = valid[tr:tr + tile_h, tc:tc + tile_w]
-                        rows.append({
-                            "image_id": image_id, "sort_key": sk,
-                            "tr": tr // tile_h, "tc": tc // tile_w,
-                            "n_tr": n_tr, "n_tc": n_tc,
-                            "tile_bytes": codecs.encode_raw(blk),
-                            "valid_bytes": codecs.encode_raw(vblk[None, :, :]),
-                        })
-            yield pd.DataFrame(rows, columns=[
-                "image_id", "sort_key", "tr", "tc", "n_tr", "n_tc",
-                "tile_bytes", "valid_bytes",
-            ])
+    def _row(image_id, buf, coll, ts, sk):
+        px, _, m = masks.image_masks(buf, coll, ts, **mask_opts)
+        valid = (
+            m["FILL_MASK"].astype(np.uint8)
+            + m["CLOUDLESS_MASK"].astype(np.uint8)
+        )
+        _, h, w = px.shape
+        n_tr = -(-h // tile_h)
+        n_tc = -(-w // tile_w)
+        for (tr, tc), ((r0, r1), (c0, c1)) in tile_windows(
+            (h, w), (tile_h, tile_w)
+        ):
+            yield (
+                image_id, sk, tr, tc, n_tr, n_tc,
+                codecs.encode_raw(px[:, r0:r1, c0:c1]),
+                codecs.encode_raw(valid[None, r0:r1, c0:c1]),
+            )
 
-    return src.mapInPandas(
-        _tiles,
-        schema="image_id string, sort_key double, tr int, tc int, "
-               "n_tr int, n_tc int, tile_bytes binary, valid_bytes binary",
+    return map_rows(
+        images, [*masks._IMAGE_COLS, "sort_key"],
+        "image_id string, sort_key double, tr int, tc int, "
+        "n_tr int, n_tc int, tile_bytes binary, valid_bytes binary",
+        _row,
     )
 
 

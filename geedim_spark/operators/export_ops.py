@@ -4,7 +4,7 @@ Reference flow: ``prepareForExport().toGeoTIFF()`` (image.py:741-1085) —
 tile the image, download+decode each tile, write windowed blocks into one
 GeoTIFF.  Engine flow:
 
-    images --mapInPandas (kernel tiling + slice + encode)--> tiles table
+    images --map_rows (kernel tiling + slice + encode)--> tiles table
            --write_snapshot--> committed parquet partitions   (primary sink)
            --assemble (test scale)--> numpy array             (K2 sink)
 
@@ -21,18 +21,20 @@ band select, scale/offset, dtype cast, grid preservation.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from geedim_spark import codecs
 from geedim_spark.functions.dtypes import cast_pixels
-from geedim_spark.operators.tiler import tile_shape
+from geedim_spark.kernels import map_rows
+from geedim_spark.operators.tiler import tile_shape, tile_windows
 
 _TILE_SCHEMA = (
     "image_id string, caption string, band_start int, band_stop int, "
     "row_start int, row_stop int, col_start int, col_stop int, "
     "tile_bytes binary"
 )
+
+_CAPTIONED_COLS = ["image_id", "caption", "bytes"]
 
 
 def export_tiles(
@@ -46,32 +48,16 @@ def export_tiles(
     Caption rides along on every tile (input_hint invariant: caption
     equality through every export path).
     """
-    def _batch(pdf: pd.DataFrame):
-        rows = []
-        for image_id, caption, buf in zip(pdf["image_id"], pdf["caption"], pdf["bytes"]):
-            px = codecs.decode(bytes(buf))
-            bands, h, w = px.shape
-            tb, th, tw = tile_shape(
-                bands, h, w, px.dtype.name, max_tile_size, max_tile_dim, max_tile_bands
-            )
-            for b0 in range(0, bands, tb):
-                for r0 in range(0, h, th):
-                    for c0 in range(0, w, tw):
-                        b1, r1, c1 = min(b0 + tb, bands), min(r0 + th, h), min(c0 + tw, w)
-                        rows.append({
-                            "image_id": image_id, "caption": caption,
-                            "band_start": b0, "band_stop": b1,
-                            "row_start": r0, "row_stop": r1,
-                            "col_start": c0, "col_stop": c1,
-                            "tile_bytes": codecs.encode_raw(px[b0:b1, r0:r1, c0:c1]),
-                        })
-        return pd.DataFrame(rows, columns=[
-            "image_id", "caption", "band_start", "band_stop", "row_start",
-            "row_stop", "col_start", "col_stop", "tile_bytes",
-        ])
+    def _row(image_id, caption, buf):
+        px = codecs.decode(bytes(buf))
+        tshape = tile_shape(
+            *px.shape, px.dtype.name, max_tile_size, max_tile_dim, max_tile_bands
+        )
+        for _, ((b0, b1), (r0, r1), (c0, c1)) in tile_windows(px.shape, tshape):
+            yield (image_id, caption, b0, b1, r0, r1, c0, c1,
+                   codecs.encode_raw(px[b0:b1, r0:r1, c0:c1]))
 
-    src = images.select("image_id", "caption", "bytes")
-    return src.mapInPandas(lambda it: (_batch(p) for p in it), schema=_TILE_SCHEMA)
+    return map_rows(images, _CAPTIONED_COLS, _TILE_SCHEMA, _row)
 
 
 def assemble_image(tile_rows, bands: int, h: int, w: int, dtype: str) -> np.ndarray:
@@ -100,21 +86,14 @@ def select_bands(
     if not keep_idx:
         raise ValueError(f"no bands match {band_regex!r} in {band_names}")
 
-    def _batch(pdf: pd.DataFrame):
-        out = []
-        for image_id, caption, buf in zip(pdf["image_id"], pdf["caption"], pdf["bytes"]):
-            px = codecs.decode(bytes(buf))
-            sel = np.ascontiguousarray(px[keep_idx])
-            out.append({
-                "image_id": image_id, "caption": caption,
-                "bytes": codecs.encode_raw(sel),
-                "n_bands": len(keep_idx),
-            })
-        return pd.DataFrame(out, columns=["image_id", "caption", "bytes", "n_bands"])
+    def _row(image_id, caption, buf):
+        px = codecs.decode(bytes(buf))
+        sel = np.ascontiguousarray(px[keep_idx])
+        yield image_id, caption, codecs.encode_raw(sel), len(keep_idx)
 
-    return images.select("image_id", "caption", "bytes").mapInPandas(
-        lambda it: (_batch(p) for p in it),
-        schema="image_id string, caption string, bytes binary, n_bands int",
+    return map_rows(
+        images, _CAPTIONED_COLS,
+        "image_id string, caption string, bytes binary, n_bands int", _row,
     )
 
 
@@ -133,30 +112,23 @@ def prepare_for_export(
     (callers needing the metadata columns re-join on image_id;
     ``api.Collection.prepare_for_export`` does exactly that)."""
     if not scale_offset and not dtype:
-        return images.select("image_id", "caption", "bytes")
+        return images.select(*_CAPTIONED_COLS)
 
-    def _batch(pdf: pd.DataFrame):
-        out = []
-        for image_id, caption, buf in zip(pdf["image_id"], pdf["caption"], pdf["bytes"]):
-            px = codecs.decode(bytes(buf))
-            work = px.astype(np.float64) if scale_offset else px
-            if scale_offset:
-                for b, (sc, off) in scale_offset.items():
-                    work[b] = work[b] * sc + off
-            if dtype:
-                work = cast_pixels(work, dtype)
-            elif scale_offset:
-                work = cast_pixels(work, "float64")
-            out.append({
-                "image_id": image_id, "caption": caption,
-                "bytes": codecs.encode_raw(np.ascontiguousarray(work)),
-            })
-        return pd.DataFrame(out, columns=["image_id", "caption", "bytes"])
+    def _row(image_id, caption, buf):
+        px = codecs.decode(bytes(buf))
+        work = px.astype(np.float64) if scale_offset else px
+        if scale_offset:
+            for b, (sc, off) in scale_offset.items():
+                work[b] = work[b] * sc + off
+        if dtype:
+            work = cast_pixels(work, dtype)
+        elif scale_offset:
+            work = cast_pixels(work, "float64")
+        yield image_id, caption, codecs.encode_raw(np.ascontiguousarray(work))
 
-    src = images.select("image_id", "caption", "bytes")
-    return src.mapInPandas(
-        lambda it: (_batch(p) for p in it),
-        schema="image_id string, caption string, bytes binary",
+    return map_rows(
+        images, _CAPTIONED_COLS,
+        "image_id string, caption string, bytes binary", _row,
     )
 
 
@@ -179,21 +151,16 @@ def pixel_histogram(images: DataFrame, band: int = 0) -> DataFrame:
     if band < 0:
         raise ValueError(f"band must be >= 0, got {band}")
 
-    def _batch(pdf: pd.DataFrame):
-        ids, vals, counts = [], [], []
-        for image_id, buf in zip(pdf["image_id"], pdf["bytes"]):
-            px = codecs.decode(bytes(buf))
-            if band >= px.shape[0]:
-                raise ValueError(
-                    f"band {band} out of range for {px.shape[0]}-band image")
-            v, c = np.unique(px[band], return_counts=True)
-            ids.extend([image_id] * len(v))
-            vals.extend(int(x) for x in v)
-            counts.extend(int(x) for x in c)
-        yield pd.DataFrame(
-            {"image_id": ids, "value": vals, "n_px": counts})
+    def _row(image_id, buf):
+        px = codecs.decode(bytes(buf))
+        if band >= px.shape[0]:
+            raise ValueError(
+                f"band {band} out of range for {px.shape[0]}-band image")
+        v, c = np.unique(px[band], return_counts=True)
+        for x, n in zip(v, c):
+            yield image_id, int(x), int(n)
 
-    return images.select("image_id", "bytes").mapInPandas(
-        lambda it: (df for pdf in it for df in _batch(pdf)),
-        schema="image_id string, value long, n_px long",
+    return map_rows(
+        images, ["image_id", "bytes"],
+        "image_id string, value long, n_px long", _row,
     )

@@ -31,8 +31,8 @@ The per-pixel formulas reproduce /root/reference/geedim/mask.py exactly:
                      (mask.py:66-82); bestEffort 1e6-pixel grid decimation
                      (mask.py:78) replicated via stride sampling
 
-Spark shape: per-image stats are one ``mapInPandas`` pass (a row is a whole
-image -> no shuffle); the tiled path does per-tile partial counts + a
+Spark shape: per-image stats are one ``kernels.map_rows`` pass (a row is a
+whole image -> no shuffle); the tiled path does per-tile partial counts + a
 ``groupBy(image_id)`` 2-phase hash agg (A1/A2 in SURVEY.md §2.4).
 """
 
@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geedim_spark import codecs
+from geedim_spark.kernels import map_rows
 
 # synthetic band layout of the input table (2-band: data + QA)
 BAND_NAMES = ("B1", "QA_PIXEL")
@@ -407,11 +408,6 @@ def cloud_dist(
     return np.clip(d, 0, min(max_cloud_dist, 65535)).astype(np.uint16)
 
 
-def decode_bands(buf: bytes, band_names=BAND_NAMES) -> dict[str, np.ndarray]:
-    px = codecs.decode(bytes(buf))
-    return {n: px[i] for i, n in enumerate(band_names[: px.shape[0]])}
-
-
 def stats_stride(total_px: int, max_pixels: int = MAX_REGION_STAT_PIXELS) -> int:
     """bestEffort grid decimation step (mask.py:78 analog): compute stats on
     every ``step``-th row/col so sampled pixels <= max_pixels."""
@@ -428,6 +424,10 @@ _STATS_SCHEMA = (
     "image_id string, total_px long, fill_px long, cloud_px long, "
     "shadow_px long, cloudless_px long"
 )
+
+# input columns of the per-image mask kernels (time_start backfilled by
+# _with_time_start)
+_IMAGE_COLS = ["image_id", "bytes", "collection", "time_start"]
 
 
 def _with_time_start(images: DataFrame) -> DataFrame:
@@ -534,38 +534,47 @@ def default_masks(bands: dict[str, np.ndarray]) -> dict[str, np.ndarray]:
     return {"FILL_MASK": fill, "CLOUDLESS_MASK": fill}
 
 
+def image_masks(buf, collection: str, time_start=None, **mask_opts):
+    """Decode one image row and compute its family's mask planes.
+
+    Returns ``(px, names, m)``: the decoded (bands, h, w) array, the band
+    names of its ``px.shape[0]`` bands (:func:`band_names_for`) and the
+    :func:`masks_for` planes, which always include FILL_MASK and
+    CLOUDLESS_MASK."""
+    px = codecs.decode(bytes(buf))
+    names = band_names_for(collection)[: px.shape[0]]
+    m = masks_for(collection, dict(zip(names, px)), time_start=time_start,
+                  **mask_opts)
+    return px, names, m
+
+
+def mask_stats_row(image_id, buf, coll, ts, **mask_opts) -> tuple:
+    """One :func:`mask_stats` output row (``_STATS_SCHEMA`` order): counts
+    over the bestEffort :func:`stats_stride` grid of the image."""
+    _, _, m = image_masks(buf, coll, ts, **mask_opts)
+    step = stats_stride(m["FILL_MASK"].size)
+    sub = (slice(None, None, step), slice(None, None, step))
+
+    def count(plane):
+        return int(m[plane][sub].sum()) if plane in m else 0
+
+    return (
+        image_id, int(m["FILL_MASK"][sub].size), count("FILL_MASK"),
+        count("CLOUD_MASK"), count("SHADOW_MASK"), count("CLOUDLESS_MASK"),
+    )
+
+
 def mask_stats(images: DataFrame, **mask_opts) -> DataFrame:
-    """Per-image mask pixel counts — one mapInPandas pass, zero shuffle.
+    """Per-image mask pixel counts — one Arrow pass, zero shuffle.
 
     Input needs: image_id, bytes, collection.  Output: exact counts of
     total/fill/cloud/shadow/cloudless pixels (ints — order-insensitive and
     float-free for oracle hashing).
     """
-    def _batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for image_id, buf, coll, ts in zip(
-            pdf["image_id"], pdf["bytes"], pdf["collection"], pdf["time_start"]
-        ):
-            bands = decode_bands(buf, band_names_for(coll))
-            m = masks_for(coll, bands, time_start=ts, **mask_opts)
-            step = stats_stride(m["FILL_MASK"].size)
-            sub = (slice(None, None, step), slice(None, None, step))
-            rows.append({
-                "image_id": image_id,
-                "total_px": int(m["FILL_MASK"][sub].size),
-                "fill_px": int(m["FILL_MASK"][sub].sum()),
-                "cloud_px": int(m["CLOUD_MASK"][sub].sum()) if "CLOUD_MASK" in m else 0,
-                "shadow_px": int(m["SHADOW_MASK"][sub].sum()) if "SHADOW_MASK" in m else 0,
-                "cloudless_px": int(m["CLOUDLESS_MASK"][sub].sum()),
-            })
-        return pd.DataFrame(rows, columns=[
-            "image_id", "total_px", "fill_px", "cloud_px", "shadow_px", "cloudless_px",
-        ])
+    def _row(image_id, buf, coll, ts):
+        yield mask_stats_row(image_id, buf, coll, ts, **mask_opts)
 
-    src = _with_time_start(images).select(
-        "image_id", "bytes", "collection", "time_start"
-    )
-    return src.mapInPandas(lambda it: (_batch(p) for p in it), schema=_STATS_SCHEMA)
+    return map_rows(_with_time_start(images), _IMAGE_COLS, _STATS_SCHEMA, _row)
 
 
 def with_portions(stats: DataFrame) -> DataFrame:
@@ -576,6 +585,14 @@ def with_portions(stats: DataFrame) -> DataFrame:
         "cloudless_portion",
         F.when(F.col("fill_px") > 0,
                F.lit(100.0) * F.col("cloudless_px") / F.col("fill_px")),
+    )
+
+
+def _matched_row(image_id, m) -> tuple:
+    """(image_id, total, fill, cloudless, matched) of an s2_masks result."""
+    return (
+        image_id, int(m["FILL_MASK"].size), int(m["FILL_MASK"].sum()),
+        int(m["CLOUDLESS_MASK"].sum()), bool(m["VALID"]),
     )
 
 
@@ -609,37 +626,27 @@ def s2_score_mask_stats(
     if cs_band not in band_idx:
         raise ValueError(f"cs_band must be cs|cs_cdf (got {cs_band!r})")
 
-    def _batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for image_id, buf, sbuf in zip(pdf["image_id"], pdf["bytes"], pdf["score_bytes"]):
-            px = codecs.decode(bytes(buf))
-            bands = {n: px[i] for i, n in enumerate(BAND_NAMES[: px.shape[0]])}
-            score = None
-            if sbuf is not None:
-                sc = codecs.decode(bytes(sbuf))
-                bi = band_idx[cs_band]
-                if bi >= sc.shape[0]:
-                    raise ValueError(
-                        f"score raster has {sc.shape[0]} band(s); "
-                        f"{cs_band!r} needs band {bi}"
-                    )
-                score = sc[bi]
-            m = s2_masks(bands, score=score, score_thresh=score_thresh)
-            rows.append({
-                "image_id": image_id,
-                "total_px": int(m["FILL_MASK"].size),
-                "fill_px": int(m["FILL_MASK"].sum()),
-                "cloudless_px": int(m["CLOUDLESS_MASK"].sum()),
-                "score_matched": bool(m["VALID"]),
-            })
-        return pd.DataFrame(rows, columns=[
-            "image_id", "total_px", "fill_px", "cloudless_px", "score_matched",
-        ])
+    def _row(image_id, buf, sbuf):
+        px = codecs.decode(bytes(buf))
+        score = None
+        if sbuf is not None:
+            sc = codecs.decode(bytes(sbuf))
+            bi = band_idx[cs_band]
+            if bi >= sc.shape[0]:
+                raise ValueError(
+                    f"score raster has {sc.shape[0]} band(s); "
+                    f"{cs_band!r} needs band {bi}"
+                )
+            score = sc[bi]
+        m = s2_masks(dict(zip(BAND_NAMES, px)), score=score,
+                     score_thresh=score_thresh)
+        yield _matched_row(image_id, m)
 
-    return joined.mapInPandas(
-        lambda it: (_batch(p) for p in it),
-        schema="image_id string, total_px long, fill_px long, "
-               "cloudless_px long, score_matched boolean",
+    return map_rows(
+        joined, ["image_id", "bytes", "score_bytes"],
+        "image_id string, total_px long, fill_px long, "
+        "cloudless_px long, score_matched boolean",
+        _row,
     )
 
 
@@ -660,31 +667,20 @@ def s2_prob_mask_stats(
         "image_id", "left_outer",
     )
 
-    def _batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for image_id, buf, pbuf in zip(pdf["image_id"], pdf["bytes"], pdf["prob_bytes"]):
-            px = codecs.decode(bytes(buf))
-            bands = {n: px[i] for i, n in enumerate(BAND_NAMES[: px.shape[0]])}
-            prob = codecs.decode(bytes(pbuf))[0] if pbuf is not None else None
-            m = s2_masks(
-                bands, prob=prob, mask_method="cloud-prob",
-                prob_thresh=prob_thresh,
-            )
-            rows.append({
-                "image_id": image_id,
-                "total_px": int(m["FILL_MASK"].size),
-                "fill_px": int(m["FILL_MASK"].sum()),
-                "cloudless_px": int(m["CLOUDLESS_MASK"].sum()),
-                "prob_matched": bool(m["VALID"]),
-            })
-        return pd.DataFrame(rows, columns=[
-            "image_id", "total_px", "fill_px", "cloudless_px", "prob_matched",
-        ])
+    def _row(image_id, buf, pbuf):
+        px = codecs.decode(bytes(buf))
+        prob = codecs.decode(bytes(pbuf))[0] if pbuf is not None else None
+        m = s2_masks(
+            dict(zip(BAND_NAMES, px)), prob=prob, mask_method="cloud-prob",
+            prob_thresh=prob_thresh,
+        )
+        yield _matched_row(image_id, m)
 
-    return joined.mapInPandas(
-        lambda it: (_batch(p) for p in it),
-        schema="image_id string, total_px long, fill_px long, "
-               "cloudless_px long, prob_matched boolean",
+    return map_rows(
+        joined, ["image_id", "bytes", "prob_bytes"],
+        "image_id string, total_px long, fill_px long, "
+        "cloudless_px long, prob_matched boolean",
+        _row,
     )
 
 
@@ -703,66 +699,49 @@ def cdi_mask_stats(
     evidence to remove cloud pixels).  ``cdi`` needs (image_id, cdi_bytes)
     decoding to a 1-band float raster.  Output: exact pixel counts.
     """
-    joined = _with_time_start(images).select(
-        "image_id", "bytes", "collection", "time_start"
-    ).join(
+    joined = _with_time_start(images).select(*_IMAGE_COLS).join(
         F.broadcast(cdi.select("image_id", "cdi_bytes")), "image_id", "left_outer"
     )
 
-    def _batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for image_id, buf, coll, ts, cbuf in zip(
-            pdf["image_id"], pdf["bytes"], pdf["collection"],
-            pdf["time_start"], pdf["cdi_bytes"],
-        ):
-            px = codecs.decode(bytes(buf))
-            names = band_names_for(coll)
-            bands = {n: px[i] for i, n in enumerate(names[: px.shape[0]])}
-            fill = fill_mask(px[:1])
-            # base cloud mask per family; CDI refines qa/prob clouds
-            # (mask.py:451-454: aux['cloud'].And(cdi_cloud_mask))
-            qa_invalid = False
-            if _sensor_for(coll) == "s2":
-                qa = bands["QA60"].astype(np.int64)
-                cloud = ((qa & _QA60_CLOUD) != 0) | ((qa & _QA60_CIRRUS) != 0)
-                if not qa60_valid(ts):
-                    # QA60 unpopulated window: the reference's masked QA
-                    # band stays masked through the CDI And-refinement and
-                    # into CLOUDLESS (see s2_masks) — zero cloud AND zero
-                    # cloudless, not "all clear"
-                    cloud = np.zeros_like(cloud)
-                    qa_invalid = True
-            else:
-                # full Landsat cloud bits, identical to landsat_masks'
-                # default (mid-confidence | dilated | cirrus) — a lone
-                # bit-9 test silently under-counted vs mask_stats
-                qa = bands["QA_PIXEL"].astype(np.int64)
-                cloud = (
-                    ((qa & _QA_CLOUD_MID) == _QA_CLOUD_MID)
-                    | ((qa & _QA_CLOUD_DILATED) == _QA_CLOUD_DILATED)
-                    | ((qa & _QA_CIRRUS) == _QA_CIRRUS)
-                )
-            matched = cbuf is not None
-            if matched:
-                cdi_arr = codecs.decode(bytes(cbuf))[0]
-                cloud = cloud & (cdi_arr < cdi_thresh)
-            cloudless = (
-                np.zeros_like(fill) if qa_invalid else ~cloud & fill
+    def _row(image_id, buf, coll, ts, cbuf):
+        px = codecs.decode(bytes(buf))
+        bands = dict(zip(band_names_for(coll), px))
+        fill = fill_mask(px[:1])
+        # base cloud mask per family; CDI refines qa/prob clouds
+        # (mask.py:451-454: aux['cloud'].And(cdi_cloud_mask))
+        qa_invalid = False
+        if _sensor_for(coll) == "s2":
+            qa = bands["QA60"].astype(np.int64)
+            cloud = ((qa & _QA60_CLOUD) != 0) | ((qa & _QA60_CIRRUS) != 0)
+            if not qa60_valid(ts):
+                # QA60 unpopulated window: the reference's masked QA
+                # band stays masked through the CDI And-refinement and
+                # into CLOUDLESS (see s2_masks) — zero cloud AND zero
+                # cloudless, not "all clear"
+                cloud = np.zeros_like(cloud)
+                qa_invalid = True
+        else:
+            # full Landsat cloud bits, identical to landsat_masks'
+            # default (mid-confidence | dilated | cirrus) — a lone
+            # bit-9 test silently under-counted vs mask_stats
+            qa = bands["QA_PIXEL"].astype(np.int64)
+            cloud = (
+                ((qa & _QA_CLOUD_MID) == _QA_CLOUD_MID)
+                | ((qa & _QA_CLOUD_DILATED) == _QA_CLOUD_DILATED)
+                | ((qa & _QA_CIRRUS) == _QA_CIRRUS)
             )
-            rows.append({
-                "image_id": image_id,
-                "cloud_px": int(cloud.sum()),
-                "cloudless_px": int(cloudless.sum()),
-                "cdi_matched": matched,
-            })
-        return pd.DataFrame(rows, columns=[
-            "image_id", "cloud_px", "cloudless_px", "cdi_matched",
-        ])
+        matched = cbuf is not None
+        if matched:
+            cdi_arr = codecs.decode(bytes(cbuf))[0]
+            cloud = cloud & (cdi_arr < cdi_thresh)
+        cloudless = np.zeros_like(fill) if qa_invalid else ~cloud & fill
+        yield image_id, int(cloud.sum()), int(cloudless.sum()), matched
 
-    return joined.mapInPandas(
-        lambda it: (_batch(p) for p in it),
-        schema="image_id string, cloud_px long, cloudless_px long, "
-               "cdi_matched boolean",
+    return map_rows(
+        joined, [*_IMAGE_COLS, "cdi_bytes"],
+        "image_id string, cloud_px long, cloudless_px long, "
+        "cdi_matched boolean",
+        _row,
     )
 
 
@@ -781,32 +760,18 @@ def cloud_dist_stats(
     reference's compute-at-coarse-projection trick (cloud dist at the 60 m
     B1 projection, mask.py:510-516) that bounds EDT cost on large tiles.
     """
-    def _batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for image_id, buf, coll, ts in zip(
-            pdf["image_id"], pdf["bytes"], pdf["collection"], pdf["time_start"]
-        ):
-            bands = decode_bands(buf, band_names_for(coll))
-            m = masks_for(coll, bands, time_start=ts, **mask_opts)
-            mk = m["CLOUDLESS_MASK"]
-            fk = m.get("FILL_MASK", np.ones_like(mk))
-            if decimate > 1:
-                mk = mk[::decimate, ::decimate]
-                fk = fk[::decimate, ::decimate]
-            d = cloud_dist(mk, scale * decimate, max_cloud_dist, fill=fk)
-            # CLOUD_DIST is masked at invalid pixels (mask.py:117): the sum
-            # covers fill pixels only
-            rows.append({
-                "image_id": image_id,
-                "dist_sum": int(d[fk].sum(dtype=np.int64)),
-            })
-        return pd.DataFrame(rows, columns=["image_id", "dist_sum"])
+    def _row(image_id, buf, coll, ts):
+        _, _, m = image_masks(buf, coll, ts, **mask_opts)
+        mk = m["CLOUDLESS_MASK"][::decimate, ::decimate]
+        fk = m["FILL_MASK"][::decimate, ::decimate]
+        d = cloud_dist(mk, scale * decimate, max_cloud_dist, fill=fk)
+        # CLOUD_DIST is masked at invalid pixels (mask.py:117): the sum
+        # covers fill pixels only
+        yield image_id, int(d[fk].sum(dtype=np.int64))
 
-    src = _with_time_start(images).select(
-        "image_id", "bytes", "collection", "time_start"
-    )
-    return src.mapInPandas(
-        lambda it: (_batch(p) for p in it), schema="image_id string, dist_sum long"
+    return map_rows(
+        _with_time_start(images), _IMAGE_COLS,
+        "image_id string, dist_sum long", _row,
     )
 
 
@@ -819,28 +784,15 @@ def mask_clouds(images: DataFrame, **mask_opts) -> DataFrame:
     (image_id, bytes, fmt) — pixels are re-encoded RAW (masking a lossy
     stream exactly requires decoding it), so the row's ``fmt`` is rewritten
     to 'raw'; callers joining back must take THIS fmt, not the source's."""
-    def _batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for image_id, buf, coll, ts in zip(
-            pdf["image_id"], pdf["bytes"], pdf["collection"], pdf["time_start"]
-        ):
+    def _row(image_id, buf, coll, ts):
+        if _sensor_for(coll) == "none":
             px = codecs.decode(bytes(buf))
-            names = band_names_for(coll)
-            bands = {n: px[i] for i, n in enumerate(names[: px.shape[0]])}
-            if _sensor_for(coll) != "none":
-                m = masks_for(coll, bands, time_start=ts, **mask_opts)
-                px[0][~m["CLOUDLESS_MASK"]] = codecs.NODATA_VALS[px.dtype.name]
-            out.append({
-                "image_id": image_id,
-                "bytes": codecs.encode(px, "raw"),
-                "fmt": "raw",
-            })
-        return pd.DataFrame(out, columns=["image_id", "bytes", "fmt"])
+        else:
+            px, _, m = image_masks(buf, coll, ts, **mask_opts)
+            px[0][~m["CLOUDLESS_MASK"]] = codecs.NODATA_VALS[px.dtype.name]
+        yield image_id, codecs.encode(px, "raw"), "raw"
 
-    src = _with_time_start(images).select(
-        "image_id", "bytes", "collection", "time_start"
-    )
-    return src.mapInPandas(lambda it: (_batch(p) for p in it), schema=_MASKED_SCHEMA)
+    return map_rows(_with_time_start(images), _IMAGE_COLS, _MASKED_SCHEMA, _row)
 
 
 # ---------------------------------------------------------------------------
@@ -924,45 +876,31 @@ def landsat_param_stats(
     """Per-flag Landsat mask portions over the strip-mock world — the six
     parameter configurations the reference asserts (test_mask.py:482-564:
     ref / mask_shadows=False / mask_cirrus=False / +saturation /
-    +nonphysical / +aerosols), one mapInPandas pass, counts as exact ints.
+    +nonphysical / +aerosols), one Arrow pass, counts as exact ints.
 
     Every config routes through :func:`masks_for` so the per-collection
     dispatch (landsat-sr-aerosol family) is exercised end to end, not just
     the raw kernel."""
-    def _batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for image_id in pdf["image_id"]:
-            bands = landsat_strip_bands(int(image_id))
-            ref = masks_for(collection, bands)
-            nsh = masks_for(collection, bands, mask_shadows=False)
-            ncir = masks_for(collection, bands, mask_cirrus=False)
-            sat = masks_for(collection, bands, mask_saturation=True)
-            np_ = masks_for(collection, bands, mask_saturation=True,
-                            mask_nonphysical=True)
-            aero = masks_for(collection, bands, mask_saturation=True,
-                             mask_nonphysical=True, mask_aerosols=True)
-            rows.append({
-                "image_id": int(image_id),
-                "fill_px": int(ref["FILL_MASK"].sum()),
-                "cloud_px": int(ref["CLOUD_MASK"].sum()),
-                "shadow_px": int(ref["SHADOW_MASK"].sum()),
-                "cloudless_px": int(ref["CLOUDLESS_MASK"].sum()),
-                "cloudless_nsh_px": int(nsh["CLOUDLESS_MASK"].sum()),
-                "cloud_ncir_px": int(ncir["CLOUD_MASK"].sum()),
-                "sat_px": int(sat["SATURATION_MASK"].sum()),
-                "cloudless_sat_px": int(sat["CLOUDLESS_MASK"].sum()),
-                "nonphys_px": int(np_["NONPHYSICAL_MASK"].sum()),
-                "cloudless_np_px": int(np_["CLOUDLESS_MASK"].sum()),
-                "aerosol_px": int(aero["AEROSOL_MASK"].sum()),
-                "cloudless_aero_px": int(aero["CLOUDLESS_MASK"].sum()),
-            })
-        return pd.DataFrame(rows, columns=[
-            f.split(" ")[0] for f in _PARAM_STATS_SCHEMA.split(", ")
-        ])
+    def _row(image_id):
+        bands = landsat_strip_bands(int(image_id))
+        ref = masks_for(collection, bands)
+        nsh = masks_for(collection, bands, mask_shadows=False)
+        ncir = masks_for(collection, bands, mask_cirrus=False)
+        sat = masks_for(collection, bands, mask_saturation=True)
+        np_ = masks_for(collection, bands, mask_saturation=True,
+                        mask_nonphysical=True)
+        aero = masks_for(collection, bands, mask_saturation=True,
+                         mask_nonphysical=True, mask_aerosols=True)
+        yield (int(image_id), *(int(m[plane].sum()) for m, plane in (
+            (ref, "FILL_MASK"), (ref, "CLOUD_MASK"), (ref, "SHADOW_MASK"),
+            (ref, "CLOUDLESS_MASK"), (nsh, "CLOUDLESS_MASK"),
+            (ncir, "CLOUD_MASK"), (sat, "SATURATION_MASK"),
+            (sat, "CLOUDLESS_MASK"), (np_, "NONPHYSICAL_MASK"),
+            (np_, "CLOUDLESS_MASK"), (aero, "AEROSOL_MASK"),
+            (aero, "CLOUDLESS_MASK"),
+        )))
 
-    return ids.select("image_id").mapInPandas(
-        lambda it: (_batch(p) for p in it), schema=_PARAM_STATS_SCHEMA
-    )
+    return map_rows(ids, ["image_id"], _PARAM_STATS_SCHEMA, _row)
 
 
 def s2_shadow_strip_bands(image_id: int, h: int = 20) -> dict[str, np.ndarray]:
@@ -1019,32 +957,20 @@ def s2_shadow_param_stats(
 
     Counts are exact ints; the qa pipeline's open(20 m)+dilate(50 m)
     morphology (mask.py:466-472) applies to every CLOUDLESS figure."""
-    def _batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        common = dict(time_start=None, solar_azimuth=90.0)
-        for image_id in pdf["image_id"]:
-            bands = s2_shadow_strip_bands(int(image_id))
-            ref = masks_for(collection, bands, **common)
-            d10 = masks_for(collection, bands, dark=0.10, **common)
-            sd30 = masks_for(collection, bands, shadow_dist=30.0, **common)
-            toa = masks_for(collection, bands, s2_toa=True, **common)
-            nsh = masks_for(collection, bands, mask_shadows=False, **common)
-            rows.append({
-                "image_id": int(image_id),
-                "fill_px": int(ref["FILL_MASK"].sum()),
-                "cloud_px": int(ref["CLOUD_MASK"].sum()),
-                "shadow_px": int(ref["SHADOW_MASK"].sum()),
-                "cloudless_px": int(ref["CLOUDLESS_MASK"].sum()),
-                "cloudless_dark10_px": int(d10["CLOUDLESS_MASK"].sum()),
-                "shadow_sd30_px": int(sd30["SHADOW_MASK"].sum()),
-                "cloudless_sd30_px": int(sd30["CLOUDLESS_MASK"].sum()),
-                "shadow_toa_px": int(toa["SHADOW_MASK"].sum()),
-                "cloudless_nsh_px": int(nsh["CLOUDLESS_MASK"].sum()),
-            })
-        return pd.DataFrame(rows, columns=[
-            f.split(" ")[0] for f in _SHADOW_STATS_SCHEMA.split(", ")
-        ])
+    common = dict(time_start=None, solar_azimuth=90.0)
 
-    return ids.select("image_id").mapInPandas(
-        lambda it: (_batch(p) for p in it), schema=_SHADOW_STATS_SCHEMA
-    )
+    def _row(image_id):
+        bands = s2_shadow_strip_bands(int(image_id))
+        ref = masks_for(collection, bands, **common)
+        d10 = masks_for(collection, bands, dark=0.10, **common)
+        sd30 = masks_for(collection, bands, shadow_dist=30.0, **common)
+        toa = masks_for(collection, bands, s2_toa=True, **common)
+        nsh = masks_for(collection, bands, mask_shadows=False, **common)
+        yield (int(image_id), *(int(m[plane].sum()) for m, plane in (
+            (ref, "FILL_MASK"), (ref, "CLOUD_MASK"), (ref, "SHADOW_MASK"),
+            (ref, "CLOUDLESS_MASK"), (d10, "CLOUDLESS_MASK"),
+            (sd30, "SHADOW_MASK"), (sd30, "CLOUDLESS_MASK"),
+            (toa, "SHADOW_MASK"), (nsh, "CLOUDLESS_MASK"),
+        )))
+
+    return map_rows(ids, ["image_id"], _SHADOW_STATS_SCHEMA, _row)

@@ -24,13 +24,14 @@ import hashlib
 import struct
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from geedim_spark import codecs
+from geedim_spark.kernels import map_rows
 from geedim_spark.operators.resample import resample
 
 _REAL_FMTS = {"raw", "dct8"}
+_MEDIA_COLS = ["image_id", "bytes", "fmt", "w", "h"]
 _STUB_FMTS = {"jpeg", "png", "wav", "mp3", "mp4"}
 
 
@@ -57,25 +58,20 @@ def decode_pixels(buf: bytes, fmt: str, w: int, h: int) -> np.ndarray:
 def image_features(images: DataFrame) -> DataFrame:
     """Per-image feature extraction: band means/stds + perceptual hash.
     Real compute over decoded pixels; one Arrow pass, no shuffle."""
-    def _batch(pdf: pd.DataFrame):
-        rows = []
-        for image_id, buf, fmt, w, h in zip(
-            pdf["image_id"], pdf["bytes"], pdf["fmt"], pdf["w"], pdf["h"]
-        ):
-            px = decode_pixels(bytes(buf), fmt, int(w), int(h)).astype(np.float64)
-            rows.append({
-                "image_id": image_id,
-                "band_means": [float(m) for m in px.mean(axis=(1, 2))],
-                "band_stds": [float(s) for s in px.std(axis=(1, 2))],
-                "phash": codecs.phash64(px),
-            })
-        return pd.DataFrame(rows, columns=["image_id", "band_means", "band_stds", "phash"])
+    def _row(image_id, buf, fmt, w, h):
+        px = decode_pixels(bytes(buf), fmt, int(w), int(h)).astype(np.float64)
+        yield (
+            image_id,
+            [float(m) for m in px.mean(axis=(1, 2))],
+            [float(s) for s in px.std(axis=(1, 2))],
+            codecs.phash64(px),
+        )
 
-    src = images.select("image_id", "bytes", "fmt", "w", "h")
-    return src.mapInPandas(
-        lambda it: (_batch(p) for p in it),
-        schema="image_id string, band_means array<double>, "
-               "band_stds array<double>, phash long",
+    return map_rows(
+        images, _MEDIA_COLS,
+        "image_id string, band_means array<double>, "
+        "band_stds array<double>, phash long",
+        _row,
     )
 
 
@@ -98,57 +94,40 @@ def frame_sample(videos: DataFrame, every_n: int = 2) -> DataFrame:
     """Every-Nth-frame extraction: one input row per video, one output row
     per sampled frame (kernel-side explode — the video blob is decoded once,
     never duplicated through a join)."""
-    def _batch(pdf: pd.DataFrame):
-        rows = []
-        for video_id, buf in zip(pdf["video_id"], pdf["bytes"]):
-            buf = bytes(buf)
-            magic, n, h, w = struct.unpack_from(_VFMT, buf, 0)
-            if magic != _VMAGIC:
-                raise NotImplementedError(
-                    "real video containers need ffmpeg; only the GDV1 "
-                    "synthetic layout is decodable here"
-                )
-            frames = np.frombuffer(
-                buf, dtype=np.uint8, offset=_VHDR_SIZE, count=n * h * w
-            ).reshape(n, h, w)
-            for fi in range(0, n, every_n):
-                rows.append({
-                    "video_id": video_id, "frame_idx": fi,
-                    "frame_bytes": codecs.encode_raw(frames[fi][None, :, :]),
-                })
-        return pd.DataFrame(rows, columns=["video_id", "frame_idx", "frame_bytes"])
+    def _row(video_id, buf):
+        buf = bytes(buf)
+        magic, n, h, w = struct.unpack_from(_VFMT, buf, 0)
+        if magic != _VMAGIC:
+            raise NotImplementedError(
+                "real video containers need ffmpeg; only the GDV1 "
+                "synthetic layout is decodable here"
+            )
+        frames = np.frombuffer(
+            buf, dtype=np.uint8, offset=_VHDR_SIZE, count=n * h * w
+        ).reshape(n, h, w)
+        for fi in range(0, n, every_n):
+            yield video_id, fi, codecs.encode_raw(frames[fi][None, :, :])
 
-    return videos.select("video_id", "bytes").mapInPandas(
-        lambda it: (_batch(p) for p in it),
-        schema="video_id string, frame_idx int, frame_bytes binary",
+    return map_rows(
+        videos, ["video_id", "bytes"],
+        "video_id string, frame_idx int, frame_bytes binary", _row,
     )
 
 
 def resize_media(images: DataFrame, out_h: int, out_w: int,
                  method: str = "bilinear") -> DataFrame:
     """Decode (real or stub) -> resample -> re-encode raw float64."""
-    def _batch(pdf: pd.DataFrame):
-        out = []
-        for image_id, buf, fmt, w, h in zip(
-            pdf["image_id"], pdf["bytes"], pdf["fmt"], pdf["w"], pdf["h"]
-        ):
-            px = decode_pixels(bytes(buf), fmt, int(w), int(h))
-            res = resample(px, out_h, out_w, method)
-            out.append({
-                "image_id": image_id,
-                "bytes": codecs.encode_raw(np.ascontiguousarray(res)),
-                # re-encoded raw: fmt rewritten like masks.mask_clouds, so
-                # the result feeds straight back into image_features /
-                # resize_media
-                "fmt": "raw",
-                "w": out_w, "h": out_h,
-            })
-        return pd.DataFrame(out, columns=["image_id", "bytes", "fmt", "w", "h"])
+    def _row(image_id, buf, fmt, w, h):
+        px = decode_pixels(bytes(buf), fmt, int(w), int(h))
+        res = resample(px, out_h, out_w, method)
+        # re-encoded raw: fmt rewritten like masks.mask_clouds, so the
+        # result feeds straight back into image_features / resize_media
+        yield (image_id, codecs.encode_raw(np.ascontiguousarray(res)), "raw",
+               out_w, out_h)
 
-    src = images.select("image_id", "bytes", "fmt", "w", "h")
-    return src.mapInPandas(
-        lambda it: (_batch(p) for p in it),
-        schema="image_id string, bytes binary, fmt string, w int, h int",
+    return map_rows(
+        images, _MEDIA_COLS,
+        "image_id string, bytes binary, fmt string, w int, h int", _row,
     )
 
 

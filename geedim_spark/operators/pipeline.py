@@ -18,12 +18,12 @@ from __future__ import annotations
 import re
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from geedim_spark import codecs
+from geedim_spark.kernels import map_rows
 from geedim_spark.operators import masks
-from geedim_spark.operators.tiler import tile_shape
+from geedim_spark.operators.tiler import tile_shape, tile_windows
 
 _SCHEMA = (
     "image_id string, caption string, band_start int, band_stop int, "
@@ -85,122 +85,94 @@ def mask_and_tile(
     cloudless_px ARE per-tile).
     """
     mask_opts.setdefault("scale", scale)
-    def _batch(pdf: pd.DataFrame):
-        # columnar accumulators: building one dict per tile row cost more
-        # than a third of the non-kernel batch time at 16 tiles/image
-        cols_acc: dict[str, list] = {
-            "image_id": [], "caption": [], "band_start": [], "band_stop": [],
-            "row_start": [], "row_stop": [], "col_start": [], "col_stop": [],
-            "fill_px": [], "cloudless_px": [], "dist_sum": [],
-            "tile_bytes": [],
-        }
-        for image_id, caption, buf, coll, ts in zip(
-            pdf["image_id"], pdf["caption"], pdf["bytes"], pdf["collection"],
-            pdf["time_start"],
+
+    def _row(image_id, caption, buf, coll, ts):
+        px, names, m = masks.image_masks(buf, coll, ts, **mask_opts)
+        cl = m["CLOUDLESS_MASK"]
+        # S2 kernels already ran the reference's open+dilate internally
+        # (mask.py:466-472) — applying the pipeline's focal emulation
+        # again would double-dilate; it exists for the landsat/mock
+        # families only
+        is_s2 = masks._sensor_for(coll) == "s2"
+        if (focal_open_px or focal_dilate_px) and not is_s2:
+            # open/dilate the combined CLOUD|SHADOW mask only
+            # (mask.py:466-472) — ~CLOUDLESS alone would include the
+            # nodata region, whose boundary would dilate into valid
+            # cloud-free pixels and under-count cloudless_px
+            cloudy = ~cl & m["FILL_MASK"]
+            # the morphology is ~half the kernel cost and a no-op on an
+            # empty mask (open/dilate of the empty set is empty):
+            # cloud-free images — most of a real archive — skip it
+            if cloudy.any():
+                cloudy = masks.focal_min(cloudy, focal_open_px)
+                cloudy = masks.focal_max(
+                    cloudy, max(focal_open_px, focal_dilate_px)
+                )
+                cl = ~cloudy & m["FILL_MASK"]
+        # coarse-projection cloud distance (mask.py:510-516 analog);
+        # sources = cloud & fill, sum over fill only (mask.py:102-117)
+        dk = cl[::dist_decimate, ::dist_decimate]
+        fk = m["FILL_MASK"][::dist_decimate, ::dist_decimate]
+        d = masks.cloud_dist(dk, scale * dist_decimate, max_cloud_dist,
+                             fill=fk)
+        dist_sum = int(d[fk].sum(dtype=np.int64))
+        if scale_offset:
+            from geedim_spark.sources.band_props import _CATALOG
+            factors = [
+                _CATALOG.get(coll, {}).get(n, (1.0, 0.0))[:2] for n in names
+            ]
+            if any(sc != 1.0 or off != 0.0 for sc, off in factors):
+                px = px.astype(np.float64)
+                for i, (sc, off) in enumerate(factors):
+                    if sc != 1.0 or off != 0.0:
+                        px[i] = px[i] * sc + off
+        if export_dtype:
+            # AFTER the masks were computed from the raw bands
+            from geedim_spark.functions.dtypes import cast_pixels
+            px = cast_pixels(px, export_dtype)
+        if apply_cloud_mask:
+            if not export_dtype:
+                px = px.copy()
+            px[0][~cl] = codecs.NODATA_VALS[px.dtype.name]
+
+        if band_regex is not None:
+            keep = [i for i, n in enumerate(names)
+                    if re.fullmatch(band_regex, n)]
+            if not keep:
+                raise ValueError(
+                    f"no bands of {image_id} ({list(names)}) match "
+                    f"band_regex {band_regex!r}"
+                )
+            px = np.ascontiguousarray(px[keep])
+
+        nbands, h, w = px.shape
+        tshape = tile_shape(
+            nbands, h, w, px.dtype.name, max_tile_size, max_tile_dim, max_tile_bands
+        )
+        # per-tile mask sums for the WHOLE grid in two reduceat passes
+        # (row then column blocks) instead of 2 slice-sums per tile —
+        # ~5x cheaper on the per-image stats share of the kernel
+        r_idx = np.arange(0, h, tshape[1])
+        c_idx = np.arange(0, w, tshape[2])
+        fsum = np.add.reduceat(
+            np.add.reduceat(m["FILL_MASK"].astype(np.int64), r_idx, axis=0),
+            c_idx, axis=1,
+        )
+        clsum = np.add.reduceat(
+            np.add.reduceat(cl.astype(np.int64), r_idx, axis=0),
+            c_idx, axis=1,
+        )
+        for (_, ri, ci), ((b0, b1), (r0, r1), (c0, c1)) in tile_windows(
+            px.shape, tshape
         ):
-            px = codecs.decode(bytes(buf))
-            names = masks.band_names_for(coll)
-            bands = {n: px[i] for i, n in enumerate(names[: px.shape[0]])}
-            m = masks.masks_for(coll, bands, time_start=ts, **mask_opts)
-            cl = m["CLOUDLESS_MASK"]
-            # S2 kernels already ran the reference's open+dilate internally
-            # (mask.py:466-472) — applying the pipeline's focal emulation
-            # again would double-dilate; it exists for the landsat/mock
-            # families only
-            is_s2 = masks._sensor_for(coll) == "s2"
-            if (focal_open_px or focal_dilate_px) and not is_s2:
-                # open/dilate the combined CLOUD|SHADOW mask only
-                # (mask.py:466-472) — ~CLOUDLESS alone would include the
-                # nodata region, whose boundary would dilate into valid
-                # cloud-free pixels and under-count cloudless_px
-                cloudy = ~cl & m["FILL_MASK"]
-                # the morphology is ~half the kernel cost and a no-op on an
-                # empty mask (open/dilate of the empty set is empty):
-                # cloud-free images — most of a real archive — skip it
-                if cloudy.any():
-                    cloudy = masks.focal_min(cloudy, focal_open_px)
-                    cloudy = masks.focal_max(
-                        cloudy, max(focal_open_px, focal_dilate_px)
-                    )
-                    cl = ~cloudy & m["FILL_MASK"]
-            # coarse-projection cloud distance (mask.py:510-516 analog);
-            # sources = cloud & fill, sum over fill only (mask.py:102-117)
-            dk = cl[::dist_decimate, ::dist_decimate]
-            fk = m["FILL_MASK"][::dist_decimate, ::dist_decimate]
-            d = masks.cloud_dist(dk, scale * dist_decimate, max_cloud_dist,
-                                 fill=fk)
-            dist_sum = int(d[fk].sum(dtype=np.int64))
-            if scale_offset:
-                from geedim_spark.sources.band_props import _CATALOG
-                factors = [
-                    _CATALOG.get(coll, {}).get(n, (1.0, 0.0))[:2]
-                    for n in names[: px.shape[0]]
-                ]
-                if any(sc != 1.0 or off != 0.0 for sc, off in factors):
-                    px = px.astype(np.float64)
-                    for i, (sc, off) in enumerate(factors):
-                        if sc != 1.0 or off != 0.0:
-                            px[i] = px[i] * sc + off
-            if export_dtype:
-                # AFTER the masks were computed from the raw bands
-                from geedim_spark.functions.dtypes import cast_pixels
-                px = cast_pixels(px, export_dtype)
-            if apply_cloud_mask:
-                if not export_dtype:
-                    px = px.copy()
-                px[0][~cl] = codecs.NODATA_VALS[px.dtype.name]
-
-            if band_regex is not None:
-                full_names = list(names[: px.shape[0]])
-                keep = [i for i, n in enumerate(full_names)
-                        if re.fullmatch(band_regex, n)]
-                if not keep:
-                    raise ValueError(
-                        f"no bands of {image_id} ({full_names}) match "
-                        f"band_regex {band_regex!r}"
-                    )
-                px = np.ascontiguousarray(px[keep])
-
-            nbands, h, w = px.shape
-            tb, th, tw = tile_shape(
-                nbands, h, w, px.dtype.name, max_tile_size, max_tile_dim, max_tile_bands
+            yield (
+                image_id, caption, b0, b1, r0, r1, c0, c1,
+                int(fsum[ri, ci]), int(clsum[ri, ci]), dist_sum,
+                codecs.encode_raw(px[b0:b1, r0:r1, c0:c1]),
             )
-            # per-tile mask sums for the WHOLE grid in two reduceat passes
-            # (row then column blocks) instead of 2 slice-sums per tile —
-            # ~5x cheaper on the per-image stats share of the kernel
-            r_idx = np.arange(0, h, th)
-            c_idx = np.arange(0, w, tw)
-            fsum = np.add.reduceat(
-                np.add.reduceat(m["FILL_MASK"].astype(np.int64), r_idx, axis=0),
-                c_idx, axis=1,
-            )
-            clsum = np.add.reduceat(
-                np.add.reduceat(cl.astype(np.int64), r_idx, axis=0),
-                c_idx, axis=1,
-            )
-            n_img_tiles = 0
-            for b0 in range(0, nbands, tb):
-                for ri, r0 in enumerate(range(0, h, th)):
-                    for ci, c0 in enumerate(range(0, w, tw)):
-                        b1 = min(b0 + tb, nbands)
-                        r1, c1 = min(r0 + th, h), min(c0 + tw, w)
-                        cols_acc["band_start"].append(b0)
-                        cols_acc["band_stop"].append(b1)
-                        cols_acc["row_start"].append(r0)
-                        cols_acc["row_stop"].append(r1)
-                        cols_acc["col_start"].append(c0)
-                        cols_acc["col_stop"].append(c1)
-                        cols_acc["fill_px"].append(int(fsum[ri, ci]))
-                        cols_acc["cloudless_px"].append(int(clsum[ri, ci]))
-                        cols_acc["tile_bytes"].append(
-                            codecs.encode_raw(px[b0:b1, r0:r1, c0:c1]))
-                        n_img_tiles += 1
-            cols_acc["image_id"].extend([image_id] * n_img_tiles)
-            cols_acc["caption"].extend([caption] * n_img_tiles)
-            cols_acc["dist_sum"].extend([dist_sum] * n_img_tiles)
-        return pd.DataFrame(cols_acc)
 
-    src = masks._with_time_start(images).select(
-        "image_id", "caption", "bytes", "collection", "time_start"
+    return map_rows(
+        masks._with_time_start(images),
+        ["image_id", "caption", "bytes", "collection", "time_start"],
+        _SCHEMA, _row,
     )
-    return src.mapInPandas(lambda it: (_batch(p) for p in it), schema=_SCHEMA)

@@ -12,7 +12,7 @@ source pixel grid is MAINTAINED (the output transform keeps the source
 scale and sits at an integer pixel offset, and pixels are bit-identical
 — a pure crop/pad, no interpolation).
 
-Spark-first shape: one Arrow-batched ``mapInPandas`` pass — per-image
+Spark-first shape: one Arrow-batched ``kernels.map_rows`` pass — per-image
 work only, no shuffle, embarrassingly parallel at any scale (each task
 regrids its own images; for rasters too large for one task the tiled
 stencil path in ``operators/stencil.py`` is the scale escape hatch).
@@ -32,11 +32,11 @@ import math
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from geedim_spark import codecs
 from geedim_spark.functions.dtypes import cast_pixels
+from geedim_spark.kernels import map_rows
 
 _R = 6378137.0  # spherical Mercator radius (EPSG:3857 definition)
 
@@ -361,7 +361,7 @@ def reproject_images(
     dtype: str | None = None,
 ) -> DataFrame:
     """Reproject every image onto the export grid — the spatial half of
-    prepareForExport (image.py:741-862) as one ``mapInPandas`` pass.
+    prepareForExport (image.py:741-862) as one Arrow pass.
 
     ``like``: a template Row (or dict) with ``crs``/``transform``/
     ``w``/``h`` — overrides crs/crs_transform/shape (reference cli.py
@@ -413,45 +413,38 @@ def reproject_images(
         if extra not in names:
             fields.append(StructField(extra, replaced[extra]))
     out_schema = StructType(fields)
-    out_names = [f.name for f in out_schema.fields]
+    out_names = out_schema.fieldNames()
     has_bbox = all(c in names for c in ("x0", "y0", "x1", "y1"))
 
-    def _batch(pdf: pd.DataFrame):
-        out = {c: [] for c in out_names}
-        pass_through = [c for c in names
-                        if c not in ("bytes", "crs", "transform", "h", "w",
-                                     "fmt", "x0", "y0", "x1", "y1")]
-        for k in range(len(pdf)):
-            px = codecs.decode(bytes(pdf["bytes"].iloc[k]))
-            src_t = tuple(float(v) for v in pdf["transform"].iloc[k])
-            src_crs = pdf["crs"].iloc[k]
-            grid = resolve_grid(
-                src_crs, src_t, (px.shape[1], px.shape[2]), **kw
+    def _row(*values):
+        row = dict(zip(names, values))
+        px = codecs.decode(bytes(row["bytes"]))
+        src_t = tuple(float(v) for v in row["transform"])
+        src_crs = row["crs"]
+        grid = resolve_grid(
+            src_crs, src_t, (px.shape[1], px.shape[2]), **kw
+        )
+        out_dtype = dtype or px.dtype.name
+        nodata = codecs.NODATA_VALS[out_dtype]
+        arr = reproject_array(
+            px, src_crs, src_t, grid, resampling=resampling,
+            nodata=nodata,
+        )
+        arr = cast_pixels(arr, out_dtype)
+        t = grid.transform
+        row.update(
+            bytes=codecs.encode_raw(np.ascontiguousarray(arr)),
+            crs=grid.crs, transform=list(t),
+            h=grid.shape[0], w=grid.shape[1],
+        )
+        if "fmt" in row:
+            row["fmt"] = "raw"
+        if has_bbox:
+            row.update(
+                x0=t[2], y1=t[5],
+                x1=t[2] + grid.shape[1] * t[0],
+                y0=t[5] + grid.shape[0] * t[4],
             )
-            out_dtype = dtype or px.dtype.name
-            nodata = codecs.NODATA_VALS[out_dtype]
-            arr = reproject_array(
-                px, src_crs, src_t, grid, resampling=resampling,
-                nodata=nodata,
-            )
-            arr = cast_pixels(arr, out_dtype)
-            for c in pass_through:
-                out[c].append(pdf[c].iloc[k])
-            out["bytes"].append(codecs.encode_raw(np.ascontiguousarray(arr)))
-            out["crs"].append(grid.crs)
-            out["transform"].append(list(grid.transform))
-            out["h"].append(grid.shape[0])
-            out["w"].append(grid.shape[1])
-            if "fmt" in out_names:
-                out["fmt"].append("raw")
-            if has_bbox:
-                t = grid.transform
-                out["x0"].append(t[2])
-                out["y1"].append(t[5])
-                out["x1"].append(t[2] + grid.shape[1] * t[0])
-                out["y0"].append(t[5] + grid.shape[0] * t[4])
-        return pd.DataFrame(out, columns=out_names)
+        yield tuple(row[c] for c in out_names)
 
-    return images.mapInPandas(
-        lambda it: (_batch(p) for p in it), schema=out_schema
-    )
+    return map_rows(images, names, out_schema, _row)

@@ -16,6 +16,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from geedim_spark import codecs
+from geedim_spark.kernels import map_rows
 
 
 def _lin_weights(src_n: int, dst_n: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -145,25 +146,16 @@ def resample_images(
     """
     has_fixed = "fixed" in images.columns
 
-    def _batch(pdf: pd.DataFrame):
-        out = []
-        fixed_col = pdf["fixed"] if has_fixed else [True] * len(pdf)
-        for image_id, buf, fixed in zip(pdf["image_id"], pdf["bytes"], fixed_col):
-            buf = bytes(buf)
-            # pass through only on an EXPLICIT False (composites); a null
-            # flag resamples — None and NaN previously took different paths
-            if has_fixed and not pd.isna(fixed) and not fixed:
-                out.append({"image_id": image_id, "bytes": buf})
-                continue
-            px = codecs.decode(buf)
-            res = resample(px, out_h, out_w, method, nodata=nodata)
-            out.append({
-                "image_id": image_id,
-                "bytes": codecs.encode_raw(np.ascontiguousarray(res)),
-            })
-        return pd.DataFrame(out, columns=["image_id", "bytes"])
+    def _row(image_id, buf, fixed=True):
+        buf = bytes(buf)
+        # pass through only on an EXPLICIT False (composites); a null
+        # flag resamples — None and NaN previously took different paths
+        if not pd.isna(fixed) and not fixed:
+            yield image_id, buf
+            return
+        px = codecs.decode(buf)
+        res = resample(px, out_h, out_w, method, nodata=nodata)
+        yield image_id, codecs.encode_raw(np.ascontiguousarray(res))
 
     cols = ["image_id", "bytes"] + (["fixed"] if has_fixed else [])
-    return images.select(*cols).mapInPandas(
-        lambda it: (_batch(p) for p in it), schema="image_id string, bytes binary"
-    )
+    return map_rows(images, cols, "image_id string, bytes binary", _row)

@@ -36,7 +36,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geedim_spark import codecs
+from geedim_spark.kernels import map_rows
 from geedim_spark.operators import masks
+from geedim_spark.operators.tiler import tile_windows
 
 _TILE_SCHEMA = (
     "image_id string, tr int, tc int, n_tr int, n_tc int, tile_bytes binary"
@@ -62,40 +64,26 @@ def mask_tiles(
     if plane not in ("cloudless", "cloud", "code"):
         raise ValueError(f"unknown plane {plane!r}")
 
-    def _batch(pdf: pd.DataFrame):
-        rows = []
-        for image_id, buf, coll, ts in zip(
-            pdf["image_id"], pdf["bytes"], pdf["collection"], pdf["time_start"]
+    def _row(image_id, buf, coll, ts):
+        _, _, m = masks.image_masks(buf, coll, ts, **mask_opts)
+        cl, fill = m["CLOUDLESS_MASK"], m["FILL_MASK"]
+        if plane == "cloudless":
+            mk = cl.astype(np.uint8)
+        elif plane == "cloud":
+            mk = (fill & ~cl).astype(np.uint8)
+        else:
+            mk = fill.astype(np.uint8) + cl.astype(np.uint8)
+        h, w = mk.shape
+        n_tr, n_tc = math.ceil(h / tile_h), math.ceil(w / tile_w)
+        for (tr, tc), ((r0, r1), (c0, c1)) in tile_windows(
+            mk.shape, (tile_h, tile_w)
         ):
-            bands = masks.decode_bands(buf, masks.band_names_for(coll))
-            m = masks.masks_for(coll, bands, time_start=ts, **mask_opts)
-            cl = m["CLOUDLESS_MASK"]
-            fill = m.get("FILL_MASK", np.ones_like(cl))
-            if plane == "cloudless":
-                mk = cl.astype(np.uint8)
-            elif plane == "cloud":
-                mk = (fill & ~cl).astype(np.uint8)
-            else:
-                mk = fill.astype(np.uint8) + cl.astype(np.uint8)
-            h, w = mk.shape
-            n_tr, n_tc = math.ceil(h / tile_h), math.ceil(w / tile_w)
-            for tr in range(n_tr):
-                for tc in range(n_tc):
-                    blk = mk[tr * tile_h:(tr + 1) * tile_h,
-                             tc * tile_w:(tc + 1) * tile_w]
-                    rows.append({
-                        "image_id": image_id, "tr": tr, "tc": tc,
-                        "n_tr": n_tr, "n_tc": n_tc,
-                        "tile_bytes": codecs.encode_raw(blk[None, :, :]),
-                    })
-        return pd.DataFrame(rows, columns=[
-            "image_id", "tr", "tc", "n_tr", "n_tc", "tile_bytes",
-        ])
+            yield (image_id, tr, tc, n_tr, n_tc,
+                   codecs.encode_raw(mk[None, r0:r1, c0:c1]))
 
-    src = masks._with_time_start(images).select(
-        "image_id", "bytes", "collection", "time_start"
+    return map_rows(
+        masks._with_time_start(images), masks._IMAGE_COLS, _TILE_SCHEMA, _row
     )
-    return src.mapInPandas(lambda it: (_batch(p) for p in it), schema=_TILE_SCHEMA)
 
 
 def halo_apply(

@@ -20,6 +20,8 @@ result back; the per-image tile-grid explode is pure Catalyst
 
 from __future__ import annotations
 
+from itertools import product
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -75,10 +77,18 @@ def tile_shape(
     return int(tshape[0]), int(tshape[1]), int(tshape[2])
 
 
-def num_tiles(count: int, height: int, width: int, tshape: tuple[int, int, int]) -> int:
-    return int(
-        np.prod(np.ceil(np.array([count, height, width]) / np.array(tshape)))
-    )
+def tile_windows(shape: tuple[int, ...], tile: tuple[int, ...]):
+    """Dense tile grid over an array ``shape`` (tile.py:272-301): yields
+    ``(index, window)`` per tile in C order (last axis fastest), where
+    ``index`` holds the per-axis block numbers and ``window`` the per-axis
+    ``(start, stop)`` bounds, stops clipped to the shape."""
+    axes = [
+        [(i, (s, min(s + t, n))) for i, s in enumerate(range(0, n, t))]
+        for n, t in zip(shape, tile)
+    ]
+    for cell in product(*axes):
+        index, window = zip(*cell)
+        yield index, window
 
 
 def explode_tiles(

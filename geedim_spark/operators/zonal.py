@@ -10,20 +10,20 @@ as a first-class operator.
 Scale shape (100 TB): zones are a dim table — collected once on the driver
 (bounded by ``max_zones``, the same bounded-collect contract as the IVF
 centroid sample) and shipped to executors inside the Arrow kernel closure;
-images stream through ONE narrow ``mapInPandas`` pass (decode once per
-image, vectorised bbox candidate pruning across all zones, rasterise only
-the candidates).  Zero shuffle, zero join of pixel bytes.  For zone tables
-too large to broadcast, pre-pair with the grid-cell spatial join
-(operators/spatial_join.py) and group per image instead.
+images stream through ONE narrow Arrow pass (``kernels.map_rows``:
+decode once per image, vectorised bbox candidate pruning across all zones,
+rasterise only the candidates).  Zero shuffle, zero join of pixel bytes.
+For zone tables too large to broadcast, pre-pair with the grid-cell
+spatial join (operators/spatial_join.py) and group per image instead.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from geedim_spark import codecs, geometry
+from geedim_spark.kernels import map_rows
 
 _SCHEMA = (
     "image_id string, zone_id string, n_px long, sum_val double, "
@@ -71,45 +71,35 @@ def zonal_stats(
     else:
         zx0s = zy0s = zx1s = zy1s = np.zeros(0)
     nodata_f = float(nodata)
-    cols = ["image_id", "zone_id", "n_px", "sum_val", "min_val",
-            "max_val", "mean_val"]
 
-    def _batch(it):
-        for pdf in it:
-            rows: list[tuple] = []
-            for image_id, buf, tf in zip(
-                pdf["image_id"], pdf["bytes"], pdf["transform"]
-            ):
-                px = codecs.decode(bytes(buf))
-                if band >= px.shape[0]:
-                    raise ValueError(
-                        f"band {band} out of range for {image_id} "
-                        f"({px.shape[0]} bands)"
-                    )
-                tf = np.asarray(tf, dtype=np.float64)
-                h, w = px.shape[1], px.shape[2]
-                ix0, iy1 = tf[2], tf[5]
-                ix1 = ix0 + w * tf[0]
-                iy0 = iy1 + h * tf[4]  # tf[4] = -sy
-                cand = np.nonzero(
-                    (zx0s < ix1) & (ix0 < zx1s) & (zy0s < iy1) & (iy0 < zy1s)
-                )[0]
-                if not cand.size:
-                    continue
-                vals = px[band].astype(np.float64)
-                valid = vals != nodata_f
-                for ci in cand:
-                    m = geometry.polygon_to_mask(polys[ci], tf, h, w) & valid
-                    n = int(m.sum())
-                    if n:
-                        zv = vals[m]
-                        s, lo, hi = float(zv.sum()), float(zv.min()), float(zv.max())
-                        mean = round(s / n, 6)
-                    else:
-                        s = lo = hi = mean = 0.0
-                    rows.append((image_id, zids[ci], n, s, lo, hi, mean))
-            yield pd.DataFrame(rows, columns=cols)
+    def _row(image_id, buf, tf):
+        px = codecs.decode(bytes(buf))
+        if band >= px.shape[0]:
+            raise ValueError(
+                f"band {band} out of range for {image_id} "
+                f"({px.shape[0]} bands)"
+            )
+        tf = np.asarray(tf, dtype=np.float64)
+        h, w = px.shape[1], px.shape[2]
+        ix0, iy1 = tf[2], tf[5]
+        ix1 = ix0 + w * tf[0]
+        iy0 = iy1 + h * tf[4]  # tf[4] = -sy
+        cand = np.nonzero(
+            (zx0s < ix1) & (ix0 < zx1s) & (zy0s < iy1) & (iy0 < zy1s)
+        )[0]
+        if not cand.size:
+            return
+        vals = px[band].astype(np.float64)
+        valid = vals != nodata_f
+        for ci in cand:
+            m = geometry.polygon_to_mask(polys[ci], tf, h, w) & valid
+            n = int(m.sum())
+            if n:
+                zv = vals[m]
+                s, lo, hi = float(zv.sum()), float(zv.min()), float(zv.max())
+                mean = round(s / n, 6)
+            else:
+                s = lo = hi = mean = 0.0
+            yield image_id, zids[ci], n, s, lo, hi, mean
 
-    return images.select("image_id", "bytes", "transform").mapInPandas(
-        _batch, schema=_SCHEMA
-    )
+    return map_rows(images, ["image_id", "bytes", "transform"], _SCHEMA, _row)

@@ -25,9 +25,9 @@ from __future__ import annotations
 import json
 import time
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from geedim_spark.kernels import map_rows
 from geedim_spark.operators import masks
 
 
@@ -35,7 +35,7 @@ class PipelineMetrics:
     """Named accumulators for the mask/tile pipeline.
 
     CAVEAT (Spark accumulator semantics): updates fire inside a
-    TRANSFORMATION (mapInPandas), so they are re-applied on EVERY action
+    TRANSFORMATION (the Arrow kernel), so they are re-applied on EVERY action
     over the same plan and on stage retries / speculative tasks — Spark
     only deduplicates accumulator updates inside actions.  Run exactly one
     action over the instrumented frame per Metrics instance (or diff
@@ -63,36 +63,21 @@ class PipelineMetrics:
 def mask_stats_with_metrics(
     images: DataFrame, metrics: PipelineMetrics, **mask_opts
 ) -> DataFrame:
-    """masks.mask_stats + accumulator side-channel (same output schema)."""
-    def _batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for image_id, buf, coll, ts in zip(
-            pdf["image_id"], pdf["bytes"], pdf["collection"], pdf["time_start"]
-        ):
-            bands = masks.decode_bands(buf, masks.band_names_for(coll))
-            m = masks.masks_for(coll, bands, time_start=ts, **mask_opts)
-            rows.append({
-                "image_id": image_id,
-                "total_px": int(m["FILL_MASK"].size),
-                "fill_px": int(m["FILL_MASK"].sum()),
-                "cloud_px": int(m["CLOUD_MASK"].sum()) if "CLOUD_MASK" in m else 0,
-                "shadow_px": int(m["SHADOW_MASK"].sum()) if "SHADOW_MASK" in m else 0,
-                "cloudless_px": int(m["CLOUDLESS_MASK"].sum()),
-            })
-        out = pd.DataFrame(rows, columns=[
-            "image_id", "total_px", "fill_px", "cloud_px", "shadow_px", "cloudless_px",
-        ])
-        metrics.images.add(len(out))
-        metrics.pixels.add(int(out["total_px"].sum()))
-        metrics.fill_px.add(int(out["fill_px"].sum()))
-        metrics.cloudless_px.add(int(out["cloudless_px"].sum()))
-        return out
+    """masks.mask_stats + accumulator side-channel: the same per-row
+    function (so the same bestEffort-decimated counts and schema), with
+    each row's counts added to ``metrics``."""
+    def _row(image_id, buf, coll, ts):
+        row = masks.mask_stats_row(image_id, buf, coll, ts, **mask_opts)
+        _, total_px, fill_px, _, _, cloudless_px = row
+        metrics.images.add(1)
+        metrics.pixels.add(total_px)
+        metrics.fill_px.add(fill_px)
+        metrics.cloudless_px.add(cloudless_px)
+        yield row
 
-    src = masks._with_time_start(images).select(
-        "image_id", "bytes", "collection", "time_start"
-    )
-    return src.mapInPandas(
-        lambda it: (_batch(p) for p in it), schema=masks._STATS_SCHEMA
+    return map_rows(
+        masks._with_time_start(images), masks._IMAGE_COLS,
+        masks._STATS_SCHEMA, _row,
     )
 
 

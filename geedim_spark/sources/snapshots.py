@@ -71,19 +71,6 @@ def _snap_dir(table_dir: str) -> str:
     return os.path.join(table_dir, "snapshots")
 
 
-def _canon_key(v) -> str:
-    """Best-effort Python-side canonical key (booleans lowercase, NULL ->
-    the Hive default dir).  The WRITE path does not use this: manifest
-    keys come from Spark's own cast-to-string (see write_snapshot), which
-    matches the JVM's partition-dir naming where Python str() does not
-    (double 1e-7 -> '1.0E-7' vs '1e-07')."""
-    if v is None:
-        return NULL_KEY
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    return str(v)
-
-
 def _latest_snap_id(table_dir: str) -> str | None:
     """Newest committed snapshot id — the MANIFEST FILES are authoritative
     (each is claimed with an atomic exclusive link, so ids are a total
@@ -430,9 +417,9 @@ def pending_keys(work: DataFrame, table_dir: str, key_col: str) -> DataFrame:
         return work
     spark = work.sparkSession
     done_df = spark.createDataFrame([(k,) for k in done], "_done_key string")
-    # canonicalise like _canon_key: NULL -> the Hive default name (a raw
-    # NULL == comparison is NULL, so null-key rows would be re-exported on
-    # every resume); Spark's cast already lowercases booleans
+    # canonicalise like the write path: NULL -> the Hive default name (a
+    # raw NULL == comparison is NULL, so null-key rows would be re-exported
+    # on every resume); Spark's cast already lowercases booleans
     work_key = F.coalesce(F.col(key_col).cast("string"), F.lit(NULL_KEY))
     return work.join(
         F.broadcast(done_df), work_key == F.col("_done_key"), "left_anti"

@@ -447,16 +447,21 @@ def test_qa60_valid_nat_assumes_populated():
 def test_mask_stats_with_metrics_matches_mask_stats(spark):
     """Regression: the metrics variant must route through the same
     per-collection dispatch as masks.mask_stats (S2 rows diverged when the
-    dispatch moved to masks_for)."""
+    dispatch moved to masks_for) and the same bestEffort decimation (a
+    1024x1024 image is over MAX_REGION_STAT_PIXELS, so both count every
+    2nd row/column)."""
     from geedim_spark.plans import metrics as mx
 
-    imgs = synth.images_df(spark, 30).filter("fmt = 'raw'")
-    pm = mx.PipelineMetrics(spark)
-    got = sorted(map(tuple, mx.mask_stats_with_metrics(imgs, pm).collect()))
-    want = sorted(map(tuple, masks.mask_stats(imgs).collect()))
-    assert got == want
-    snap = pm.snapshot()
-    assert snap["images"] == len(want)
+    for imgs in (synth.images_df(spark, 30).filter("fmt = 'raw'"),
+                 synth.images_df(spark, 3, w=1024, h=1024)):
+        pm = mx.PipelineMetrics(spark)
+        got = sorted(map(tuple, mx.mask_stats_with_metrics(imgs, pm).collect()))
+        want = sorted(map(tuple, masks.mask_stats(imgs).collect()))
+        assert got == want
+        snap = pm.snapshot()
+        assert snap["images"] == len(want)
+        assert snap["pixels"] == sum(r[1] for r in want)
+    assert {r[1] for r in want} == {512 * 512}
 
 
 def test_focal_decomposition_equals_naive():
