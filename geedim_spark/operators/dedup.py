@@ -284,8 +284,9 @@ class BucketCapReport:
     plan, so this object (attached to the returned frame as
     ``_bucket_cap_report``) watches the observation from a daemon thread
     and emits the loud ``RuntimeWarning`` the moment the first action
-    completes — no eager job at plan-construction time.  Callers needing
-    the numbers programmatically use :meth:`wait`.
+    completes — no eager job at plan-construction time.  The warning is
+    best-effort (a process exiting right after the action can lose it);
+    callers that must record the drops use :meth:`wait`.
     """
 
     def __init__(self, observation, op: str, max_bucket_size: int,
@@ -308,12 +309,10 @@ class BucketCapReport:
             got = self.observation.get
         except Exception:
             # the observed node was optimized out of the executed plan —
-            # AQE's empty-relation propagation does this when EVERY row
-            # sat in an oversized bucket (the collapsed-to-empty join
-            # swallows the broadcast subtree holding CollectMetrics).
-            # That is exactly a case with drops to report, so recompute
-            # the stats directly from the (persisted) keyed frame — one
-            # tiny aggregate job — rather than reporting zeros.
+            # AQE's empty-relation propagation can do this when EVERY row
+            # sat in an oversized bucket.  That is exactly a case with
+            # drops to report, so recompute the stats from the keyed
+            # frame — one small aggregate job — rather than report zeros.
             try:
                 got = self._recompute() if self._recompute else {}
             except Exception:
@@ -344,161 +343,76 @@ class BucketCapReport:
         return dict(self._result or {})
 
 
-def _drop_oversized_buckets(
-    keyed: DataFrame, key_cols: list[str], max_bucket_size: int, op: str
-) -> tuple[DataFrame, BucketCapReport]:
-    """Filter out rows in LSH buckets larger than ``max_bucket_size``,
-    entirely inside the lazy plan, and WARN with exact drop counts once the
-    plan first executes (see :class:`BucketCapReport`).
-
-    A b-member bucket contributes b(b-1)/2 candidate pairs inside ONE join
-    key: a 10M-copy boilerplate document is 5*10^13 pairs on a single task
-    — the scale-killer of an otherwise bucketed design.  Oversized buckets
-    are overwhelmingly exact-duplicate clusters; their membership is
-    recoverable at hash-groupBy cost via :func:`exact_dup_counts` (pairs
-    inside an exact cluster are trivially all-vs-all and should be treated
-    as a group, never materialised as pairs).
-
-    Plan shape (scale-critical): the OVERSIZED key set is tiny by
-    construction (<= N/max_bucket_size keys), so the removal is a
-    broadcast LEFT ANTI join against it — the only shuffle is the size
-    aggregate itself (which reuses the join key).  Joining the full sizes
-    aggregate back instead would re-shuffle the whole keyed frame: sizes
-    has ~one row per bucket, the same order of magnitude as the input.
-    The drop metrics are observed on the broadcast-side aggregate, so the
-    report costs nothing extra and the plan stays fully lazy.
-
-    The report is BEST-EFFORT by construction (a daemon thread fires the
-    warning when the first action completes): a process exiting
-    immediately after the action can lose the warning, and a capped plan
-    that is never executed parks one daemon thread until process exit.
-    Batch pipelines that must record the drops call
-    ``frame._bucket_cap_report.wait()`` after their action — that is the
-    durable interface; the warning is the interactive courtesy."""
-    from pyspark.sql import Observation
-
-    obs = Observation(f"{op}_bucket_cap")
-    # observe the UNFILTERED size aggregate: observing the filtered
-    # oversized set instead lets AQE's empty-relation propagation delete
-    # the CollectMetrics node whenever nothing is oversized (the common
-    # case), and Observation.get then fails JVM-side instead of reporting
-    # zero drops
-    sizes = (
-        keyed.groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("_bn"))
-        .observe(
-            obs,
-            F.coalesce(
-                F.sum(F.when(F.col("_bn") > max_bucket_size, F.col("_bn"))),
-                F.lit(0),
-            ).alias("rows_dropped"),
-            F.max(
-                F.when(F.col("_bn") > max_bucket_size, F.col("_bn"))
-            ).alias("largest_bucket"),
-        )
-    )
-    over = sizes.filter(F.col("_bn") > max_bucket_size)
-
-    def _recompute() -> dict:
-        # clean lineage (no observe node): used only when AQE deleted the
-        # CollectMetrics node from the executed plan (all-dropped case)
-        row = (
-            keyed.groupBy(*key_cols)
-            .agg(F.count(F.lit(1)).alias("_bn"))
-            .agg(
-                F.coalesce(
-                    F.sum(F.when(F.col("_bn") > max_bucket_size,
-                                 F.col("_bn"))), F.lit(0),
-                ).alias("rows_dropped"),
-                F.max(
-                    F.when(F.col("_bn") > max_bucket_size, F.col("_bn"))
-                ).alias("largest_bucket"),
-            ).first()
-        )
-        return {"rows_dropped": row["rows_dropped"],
-                "largest_bucket": row["largest_bucket"]}
-
-    report = BucketCapReport(obs, op, max_bucket_size, recompute=_recompute)
-    capped = keyed.join(
-        F.broadcast(over.select(*key_cols)), key_cols, "left_anti"
-    )
-    return capped, report
+def _cap_stats(size: Column, max_bucket_size: int) -> list[Column]:
+    """The two drop-report aggregates over a per-bucket row count:
+    ``rows_dropped`` (rows in oversized buckets, 0 when none) and
+    ``largest_bucket`` (largest oversized size, NULL when none)."""
+    over = F.when(size > max_bucket_size, size.cast("long"))
+    return [
+        F.coalesce(F.sum(over), F.lit(0).cast("long")).alias("rows_dropped"),
+        F.max(over).alias("largest_bucket"),
+    ]
 
 
 def _capped_bucket_lists(
     keyed: DataFrame,
     key_cols: list[str],
     member: Column,
-    max_bucket_size: int | None,
+    max_bucket_size: int,
     op: str,
-) -> tuple[DataFrame, BucketCapReport | None]:
-    """One-shuffle bucket materialisation for LSH candidate generation:
-    ``groupBy(key_cols).collect_list(member)`` with the oversized-bucket
-    cap applied as a SIZE FILTER on the aggregated row and the standard
-    lazy :class:`BucketCapReport` observed in the same plan.
+) -> tuple[DataFrame, BucketCapReport]:
+    """The one oversized-bucket cap of the LSH pair operators: one
+    ``groupBy(key_cols)`` shuffle builds each bucket's member list and row
+    count, buckets with more than ``max_bucket_size`` rows are dropped by a
+    size filter on the aggregated row, and the drops are observed in the
+    same plan (the lazy :class:`BucketCapReport`).
 
-    Versus :func:`_drop_oversized_buckets` + a bucket self-join (the r5
-    shape), this shuffles the keyed frame ONCE by the bucket key instead
-    of three times (size aggregate + both join sides) and needs no
-    persist, no broadcast job and no anti-join — the r6 A/B read the
-    text-LSH pairs chain 2.4-2.6 s -> 1.5-1.8 s at sf0.1 (guide §2.4:
-    remove shuffles outright).  The trade: an oversized bucket's member
-    list is built BEFORE the filter drops it — O(bucket) transient memory
-    in one (spillable, ObjectHashAggregate->sort fallback) aggregation
-    buffer, ~80 MB for a 10M-copy cluster — where the count-based cap
-    stayed O(1) per bucket.  Bounded and linear, and the common case
-    (capped buckets) holds <= max_bucket_size members by definition.
+    A b-member bucket yields b(b-1)/2 candidate pairs on one task: a
+    10M-copy boilerplate document is 5*10^13 pairs — the scale-killer of
+    an otherwise bucketed design.  Oversized buckets are overwhelmingly
+    exact-duplicate clusters, recoverable as GROUPS at hash-groupBy cost
+    (:func:`exact_dup_counts`).  No persist, broadcast job or anti-join:
+    the r6 A/B read the text-LSH pairs chain 2.4-2.6 s -> 1.5-1.8 s at
+    sf0.1 against the r5 size-aggregate + anti-join + self-join shape.
+    The trade: an oversized bucket's member list is built BEFORE the
+    filter drops it — O(bucket) transient memory in one (spillable)
+    aggregation buffer, ~80 MB for a 10M-copy cluster.
 
-    NULL ``member`` values are excluded by ``collect_list`` semantics;
-    they could never form a pair anyway (NULL compares as NULL in the
-    ``a < b`` pair filter), so pair output is unaffected.
+    Buckets are sized by ROW count (``count(1)``), so rows whose
+    ``member`` is NULL count toward the cap and the report even though
+    ``collect_list`` leaves them out of ``_members`` (they could never
+    form a pair: NULL fails the ``a < b`` pair filter).
 
-    Returns ``(buckets_df with key_cols + _members, report)``; with
-    ``max_bucket_size=None`` no filter/observe is added and report is
-    None — note the uncapped path still materialises one member list PER
-    BUCKET, so a degenerate mega-bucket becomes one multi-GB aggregation
-    row (the r5 uncapped self-join streamed it, quadratically); disabling
-    the cap on corpora that may contain exact-duplicate mega-clusters is
-    wrong in either shape — run exact dedup first.  Plan construction
+    ``max_bucket_size`` must be an int >= 1; a caller who wants uncapped
+    output passes a cap larger than the table.  Returns
+    ``(buckets_df with key_cols + _members, report)``; plan construction
     stays job-free (observe is lazy)."""
     from pyspark.sql import Observation
 
-    agg = keyed.groupBy(*key_cols).agg(F.collect_list(member).alias("_members"))
-    if max_bucket_size is None:
-        return agg, None
-    sized = agg.withColumn("_bn", F.size("_members"))
+    if max_bucket_size is None or max_bucket_size < 1:
+        raise ValueError(
+            f"{op}: max_bucket_size must be an int >= 1 (got "
+            f"{max_bucket_size!r}); for uncapped output pass a cap larger "
+            "than the table"
+        )
     obs = Observation(f"{op}_bucket_cap")
-    sized = sized.observe(
-        obs,
-        F.coalesce(
-            F.sum(F.when(F.col("_bn") > max_bucket_size,
-                         F.col("_bn").cast("long"))),
-            F.lit(0).cast("long"),
-        ).alias("rows_dropped"),
-        F.max(
-            F.when(F.col("_bn") > max_bucket_size, F.col("_bn").cast("long"))
-        ).alias("largest_bucket"),
+    sized = (
+        keyed.groupBy(*key_cols)
+        .agg(F.collect_list(member).alias("_members"),
+             F.count(F.lit(1)).alias("_bn"))
+        .observe(obs, *_cap_stats(F.col("_bn"), max_bucket_size))
     )
 
     def _recompute() -> dict:
         # diagnostic fallback only (observation lost to plan rewriting):
-        # a clean-lineage count-based re-aggregate — pays one extra pass
-        # over ``keyed``, acceptable on this pathological path
-        row = (
+        # a clean-lineage re-aggregate — one extra pass over ``keyed``,
+        # acceptable on this pathological path
+        return (
             keyed.groupBy(*key_cols)
-            .agg(F.count(member).alias("_bn"))
-            .agg(
-                F.coalesce(
-                    F.sum(F.when(F.col("_bn") > max_bucket_size,
-                                 F.col("_bn"))), F.lit(0),
-                ).alias("rows_dropped"),
-                F.max(
-                    F.when(F.col("_bn") > max_bucket_size, F.col("_bn"))
-                ).alias("largest_bucket"),
-            ).first()
+            .agg(F.count(F.lit(1)).alias("_bn"))
+            .agg(*_cap_stats(F.col("_bn"), max_bucket_size))
+            .first().asDict()
         )
-        return {"rows_dropped": row["rows_dropped"],
-                "largest_bucket": row["largest_bucket"]}
 
     report = BucketCapReport(obs, op, max_bucket_size, recompute=_recompute)
     kept = sized.filter(F.col("_bn") <= max_bucket_size).drop("_bn")
@@ -535,7 +449,7 @@ def minhash_lsh_pairs(
     n_hashes: int = 16,
     bands: int = 4,
     n: int = 5,
-    max_bucket_size: int | None = 10000,
+    max_bucket_size: int = 10000,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash LSH.
 
@@ -548,7 +462,9 @@ def minhash_lsh_pairs(
     (boilerplate mega-clusters): larger buckets are filtered inside the
     lazy plan and reported with a loud RuntimeWarning when the plan first
     executes (returned frame carries ``_bucket_cap_report`` — see
-    :class:`BucketCapReport`); ``None`` disables.
+    :class:`BucketCapReport`).  The cap is always on: it must be >= 1,
+    and a caller who wants uncapped output passes a cap larger than the
+    table.
 
     Plan shape (r6, guide §2.4): banded keys are aggregated into per-bucket
     member LISTS (one shuffle by the bucket key), the cap is a size filter
@@ -826,7 +742,7 @@ def phash_near_dup_pairs(
     phash_col: str = "phash",
     max_hamming: int = 3,
     n_bands: int = 8,
-    max_bucket_size: int | None = 10000,
+    max_bucket_size: int = 10000,
 ) -> DataFrame:
     """Near-duplicate IMAGE pairs by perceptual-hash Hamming distance —
     the image-payload twin of :func:`minhash_lsh_pairs` over the input
@@ -846,7 +762,8 @@ def phash_near_dup_pairs(
     over 2^(64/n_bands) buckets; ``max_bucket_size`` applies the same
     lazy oversized-bucket cap as the text LSH (giant buckets = exact
     phash clusters — recover those as GROUPS via a hash-groupBy on the
-    phash itself).  Like the text LSH (r6), candidates come from
+    phash itself); the cap is always on (>= 1; pass one larger than the
+    table for uncapped output).  Like the text LSH (r6), candidates come from
     per-bucket member lists (:func:`_capped_bucket_lists`) — one shuffle
     by (band, bval), no persist/broadcast/anti-join.  Output:
     (id_a, id_b, n_shared_bands, hamming), one row per unordered pair.

@@ -172,52 +172,48 @@ def _np_float_buckets(E: np.ndarray, planes: np.ndarray) -> np.ndarray:
     return buckets
 
 
-def _embed_base_kernel(embeddings: DataFrame, bucket_of):
+def _embed_base_kernel(
+    embeddings: DataFrame, bucket_of, keep: tuple[str, ...] = ()
+) -> DataFrame:
     """Shared Arrow base pass for the LSH embedding ops: one mapInPandas
-    batch function computing (vec_id, e float64, bucket, nrm), with the
-    hyperplanes derived from the batch's vector width (no
+    pass over ``embeddings`` staging ``(vec_id, *keep, e float64, bucket,
+    nrm)``, with the hyperplanes derived from the batch's vector width (no
     plan-construction job).  ``bucket_of(E)`` maps the batch's (n, d)
-    float64 matrix to int64 bucket ids.
+    float64 matrix to int64 bucket ids; ``keep`` columns pass through.
 
-    Rows with a NULL embedding replicate the r5 Catalyst convention:
-    every ``when(NULL > 0)`` branch fell through, so they land in bucket
-    0 with NULL e/nrm — the downstream exact-cosine expressions evaluate
-    NULL and the filters/rank drop them, exactly as before.
-
-    Returns ``(iterator_fn, schema_string)`` for ``mapInPandas``."""
-    id_type = embeddings.schema["vec_id"].dataType.simpleString()
-    kschema = f"vec_id {id_type}, e array<double>, bucket long, nrm double"
+    Rows with a NULL embedding, or with any NULL element, replicate the r5
+    Catalyst convention for NULL rows: every ``when(NULL > 0)`` branch
+    fell through, so they land in bucket 0 with NULL e/nrm — the
+    downstream exact-cosine expressions evaluate NULL and the
+    filters/rank drop them.  NULL elements are cleared in Catalyst before
+    the kernel: Arrow hands them to pandas as NaN, indistinguishable from
+    a real NaN element (which keeps Spark's NaN > 0 bucket bit)."""
+    cols = ["vec_id", *keep]
+    kschema = ", ".join(
+        [f"{c} {embeddings.schema[c].dataType.simpleString()}" for c in cols]
+        + ["e array<double>", "bucket long", "nrm double"])
 
     def _batch(pdf: pd.DataFrame) -> pd.DataFrame:
         n = len(pdf)
-        if not n:
-            return pd.DataFrame({"vec_id": [], "e": [], "bucket": [],
-                                 "nrm": []})
         vals = list(pdf["embedding"])
-        ok = np.array([v is not None for v in vals])
-        if ok.all():
-            E = np.stack([np.asarray(v, dtype=np.float64) for v in vals])
-            return pd.DataFrame({
-                "vec_id": pdf["vec_id"], "e": list(E),
-                "bucket": bucket_of(E), "nrm": _np_fold_norm(E),
-            })
+        idx = [i for i, v in enumerate(vals) if v is not None]
         e_out: list = [None] * n
         bucket = np.zeros(n, dtype=np.int64)
-        nrm: list = [None] * n
-        idx = np.nonzero(ok)[0]
-        if len(idx):
+        nrm = np.full(n, np.nan)  # NaN leaves the kernel as NULL
+        if idx:
             E = np.stack([np.asarray(vals[i], dtype=np.float64)
                           for i in idx])
-            bk = bucket_of(E)
-            nm = _np_fold_norm(E)
+            bucket[idx] = bucket_of(E)
+            nrm[idx] = _np_fold_norm(E)
             for t, i in enumerate(idx):
                 e_out[i] = E[t]
-                bucket[i] = bk[t]
-                nrm[i] = float(nm[t])
-        return pd.DataFrame({"vec_id": pdf["vec_id"], "e": e_out,
+        return pd.DataFrame({**{c: pdf[c] for c in cols}, "e": e_out,
                              "bucket": bucket, "nrm": nrm})
 
-    return (lambda it: (_batch(p) for p in it)), kschema
+    no_null_elems = F.forall("embedding", lambda x: x.isNotNull())
+    return embeddings.select(
+        *cols, F.when(no_null_elems, F.col("embedding")).alias("embedding")
+    ).mapInPandas(lambda it: (_batch(p) for p in it), kschema)
 
 
 def embedding_dim(embeddings: DataFrame) -> int:
@@ -264,18 +260,17 @@ def lsh_bucket_topk_quantised(
     filter sits below the Python map), and an EMPTY embeddings table
     yields an empty result rather than the r5 plan-time ValueError."""
     np_planes = int(n_planes)
-    fn, kschema = _embed_base_kernel(
-        embeddings,
-        lambda E: _np_quantised_buckets(
-            E, lsh_int_planes(E.shape[1], np_planes)),
-    )
-    emb = embeddings.select("vec_id", "embedding").mapInPandas(fn, kschema)
+
+    def bucket_of(E):
+        return _np_quantised_buckets(E, lsh_int_planes(E.shape[1], np_planes))
+
+    emb = _embed_base_kernel(embeddings, bucket_of)
     # filter BELOW the kernel: predicates cannot push through a Python
     # map, so building q from the kernel output would re-run the full
     # base pass over every row just to keep n_queries of them
     q = (
-        embeddings.filter(F.col("vec_id") < n_queries)
-        .select("vec_id", "embedding").mapInPandas(fn, kschema)
+        _embed_base_kernel(
+            embeddings.filter(F.col("vec_id") < n_queries), bucket_of)
         .select(
             F.col("vec_id").alias("query_id"), F.col("e").alias("qe"),
             F.col("bucket").alias("qbucket"), F.col("nrm").alias("qnrm"),
@@ -340,7 +335,7 @@ def near_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.99,
     n_planes: int = 8,
-    max_bucket_size: int | None = 10000,
+    max_bucket_size: int = 10000,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via LSH candidate pruning.
 
@@ -357,8 +352,9 @@ def near_dup_pairs(
     with a loud RuntimeWarning when the plan first executes (returned frame
     carries ``_bucket_cap_report`` — see
     :class:`geedim_spark.operators.dedup.BucketCapReport`); recover the
-    dropped clusters as GROUPS via :func:`exact_embed_dup_counts`;
-    ``None`` disables.
+    dropped clusters as GROUPS via :func:`exact_embed_dup_counts`.  The
+    cap is always on (>= 1; pass one larger than the table for uncapped
+    output).
 
     Plan shape (r6, guide §4.2/§2.4): buckets and norms come from ONE
     Arrow base kernel (bit-identical to the Catalyst
@@ -369,18 +365,17 @@ def near_dup_pairs(
     member lists (:func:`~geedim_spark.operators.dedup._capped_bucket_lists`
     — one shuffle by bucket, no persist/broadcast/anti-join/self-join);
     the exact cosine filter stays in Catalyst over the staged norms.
-    NULL-embedding rows keep the r5 convention (bucket 0, NULL sim →
-    filtered); an EMPTY table yields an empty result rather than the r5
-    plan-time ValueError.
+    NULL-embedding rows, and rows with a NULL element, keep the r5
+    convention (bucket 0, NULL sim → filtered); an EMPTY table yields an
+    empty result rather than the r5 plan-time ValueError.
     """
     from geedim_spark.operators.dedup import _capped_bucket_lists
 
     np_planes = int(n_planes)
-    fn, kschema = _embed_base_kernel(
+    base = _embed_base_kernel(
         embeddings,
         lambda E: _np_float_buckets(E, lsh_signature(E.shape[1], np_planes)),
     )
-    base = embeddings.select("vec_id", "embedding").mapInPandas(fn, kschema)
     buckets_df, report = _capped_bucket_lists(
         base, ["bucket"], F.struct("vec_id", "e", "nrm"), max_bucket_size,
         "near_dup_pairs",
@@ -603,128 +598,102 @@ _TOPK_PRUNE_CUSHION = 2e-6
 
 
 def _bucket_pair_sims(
-    base: DataFrame, k: int, mismatch_only: bool
+    buckets: DataFrame, k: int, mismatch_only: bool
 ) -> DataFrame:
     """Same-bucket pair similarities via a per-bucket Arrow kernel.
 
     Value-identical to the r5 bucket self-join + higher-order-function
-    form: dots/norms replay the exact Catalyst fold order
-    (:func:`_np_fold_dot`), the zero-norm NULL rule becomes a skip, and
-    rounding + ranking stay in Catalyst.  Per query row only the
-    guaranteed round-6 top-k superset survives (``_TOPK_PRUNE_CUSHION``),
-    so the downstream rank window sees ~k rows per vec instead of the
-    whole bucket — the join form shuffled every candidate pair.
+    form: dots replay the exact Catalyst fold order (:func:`_np_fold_dot`),
+    the norms are the staged :func:`_np_fold_norm` values, the zero-norm
+    NULL rule becomes a skip, and rounding + ranking stay in Catalyst.
+    Per query row only the guaranteed round-6 top-k superset survives
+    (``_TOPK_PRUNE_CUSHION``), so the downstream rank window sees ~k rows
+    per vec instead of the whole bucket — the join form shuffled every
+    candidate pair.
 
-    ``base``: (vec_id, label, e array<double>, bucket).  Output:
-    (vec_id, label, nbr_id, nbr_label, sim RAW double).
+    ``buckets``: one row per bucket whose ``_members`` list holds
+    (vec_id, label, e array<double>, nrm) structs — the output of
+    :func:`_quantised_base`.  Members with a NULL ``e`` are skipped.
+    Output: (vec_id, label, nbr_id, nbr_label, sim RAW double).
     """
-    label_type = base.schema["label"].dataType.simpleString()
+    from geedim_spark.kernels import map_rows
+
+    label_type = (buckets.schema["_members"].dataType.elementType["label"]
+                  .dataType.simpleString())
     schema = (f"vec_id long, label {label_type}, nbr_id long, "
               f"nbr_label {label_type}, sim double")
 
-    def _group(pdf: pd.DataFrame) -> pd.DataFrame:
-        nrows = len(pdf)
-        out = {c: [] for c in
-               ("vec_id", "label", "nbr_id", "nbr_label", "sim")}
-        if nrows >= 2:
-            V = np.array([np.asarray(v, dtype=np.float64)
-                          for v in pdf["e"]])
-            ids = pdf["vec_id"].to_numpy()
-            labels = pdf["label"].to_numpy()
-            nrm = _np_fold_norm(V)
-            # chunk the query rows so the pair matrix stays bounded even
-            # at the bucket-cap size (cap rows x cap cols doubles)
-            for c0 in range(0, nrows, 1024):
-                c1 = min(c0 + 1024, nrows)
-                sims = _np_fold_dot(V[c0:c1], V)
-                denom = nrm[c0:c1][:, None] * nrm[None, :]
-                valid = denom != 0.0
-                valid &= ids[c0:c1][:, None] != ids[None, :]
-                if mismatch_only:
-                    valid &= labels[c0:c1][:, None] != labels[None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    sims = sims / denom
-                # non-finite sims (NaN/inf embeddings) carry no usable
-                # ordering — excluded, like the zero-norm NULL rule
-                valid &= np.isfinite(sims)
-                for r in range(c1 - c0):
-                    vm = valid[r]
-                    if not vm.any():
-                        continue
-                    sv = sims[r][vm]
-                    if len(sv) > k:
-                        kth = np.partition(sv, len(sv) - k)[len(sv) - k]
-                        keep = sv >= kth - _TOPK_PRUNE_CUSHION
-                    else:
-                        keep = np.ones(len(sv), dtype=bool)
-                    nb_ids = ids[vm][keep]
-                    out["vec_id"].append(
-                        np.full(len(nb_ids), ids[c0 + r]))
-                    out["label"].append(
-                        np.full(len(nb_ids), labels[c0 + r]))
-                    out["nbr_id"].append(nb_ids)
-                    out["nbr_label"].append(labels[vm][keep])
-                    out["sim"].append(sv[keep])
-        if not out["vec_id"]:
-            return pd.DataFrame(
-                {c: pd.Series([], dtype=object) for c in out})
-        return pd.DataFrame({c: np.concatenate(v) for c, v in out.items()})
+    def _bucket(members):
+        members = [m for m in members if m["e"] is not None]
+        nrows = len(members)
+        if nrows < 2:
+            return
+        V = np.stack([np.asarray(m["e"], dtype=np.float64) for m in members])
+        ids = np.array([m["vec_id"] for m in members])
+        labels = np.array([m["label"] for m in members])
+        nrm = np.array([m["nrm"] for m in members], dtype=np.float64)
+        id_list, label_list = ids.tolist(), labels.tolist()
+        # chunk the query rows so the pair matrix stays bounded even at the
+        # bucket-cap size (cap rows x cap cols doubles)
+        for c0 in range(0, nrows, 1024):
+            c1 = min(c0 + 1024, nrows)
+            sims = _np_fold_dot(V[c0:c1], V)
+            denom = nrm[c0:c1][:, None] * nrm[None, :]
+            valid = denom != 0.0
+            valid &= ids[c0:c1][:, None] != ids[None, :]
+            if mismatch_only:
+                valid &= labels[c0:c1][:, None] != labels[None, :]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                sims = sims / denom
+            # non-finite sims (NaN/inf embeddings) carry no usable
+            # ordering — excluded, like the zero-norm NULL rule
+            valid &= np.isfinite(sims)
+            for r in range(c1 - c0):
+                vm = valid[r]
+                if not vm.any():
+                    continue
+                sv = sims[r][vm]
+                if len(sv) > k:
+                    kth = np.partition(sv, len(sv) - k)[len(sv) - k]
+                    keep = sv >= kth - _TOPK_PRUNE_CUSHION
+                else:
+                    keep = np.ones(len(sv), dtype=bool)
+                vid, lab = id_list[c0 + r], label_list[c0 + r]
+                for nb, nl, sim in zip(ids[vm][keep].tolist(),
+                                       labels[vm][keep].tolist(),
+                                       sv[keep].tolist()):
+                    yield vid, lab, nb, nl, sim
 
-    return base.groupBy("bucket").applyInPandas(_group, schema=schema)
+    return map_rows(buckets, ["_members"], schema, _bucket)
 
 
 def _quantised_base(
-    embeddings: DataFrame, n_planes: int, max_bucket_size: int | None,
-    op: str,
+    embeddings: DataFrame, n_planes: int, max_bucket_size: int, op: str,
 ):
-    """Shared prep for the kernel-scored bucket ops: one narrow Arrow
-    pass computes (vec_id, label, e float64, bucket) — the quantised
-    bucket via exact int64 numpy folds (:func:`_np_quantised_buckets`,
-    bit-identical to the Catalyst form) instead of ~n_planes*dim
-    interpreted HOF ops per vector — then the standard lazy oversized-
-    bucket cap.  Returns (base, BucketCapReport | None)."""
-    from pyspark import StorageLevel
+    """Shared prep for the kernel-scored bucket ops: the embedding base
+    pass (:func:`_embed_base_kernel` keeping ``label``) stages the
+    quantised bucket via exact int64 numpy folds
+    (:func:`_np_quantised_buckets`, bit-identical to the Catalyst form)
+    and the norm, then the one LSH bucket cap
+    (:func:`~geedim_spark.operators.dedup._capped_bucket_lists`) builds
+    one member list per bucket in a single shuffle.  Returns
+    (buckets with ``_members``, BucketCapReport)."""
+    from geedim_spark.operators.dedup import _capped_bucket_lists
 
-    from geedim_spark.operators.dedup import _drop_oversized_buckets
-
-    label_type = embeddings.schema["label"].dataType.simpleString()
-    schema = (f"vec_id long, label {label_type}, e array<double>, "
-              f"bucket long")
-
-    def _prep(it):
-        # planes derived from the first batch's vector width (seeded rng:
-        # every task builds the identical matrix) — no embedding_dim()
-        # .first() job at plan-construction time
-        planes = None
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            V = np.array([np.asarray(v, dtype=np.float64)
-                          for v in pdf["embedding"]])
-            if planes is None:
-                planes = lsh_int_planes(V.shape[1], n_planes)
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"],
-                "label": pdf["label"],
-                "e": list(V),
-                "bucket": _np_quantised_buckets(V, planes),
-            })
-
-    base = embeddings.select("vec_id", "label", "embedding").mapInPandas(
-        _prep, schema=schema)
-    report = None
-    if max_bucket_size is not None:
-        # persist BEFORE the cap: consumed by the cap's size aggregate
-        # plus the pair kernel (lazy — no job at plan time)
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
-        base, report = _drop_oversized_buckets(
-            base, ["bucket"], max_bucket_size, op)
-    return base, report
+    base = _embed_base_kernel(
+        embeddings,
+        lambda E: _np_quantised_buckets(E, lsh_int_planes(E.shape[1], n_planes)),
+        keep=("label",),
+    )
+    return _capped_bucket_lists(
+        base, ["bucket"], F.struct("vec_id", "label", "e", "nrm"),
+        max_bucket_size, op,
+    )
 
 
 def knn_label_noise(
     embeddings: DataFrame, k: int = 5, n_planes: int = 4,
-    max_bucket_size: int | None = 10000,
+    max_bucket_size: int = 10000,
 ) -> DataFrame:
     """Mislabeled-sample detection (Confident-Learning style, cf.
     Northcutt et al. 2021): every vector's label is compared against the
@@ -738,29 +707,32 @@ def knn_label_noise(
     round(cos, 6) with id tiebreaks.  Majority vote ties break toward
     the smallest label.
 
-    Scale shape (100 TB): one bucket shuffle, then candidates are scored
-    inside a per-bucket Arrow kernel (:func:`_bucket_pair_sims` — exact
-    Catalyst-fold doubles; only the guaranteed round-6 top-k superset is
-    emitted per vec, so the vec_id rank window sees ~k rows, not the
-    whole bucket); vote counting is a 2-phase hash agg.
+    Scale shape (100 TB): one bucket shuffle builds each bucket's member
+    list, then candidates are scored inside a per-bucket Arrow kernel
+    (:func:`_bucket_pair_sims` — exact Catalyst-fold doubles; only the
+    guaranteed round-6 top-k superset is emitted per vec, so the vec_id
+    rank window sees ~k rows, not the whole bucket); vote counting is a
+    2-phase hash agg.
     ``max_bucket_size`` bounds the quadratic blowup of a degenerate
     bucket (e.g. a mass-duplicated embedding): larger buckets are
     filtered inside the lazy plan with the standard loud
     ``BucketCapReport`` (``_bucket_cap_report`` on the result, same
-    contract as :func:`near_dup_pairs`); ``None`` disables.  Size
+    contract as :func:`near_dup_pairs`); the cap is always on (>= 1;
+    pass one larger than the table for uncapped output).  Size
     ``n_planes ~ log2(N / target_bucket_size)`` so the expected bucket
     N/2^n_planes stays well under the cap (4 fits the test corpus; a
     10^9-vector corpus wants ~20).
-    Vectors whose bucket holds no other member (or zero-norm vectors)
-    report n_nbrs=0, knn_label NULL, is_suspect false.
+    Vectors whose bucket holds no other member (or zero-norm vectors, or
+    NULL embeddings / embeddings with a NULL element) report n_nbrs=0,
+    knn_label NULL, is_suspect false, and are nobody's neighbour.
 
     Output: (vec_id, label, n_nbrs, knn_label, n_agree, is_suspect).
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    base, report = _quantised_base(embeddings, n_planes, max_bucket_size,
-                                   "knn_label_noise")
-    sims = _bucket_pair_sims(base, k, mismatch_only=False).select(
+    buckets, report = _quantised_base(embeddings, n_planes,
+                                      max_bucket_size, "knn_label_noise")
+    sims = _bucket_pair_sims(buckets, k, mismatch_only=False).select(
         "vec_id", "nbr_id", "nbr_label",
         F.round(F.col("sim"), 6).alias("sim"),
     )
@@ -795,7 +767,7 @@ def knn_label_noise(
 
 def hard_negatives(
     embeddings: DataFrame, k: int = 3, n_planes: int = 4,
-    max_bucket_size: int | None = 10000,
+    max_bucket_size: int = 10000,
 ) -> DataFrame:
     """Contrastive hard-negative mining: for every vector, the k most
     similar vectors carrying a DIFFERENT label — the negatives that
@@ -807,26 +779,29 @@ def hard_negatives(
     :func:`lsh_bucket_topk_quantised` (exact int64 bucket keys), so the
     whole query is value-checkable cross-engine; similarity ranks on
     round(cos, 6) with id tiebreaks.  A vector whose bucket holds no
-    other-label member emits no rows (it has no mined negatives).
+    other-label member emits no rows (it has no mined negatives); NULL
+    embeddings and embeddings with a NULL element neither emit nor are
+    mined as negatives.
 
-    Scale shape (100 TB): one bucket shuffle, then the label-mismatch
-    filter and the pair scoring run inside a per-bucket Arrow kernel
-    (:func:`_bucket_pair_sims` — exact Catalyst-fold doubles; only the
+    Scale shape (100 TB): one bucket shuffle builds each bucket's member
+    list, then the label-mismatch filter and the pair scoring run inside
+    a per-bucket Arrow kernel (:func:`_bucket_pair_sims` — exact Catalyst-fold doubles; only the
     guaranteed round-6 top-k superset is emitted per vec, so the vec_id
     rank window sees ~k rows, not the whole bucket).  No global sort, no
     cross join.  ``max_bucket_size`` bounds the quadratic blowup of a
     degenerate bucket with the standard lazy cap + loud
-    ``BucketCapReport`` (``_bucket_cap_report`` on the result); ``None``
-    disables.  Size ``n_planes ~ log2(N / target_bucket_size)`` (4 fits
+    ``BucketCapReport`` (``_bucket_cap_report`` on the result); the cap
+    is always on (>= 1; pass one larger than the table for uncapped
+    output).  Size ``n_planes ~ log2(N / target_bucket_size)`` (4 fits
     the test corpus; a 10^9-vector corpus wants ~20).
 
     Output: (vec_id, label, rank, nbr_id, nbr_label, sim).
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    base, report = _quantised_base(embeddings, n_planes, max_bucket_size,
-                                   "hard_negatives")
-    sims = _bucket_pair_sims(base, k, mismatch_only=True).select(
+    buckets, report = _quantised_base(embeddings, n_planes,
+                                      max_bucket_size, "hard_negatives")
+    sims = _bucket_pair_sims(buckets, k, mismatch_only=True).select(
         "vec_id", "label", "nbr_id", "nbr_label",
         F.round(F.col("sim"), 6).alias("sim"),
     )

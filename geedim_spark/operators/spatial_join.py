@@ -7,15 +7,17 @@ cover-join pattern:
 1. explode each footprint's cell covering (pure Catalyst,
    :func:`geedim_spark.cells.col_cover_bbox`);
 2. equi-join on ``cell`` — broadcast when one side is a dim table (ROIs),
-   shuffle hash/sort-merge with optional **salting** for big-big joins;
+   shuffle hash/sort-merge with optional count-sized **salting** for
+   big-big joins;
 3. exact geometric refine (bbox predicate as Catalyst expressions; arbitrary
    polygons via a vectorised point-in-polygon pandas UDF);
 4. distinct on the key pair (cell coverings overlap between resolutions).
 
 Scale notes (10^12 rows): footprint density over popular cells is Zipfian —
 AQE skew-join (enabled in session.py) splits oversized partitions at runtime,
-and :func:`salted_join` pre-splits pathological keys by replicating the small
-side SALT times.  ROI-side joins broadcast (no shuffle at all); only
+and :func:`adaptive_salted_join` pre-splits pathological keys into salt
+buckets sized from each key's row count, replicating the small side only
+for those keys.  ROI-side joins broadcast (no shuffle at all); only
 tile<->tile self-joins (stencil halos) pay a shuffle, on the cell key.
 """
 
@@ -146,42 +148,6 @@ def filter_bounds_semi(
     if broadcast_ids:
         matched = F.broadcast(matched)
     return images.join(matched, "image_id", "left_semi")
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    salt: int = 8,
-    how: str = "inner",
-    salt_cols: list[str] | None = None,
-) -> DataFrame:
-    """Skew-safe equi-join: salt the big side, replicate the small side.
-
-    ``big`` gets ``pmod(hash(salt_cols), salt)`` (default: every hashable
-    column — map types are excluded, Spark can't hash them); ``small`` is
-    exploded ``salt`` times so every salted key still matches.  Use for
-    big-big joins where one key (hot H3 cell) dominates; AQE skew-join
-    handles moderate skew, this handles the pathological tail the north
-    rule calls out.  Deterministic: the salt is a pure row-content hash, so
-    results are identical across parallelism (rows identical in every salt
-    column share a bucket — harmless for correctness, and real tables carry
-    a distinct id).
-    """
-    if how not in ("inner", "left", "left_semi", "left_anti"):
-        raise ValueError(
-            f"salted_join supports inner/left-side joins only (got {how!r}): "
-            "the small side is replicated `salt` times, so right/full outer "
-            "joins would emit unmatched small rows once per salt bucket"
-        )
-    if salt_cols is None:
-        salt_cols = [c for c, t in big.dtypes if not t.startswith("map")]
-    big_s = big.withColumn("_salt", F.pmod(F.xxhash64(*salt_cols), F.lit(salt)))
-    small_s = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-    )
-    out = big_s.join(small_s, [key, "_salt"], how)
-    return out.drop("_salt")
 
 
 def adaptive_salted_join(

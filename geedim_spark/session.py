@@ -18,8 +18,8 @@ from pyspark.sql import SparkSession
 # maxRecordsPerBatch below for the actual sizing math.
 _DEFAULTS = {
     # AQE: runtime coalescing + skew-join splitting (north rule requires
-    # explicit skew handling; salting in operators/spatial_join.py is the
-    # belt, AQE is the braces).
+    # explicit skew handling; spatial_join.adaptive_salted_join's
+    # count-sized salting is the belt, AQE is the braces).
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     # Coalesce to the TARGET SIZE, not the core count: with the default

@@ -107,11 +107,37 @@ def test_lsh_bucket_cap_bounds_giant_cluster(spark):
 
 
 def test_lsh_bucket_cap_disabled_and_default_noop(spark, docs):
-    """Default cap leaves normal corpora untouched (oracle parity)."""
+    """The cap cannot be switched off (None would make ``_bn > NULL``
+    drop every bucket silently), and the default cap leaves normal
+    corpora untouched: same pairs as a cap larger than the table."""
+    for bad in (None, 0):
+        with pytest.raises(ValueError, match="max_bucket_size"):
+            dedup.minhash_lsh_pairs(docs, n_hashes=16, bands=4,
+                                    max_bucket_size=bad)
     got = dedup.minhash_lsh_pairs(docs, n_hashes=16, bands=4)
     raw = dedup.minhash_lsh_pairs(docs, n_hashes=16, bands=4,
-                                  max_bucket_size=None)
+                                  max_bucket_size=10**9)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, raw.collect()))
+
+
+def test_lsh_bucket_cap_counts_null_member_rows(spark):
+    """Buckets are sized by row count: a NULL-doc_id copy of a 3-doc
+    cluster makes every band bucket 4 rows, over a cap of 3, even though
+    collect_list leaves the NULL out of the member list."""
+    import warnings
+
+    text = "the same boilerplate paragraph repeated across many pages " * 3
+    df = spark.createDataFrame(
+        [(1, text), (2, text), (3, text), (None, text)],
+        "doc_id long, text string")
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        out = dedup.minhash_lsh_pairs(df, n_hashes=16, bands=4,
+                                      max_bucket_size=3)
+        pairs = out.collect()
+        got = out._bucket_cap_report.wait()
+    assert got == {"rows_dropped": 16, "largest_bucket": 4}  # 4 rows x 4 bands
+    assert pairs == []
 
 
 def test_dup_components_chain_and_singletons(spark):

@@ -320,6 +320,10 @@ def test_label_noise_and_hard_negatives_mega_bucket_cap(spark):
         assert capped._bucket_cap_report is not None
     finally:
         sc.setJobGroup("", "")
+    # one shuffle by bucket: no size aggregate + broadcast anti-join, no cache
+    plan = sc._jvm.PythonSQLUtils.explainString(
+        capped._jdf.queryExecution(), "extended")
+    assert "LeftAnti" not in plan and "InMemoryRelation" not in plan
     got = capped.collect()
     rep = capped._bucket_cap_report.wait()
     assert rep["rows_dropped"] == n_dup
@@ -357,8 +361,7 @@ def test_near_dup_base_kernel_matches_catalyst(spark):
 
     n_planes = 8
     planes = sim.lsh_signature(16, n_planes)
-    out = sim.near_dup_pairs(emb, threshold=0.99, n_planes=n_planes,
-                             max_bucket_size=None)
+    out = sim.near_dup_pairs(emb, threshold=0.99, n_planes=n_planes)
     # pair-level parity: kernel-based pairs == Catalyst-fold pairs
     e = emb.select("vec_id", sim._as_double(F.col("embedding")).alias("e"),
                    ).withColumn("bucket", sim.lsh_bucket(F.col("e"), planes)
@@ -393,28 +396,62 @@ def test_ann_lsh_quantised_kernel_matches_catalyst(spark, emb):
 
 
 def test_embed_base_kernel_null_embedding_rows(spark):
-    """A NULL embedding row must keep the r5 Catalyst convention (bucket
-    0, NULL norm -> dropped by the exact-cosine filters), not crash the
-    kernel — for both the float-plane and quantised-plane paths."""
+    """A NULL embedding row, and a row with one NULL element, must keep
+    the r5 Catalyst convention for NULL rows (bucket 0, NULL e/norm ->
+    dropped by the exact-cosine filters) and not crash a kernel — for the
+    float-plane path (near_dup_pairs) and the quantised-plane paths
+    (lsh_bucket_topk_quantised, knn_label_noise, hard_negatives).  The
+    NULL-element row copies a vector whose float bucket (all 8 sign bits)
+    is populated, where a NaN-for-NULL element would land it."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import functions as F
 
+    schema = "vec_id long, embedding array<float>, label int"
     rng = np.random.default_rng(5)
-    rows = [{"vec_id": i,
+    rows = [{"vec_id": i, "label": i % 3,
              "embedding": rng.standard_normal(8).astype(np.float32).tolist()}
             for i in range(20)]
-    emb = spark.createDataFrame(pd.DataFrame(rows),
-                                "vec_id long, embedding array<float>")
-    nulls = spark.createDataFrame(
-        [(999, None)], "vec_id long, embedding array<float>")
+    # all eight float-plane projections positive: bucket 255
+    v = np.linalg.solve(sim.lsh_signature(8, 8), np.ones(8)).astype(np.float32)
+    rows += [{"vec_id": 996, "label": 0, "embedding": (2 * v).tolist()},
+             {"vec_id": 997, "label": 1, "embedding": v.tolist()}]
+    emb = spark.createDataFrame(pd.DataFrame(rows)[["vec_id", "embedding",
+                                                    "label"]], schema)
+    hole = v.tolist()
+    hole[3] = None
+    nulls = spark.createDataFrame([(999, None, 0), (998, hole, 2)], schema)
     both = emb.unionByName(nulls)
+    null_ids = {998, 999}
+
+    staged = {r["vec_id"]: r for r in sim._embed_base_kernel(
+        both, lambda E: sim._np_float_buckets(E, sim.lsh_signature(8, 8)),
+        keep=("label",)).collect()}
+    assert staged[997]["bucket"] == 255
+    for i in null_ids:
+        assert (staged[i]["bucket"], staged[i]["e"], staged[i]["nrm"]) == (
+            0, None, None)
+        assert staged[i]["label"] == (0 if i == 999 else 2)
+
     dup = emb.filter("vec_id = 0").select(
-        (F.col("vec_id") + 100).alias("vec_id"), "embedding")
+        (F.col("vec_id") + 100).alias("vec_id"), "embedding", "label")
     pairs = sim.near_dup_pairs(both.unionByName(dup), threshold=0.99)
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-    assert (0, 100) in got
-    assert not any(999 in p for p in got)
+    assert {(0, 100), (996, 997)} <= got
+    assert not any(set(p) & null_ids for p in got)
+
     topk = sim.lsh_bucket_topk_quantised(both, n_queries=3, k=5)
     out = topk.collect()
-    assert out and all(r["neighbor_id"] != 999 for r in out)
+    assert out and all(r["neighbor_id"] not in null_ids for r in out)
+
+    noise = {r["vec_id"]: r for r in
+             sim.knn_label_noise(both, k=3).collect()}
+    for i in null_ids:
+        assert noise[i]["n_nbrs"] == 0 and noise[i]["knn_label"] is None
+        assert not noise[i]["is_suspect"]
+    clean = {r["vec_id"]: r for r in sim.knn_label_noise(emb, k=3).collect()}
+    assert {i: r for i, r in noise.items() if i not in null_ids} == clean
+
+    hard = sorted(map(tuple, sim.hard_negatives(both, k=3).collect()))
+    assert not any(r[0] in null_ids or r[3] in null_ids for r in hard)
+    assert hard == sorted(map(tuple, sim.hard_negatives(emb, k=3).collect()))

@@ -65,24 +65,6 @@ def test_filter_bounds_semi(spark):
     assert set(kept.columns) == set(imgs.columns)
 
 
-def test_salted_join_equals_plain_join(spark):
-    imgs = sj.cover_cells(
-        synth.images_meta_df(spark, 150).select("image_id", "x0", "y0", "x1", "y1"),
-        "x0", "y0", "x1", "y1",
-    ).select("image_id", "cell")
-    rois = sj.cover_cells(
-        synth.rois_df(spark, 5), "rx0", "ry0", "rx1", "ry1"
-    ).select("roi_id", "cell")
-    plain = sorted(
-        map(tuple, imgs.join(rois, "cell").select("image_id", "roi_id").collect())
-    )
-    salted = sorted(
-        map(tuple, sj.salted_join(imgs, rois, "cell", salt=4)
-            .select("image_id", "roi_id").collect())
-    )
-    assert plain == salted
-
-
 def test_geo_filter_bounds_across_antimeridian(spark):
     """Footprints and an ROI straddling ±180°: the geo join finds the
     wrap matches the planar grid structurally cannot."""
