@@ -30,3 +30,7 @@ Subpackages
 __version__ = "0.1.0"
 
 from geedim_spark.session import get_session  # noqa: F401
+from geedim_spark.kernels import install_zip_cache_guard
+
+# patches a Python worker on its first geedim_spark import; no-op on a driver
+install_zip_cache_guard()

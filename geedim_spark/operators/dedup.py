@@ -23,6 +23,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from geedim_spark.kernels import map_batches
+
 # Mersenne prime modulus for the permutation family.  Coefficients and
 # reduced hashes stay < 2^31 so a*h + b < 2^62 — no int64 overflow in either
 # engine (DuckDB errors on BIGINT overflow; Spark wraps silently).
@@ -270,9 +272,8 @@ def minhash_sig_df(
             "sig": [mins[:, i] for i in range(len(doc_idx))],
         })
 
-    return documents.select("doc_id", "text").mapInPandas(
-        lambda it: (_batch(p) for p in it), schema="doc_id long, sig array<long>"
-    )
+    return map_batches(documents.select("doc_id", "text"),
+                       "doc_id long, sig array<long>", _batch)
 
 
 class BucketCapReport:
@@ -710,9 +711,8 @@ def simhash_df(documents: DataFrame, bits: int = 16, n: int = 5) -> DataFrame:
         )
         return pd.DataFrame({"doc_id": pdf["doc_id"], "simhash": vals})
 
-    return documents.select("doc_id", "text").mapInPandas(
-        lambda it: (_batch(p) for p in it), schema="doc_id long, simhash long"
-    )
+    return map_batches(documents.select("doc_id", "text"),
+                       "doc_id long, simhash long", _batch)
 
 
 def simhash(text: Column, bits: int = 16, n: int = 5) -> Column:
@@ -1132,11 +1132,14 @@ def fuzzy_decontam(
     def _verify(pdf: pd.DataFrame) -> pd.DataFrame:
         inter = np.empty(len(pdf), dtype=np.int64)
         union = np.empty(len(pdf), dtype=np.int64)
-        # bounded memo of shingle sets (a set holds ~len(text) short
-        # strings — far heavier than the text); Arrow batches are small
-        # (maxRecordsPerBatch) but clear defensively so a wide batch of
-        # huge documents cannot pin O(batch x doc) sets at once
+        # bounded memo of corpus shingle sets (a set holds ~len(text)
+        # short strings — far heavier than the text); Arrow batches are
+        # small (maxRecordsPerBatch) but clear defensively so a wide batch
+        # of huge documents cannot pin O(batch x doc) sets at once.  The
+        # benchmark side is a small broadcast set repeated on every row, so
+        # it keeps its own memo that the corpus clear() does not evict.
         cache: dict = {}
+        bench_cache: dict = {}
         for i, (ta, tb) in enumerate(zip(pdf["_ta"], pdf["_tb"])):
             if len(cache) > 1024:
                 cache.clear()
@@ -1144,10 +1147,10 @@ def fuzzy_decontam(
             if a is None:
                 a = _sh_set(ta)
                 cache[ta] = a
-            b = cache.get(tb)
+            b = bench_cache.get(tb)
             if b is None:
                 b = _sh_set(tb)
-                cache[tb] = b
+                bench_cache[tb] = b
             ni = len(a & b)
             inter[i] = ni
             union[i] = len(a) + len(b) - ni
@@ -1156,8 +1159,8 @@ def fuzzy_decontam(
             "n_intersect": inter, "n_union": union,
         })
 
-    out = j.select("doc_id", "bench_id", "_ta", "_tb").mapInPandas(
-        lambda it: (_verify(p) for p in it), schema=kschema)
+    out = map_batches(
+        j.select("doc_id", "bench_id", "_ta", "_tb"), kschema, _verify)
     return out.select(
         "doc_id", "bench_id", "n_intersect", "n_union",
         (F.col("n_intersect") * 1000

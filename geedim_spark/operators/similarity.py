@@ -16,6 +16,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from geedim_spark.kernels import map_batches, map_rows
+
 
 def _as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -211,9 +213,9 @@ def _embed_base_kernel(
                              "bucket": bucket, "nrm": nrm})
 
     no_null_elems = F.forall("embedding", lambda x: x.isNotNull())
-    return embeddings.select(
+    return map_batches(embeddings.select(
         *cols, F.when(no_null_elems, F.col("embedding")).alias("embedding")
-    ).mapInPandas(lambda it: (_batch(p) for p in it), kschema)
+    ), kschema, _batch)
 
 
 def embedding_dim(embeddings: DataFrame) -> int:
@@ -464,17 +466,16 @@ def ivf_topk(
     spark = embeddings.sparkSession
     bcent = spark.sparkContext.broadcast(cent)
 
-    def _assign(it):
-        for pdf in it:
-            V = np.stack(pdf["embedding"].values).astype(np.float64)
-            V = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-            pdf = pdf[["vec_id", "embedding"]].copy()
-            pdf["cluster"] = (V @ bcent.value.T).argmax(axis=1)
-            yield pdf
+    def _assign(pdf):
+        V = np.stack(pdf["embedding"].values).astype(np.float64)
+        V = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
+        pdf = pdf[["vec_id", "embedding"]].copy()
+        pdf["cluster"] = (V @ bcent.value.T).argmax(axis=1)
+        return pdf
 
-    assigned = embeddings.select("vec_id", "embedding").mapInPandas(
-        _assign, schema="vec_id long, embedding array<float>, cluster int"
-    )
+    assigned = map_batches(
+        embeddings.select("vec_id", "embedding"),
+        "vec_id long, embedding array<float>, cluster int", _assign)
     emb = assigned.withColumn("e", _as_double(F.col("embedding"))).drop("embedding")
 
     # queries probe their nprobe nearest centroid lists
@@ -616,8 +617,6 @@ def _bucket_pair_sims(
     :func:`_quantised_base`.  Members with a NULL ``e`` are skipped.
     Output: (vec_id, label, nbr_id, nbr_label, sim RAW double).
     """
-    from geedim_spark.kernels import map_rows
-
     label_type = (buckets.schema["_members"].dataType.elementType["label"]
                   .dataType.simpleString())
     schema = (f"vec_id long, label {label_type}, nbr_id long, "

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from geedim_spark import cells
+from geedim_spark.kernels import map_batches
 
 
 def cover_cells(
@@ -247,28 +248,25 @@ def nearest_roi(images: DataFrame, rois: DataFrame) -> DataFrame:
     id_t = images.schema["image_id"].dataType.simpleString()
     rid_t = rois.schema["roi_id"].dataType.simpleString()
 
-    def _assign(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            # one multiply + one add per (image, roi) — the identical
-            # IEEE sequence the r5 Catalyst struct fold evaluated
-            # per-element ~m times per row in the interpreter
-            dx = pdf["cx"].to_numpy()[:, None] - ecx[None, :]
-            dy = pdf["cy"].to_numpy()[:, None] - ecy[None, :]
-            d2 = dx * dx + dy * dy
-            best = d2.argmin(axis=1)
-            yield pd.DataFrame({
-                "image_id": pdf["image_id"],
-                "roi_id": rids[best],
-                "d2": d2[np.arange(len(pdf)), best],
-            })
+    def _assign(pdf):
+        # one multiply + one add per (image, roi) — the identical IEEE
+        # sequence the r5 Catalyst struct fold evaluated per-element ~m
+        # times per row in the interpreter
+        dx = pdf["cx"].to_numpy()[:, None] - ecx[None, :]
+        dy = pdf["cy"].to_numpy()[:, None] - ecy[None, :]
+        d2 = dx * dx + dy * dy
+        best = d2.argmin(axis=1)
+        return pd.DataFrame({
+            "image_id": pdf["image_id"],
+            "roi_id": rids[best],
+            "d2": d2[np.arange(len(pdf)), best],
+        })
 
     cx = (F.col("x0") + F.col("x1")) / 2
     cy = (F.col("y0") + F.col("y1")) / 2
-    scored = images.select(
-        "image_id", cx.alias("cx"), cy.alias("cy")
-    ).mapInPandas(_assign, schema=f"image_id {id_t}, roi_id {rid_t}, d2 double")
+    scored = map_batches(
+        images.select("image_id", cx.alias("cx"), cy.alias("cy")),
+        f"image_id {id_t}, roi_id {rid_t}, d2 double", _assign)
     # round stays in Catalyst: the JVM HALF_UP decimal rounding is the
     # oracle-checked form (replicating it bit-exactly in numpy is not)
     return scored.select(

@@ -15,6 +15,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from geedim_spark.kernels import map_batches
+
 # tiny common-word lists for the n-gram/stopword language heuristic
 _LANG_MARKERS = {
     "en": ["the", "and", "of", "to", "in", "is", "that", "it", "for", "was"],
@@ -585,8 +587,7 @@ def dsir_weights(
                              "bucket": out_bucket, "k": out_k})
 
     per_doc = (
-        staged.mapInPandas(lambda it: (_bucket_batch(p) for p in it),
-                           schema=kschema)
+        map_batches(staged, kschema, _bucket_batch)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     model = per_doc.filter(F.col("bucket").isNotNull()).groupBy("bucket").agg(
@@ -776,8 +777,7 @@ def tfidf_top_terms(documents: DataFrame, k: int = 5) -> DataFrame:
     # tf is one row per (doc, term); df derives from it directly — one
     # corpus pass feeds both aggregates, and the frame both sides consume
     # is persisted once (far smaller than the corpus).
-    tf = staged.mapInPandas(
-        lambda it: (_tf_batch(p) for p in it), schema=kschema).persist()
+    tf = map_batches(staged, kschema, _tf_batch).persist()
     df_ = tf.groupBy("term").agg(
         F.count(F.lit(1)).cast("long").alias("df"))
     n_docs = documents.agg(

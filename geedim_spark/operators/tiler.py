@@ -20,6 +20,7 @@ result back; the per-image tile-grid explode is pure Catalyst
 
 from __future__ import annotations
 
+from functools import lru_cache
 from itertools import product
 
 import numpy as np
@@ -33,6 +34,7 @@ EE_MAX_TILE_BANDS = 1024   # (tile.py:113)
 _BLOCK = 512               # GeoTIFF block size (tile.py:250)
 
 
+@lru_cache
 def tile_shape(
     count: int,
     height: int,
@@ -47,6 +49,9 @@ def tile_shape(
     Same greedy algorithm + bounds as tile.py:218-270: start from the image
     shape; for each axis in (band, row, col) order, shrink to the largest
     block-multiple that fits the remaining byte budget.
+
+    Memoized: the per-image kernels call it once per image, almost always
+    with the same arguments.  Invalid caps raise on every call.
     """
     if max_tile_size > EE_MAX_TILE_SIZE:
         raise ValueError(f"'max_tile_size' must be <= {EE_MAX_TILE_SIZE} MB.")

@@ -36,6 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from geedim_spark.kernels import map_batches
 from geedim_spark.operators.sampling import hash_bucket
 
 MANIFEST_SCHEMA = (
@@ -197,34 +198,31 @@ def read_wds_shards(spark: SparkSession, out_dir: str) -> DataFrame:
     '/'->'_' key sanitisation of the writer is not reversed — keys are
     identifiers, and the sanitised form is what the tar IS."""
 
-    def _parse(it):
-        for pdf in it:
-            out = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                shard = int(os.path.basename(path)[len("shard-"):-len(".tar")])
-                with tarfile.open(fileobj=io.BytesIO(bytes(content))) as tf:
-                    cur: dict[str, dict] = {}
-                    for m in tf.getmembers():
-                        key, ext = m.name.rsplit(".", 1)
-                        cur.setdefault(key, {})[ext] = tf.extractfile(m).read()
-                    for key, parts in cur.items():
-                        out.append({
-                            "shard": shard,
-                            "key": key,
-                            "data": parts.get("img", b""),
-                            "caption": parts.get("txt", b"").decode("utf-8"),
-                            "meta": parts.get("json", b"{}").decode("utf-8"),
-                        })
-            yield pd.DataFrame(
-                out, columns=["shard", "key", "data", "caption", "meta"]
-            )
+    def _parse(pdf):
+        out = []
+        for path, content in zip(pdf["path"], pdf["content"]):
+            shard = int(os.path.basename(path)[len("shard-"):-len(".tar")])
+            with tarfile.open(fileobj=io.BytesIO(bytes(content))) as tf:
+                cur: dict[str, dict] = {}
+                for m in tf.getmembers():
+                    key, ext = m.name.rsplit(".", 1)
+                    cur.setdefault(key, {})[ext] = tf.extractfile(m).read()
+                for key, parts in cur.items():
+                    out.append({
+                        "shard": shard,
+                        "key": key,
+                        "data": parts.get("img", b""),
+                        "caption": parts.get("txt", b"").decode("utf-8"),
+                        "meta": parts.get("json", b"{}").decode("utf-8"),
+                    })
+        return pd.DataFrame(
+            out, columns=["shard", "key", "data", "caption", "meta"]
+        )
 
     tars = spark.read.format("binaryFile").load(
         os.path.join(out_dir, "shard-*.tar")
     )
-    return tars.select("path", "content").mapInPandas(
-        _parse, schema=_SAMPLE_SCHEMA
-    )
+    return map_batches(tars.select("path", "content"), _SAMPLE_SCHEMA, _parse)
 
 
 def verify_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -236,20 +234,18 @@ def verify_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
         os.path.join(out_dir, "shard-*.tar")
     )
 
-    def _hash(it):
-        for pdf in it:
-            yield pd.DataFrame({
-                "path": pdf["path"].map(
-                    lambda p: p[len("file:"):] if p.startswith("file:") else p
-                ),
-                "actual_sha256": pdf["content"].map(
-                    lambda c: hashlib.sha256(bytes(c)).hexdigest()
-                ),
-            })
+    def _hash(pdf):
+        return pd.DataFrame({
+            "path": pdf["path"].map(
+                lambda p: p[len("file:"):] if p.startswith("file:") else p
+            ),
+            "actual_sha256": pdf["content"].map(
+                lambda c: hashlib.sha256(bytes(c)).hexdigest()
+            ),
+        })
 
-    hashed = tars.select("path", "content").mapInPandas(
-        _hash, schema="path string, actual_sha256 string"
-    )
+    hashed = map_batches(tars.select("path", "content"),
+                         "path string, actual_sha256 string", _hash)
     return manifest.join(hashed, "path", "left").select(
         "shard",
         (F.col("actual_sha256") == F.col("tar_sha256")).alias("ok"),

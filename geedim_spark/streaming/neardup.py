@@ -30,6 +30,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from geedim_spark.kernels import install_zip_cache_guard
 from geedim_spark.operators import dedup
 from geedim_spark.streaming.stateful import DOCS_SCHEMA
 
@@ -39,6 +40,8 @@ _STATE_SCHEMA = "ids array<long>, overflow boolean"
 
 def _near_dup_fn(max_bucket_size: int):
     def fn(key, pdfs, state: GroupState):
+        # a global reference: unpickling it imports geedim_spark in the worker
+        install_zip_cache_guard()
         if state.exists:
             ids, overflow = list(state.get[0]), bool(state.get[1])
         else:

@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from geedim_spark import codecs
+from geedim_spark.kernels import map_batches
 
 SCALE = 10.0  # metres / pixel
 EPOCH = "2024-01-01 00:00:00"
@@ -178,9 +179,7 @@ def images_df(
     base = _scalar_base(spark, n, w, h)
     if scalar_filter:
         base = base.filter(scalar_filter)
-    blobs = base.mapInPandas(
-        lambda it: (_gen_bytes_batch(pdf) for pdf in it), schema=_GEN_SCHEMA
-    )
+    blobs = map_batches(base, _GEN_SCHEMA, _gen_bytes_batch)
     return _decorate_meta(blobs, w, h)
 
 
@@ -219,10 +218,9 @@ def scores_df(spark: SparkSession, n: int, w: int = 40, h: int = 40) -> DataFram
         out["score_bytes"] = blobs
         return out
 
-    return base.mapInPandas(
-        lambda it: (_gen(p) for p in it),
-        schema="i long, image_id string, s_px int, w int, h int, score_bytes binary",
-    )
+    return map_batches(
+        base, "i long, image_id string, s_px int, w int, h int, score_bytes binary",
+        _gen)
 
 
 def probs_df(spark: SparkSession, n: int, w: int = 40, h: int = 40) -> DataFrame:
@@ -256,10 +254,9 @@ def probs_df(spark: SparkSession, n: int, w: int = 40, h: int = 40) -> DataFrame
         out["prob_bytes"] = blobs
         return out
 
-    return base.mapInPandas(
-        lambda it: (_gen(p) for p in it),
-        schema="i long, image_id string, p_px int, w int, h int, prob_bytes binary",
-    )
+    return map_batches(
+        base, "i long, image_id string, p_px int, w int, h int, prob_bytes binary",
+        _gen)
 
 
 def cdi_df(spark: SparkSession, n: int, w: int = 40, h: int = 40) -> DataFrame:
@@ -287,10 +284,9 @@ def cdi_df(spark: SparkSession, n: int, w: int = 40, h: int = 40) -> DataFrame:
         out["cdi_bytes"] = blobs
         return out
 
-    return base.mapInPandas(
-        lambda it: (_gen(p) for p in it),
-        schema="i long, image_id string, d_px int, w int, h int, cdi_bytes binary",
-    )
+    return map_batches(
+        base, "i long, image_id string, d_px int, w int, h int, cdi_bytes binary",
+        _gen)
 
 
 def rois_df(spark: SparkSession, m: int) -> DataFrame:

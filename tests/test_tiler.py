@@ -61,6 +61,25 @@ def test_tile_shape_validation():
         tile_shape(1, 10, 10, max_tile_bands=1025)
 
 
+def test_tile_shape_memo_matches_uncached():
+    """The memoized tile_shape returns the uncached result on a miss and on
+    a hit, and invalid caps raise on every call (exceptions are not cached)."""
+    grid = itertools.product(
+        [1, 3, 200], [1, 40, 513, 4000], [1, 40, 1025, 9000],
+        ["uint8", "int16", "uint16", "float32", "float64"],
+        [0.5, 1, 4, 32], [21, 10000], [1, 1024],
+    )
+    for count, h, w, dtype, mts, mtd, mtb in grid:
+        want = tile_shape.__wrapped__(count, h, w, dtype, mts, mtd, mtb)
+        for _ in range(2):
+            assert tile_shape(count, h, w, dtype, mts, mtd, mtb) == want
+    for _ in range(2):
+        with pytest.raises(ValueError, match="max_tile_size"):
+            tile_shape(1, 10, 10, max_tile_size=33)
+        with pytest.raises(ValueError, match="max_tile_dim"):
+            tile_shape(1, 10, 10, max_tile_dim=10001)
+
+
 def test_explode_tiles_coverage(spark):
     """Port of test_tile.py:169-202 continuity/coverage, on the DataFrame op.
 
