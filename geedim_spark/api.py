@@ -114,6 +114,11 @@ class Collection:
         semantics               saturates at the clamp; opt in explicitly
         ======================  =============================================
 
+        Both routes of this method run the same (tr, tc) reducer
+        (``composite._reduce_tiles``); the two q-mosaic forms differ only
+        in where each input's CLOUD_DIST tile comes from (the halo join,
+        or an EDT of the tile itself).
+
         Returns the raw tiled frame (tr, tc, bytes, n_inputs) — assemble
         with ``export_ops.assemble_image`` / the sinks, which is how the
         driver queries consume it.

@@ -1,8 +1,9 @@
 """Enum vocabularies — parity with /root/reference/geedim/enums.py.
 
 The reference exposes CompositeMethod / CloudMaskMethod / ResamplingMethod /
-ExportType / SplitType (enums.py:40-170); the operators accepts plain strings
-everywhere but validates against these canonical sets.
+ExportType / SplitType (enums.py:40-170).  These are the canonical value
+sets for callers; the operators take plain strings and check them against
+their own lists (e.g. ``composite.METHODS``), not against these enums.
 """
 
 from __future__ import annotations

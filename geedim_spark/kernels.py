@@ -6,10 +6,13 @@ numpy kernel once per input row, and turn the rows the kernel emits back
 into an Arrow batch of a declared schema.  :func:`map_rows` owns that
 plumbing once, so an operator is just its column list, its output schema
 and its per-row function.  Batch-vectorised kernels use
-:func:`map_batches`, which :func:`map_rows` is built on.
+:func:`map_batches`, which :func:`map_rows` is built on.  Grouped kernels
+(composite stacks, halo tiles, per-image and per-shard file sinks) use
+:func:`map_groups`, the same contract over one ``groupBy`` group.
 
-Both install :func:`install_zip_cache_guard` in the worker, a fix for a
-fixed per-task cost that every Python kernel task pays.
+All of them install :func:`install_zip_cache_guard` in the worker, a fix
+for a fixed per-task cost that every Python kernel task pays.  This is the
+only module that calls ``mapInPandas`` / ``applyInPandas``.
 """
 
 from __future__ import annotations
@@ -126,3 +129,22 @@ def map_rows(
         return pd.DataFrame(rows, columns=names)
 
     return map_batches(df.select(*cols), st, _rows)
+
+
+def map_groups(
+    df: DataFrame,
+    keys: list[str],
+    schema: str | StructType,
+    fn: Callable[[pd.DataFrame], Iterable[tuple]],
+) -> DataFrame:
+    """Run ``fn(pdf)`` once per group of ``df.groupBy(*keys)``
+    (``applyInPandas``; ``pdf`` holds every column of ``df``) and return the
+    tuples it yields, in ``schema`` field order, as a frame of ``schema``."""
+    st = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    names = st.fieldNames()
+
+    def _group(pdf):
+        install_zip_cache_guard()
+        return pd.DataFrame(list(fn(pdf)), columns=names)
+
+    return df.groupBy(*keys).applyInPandas(_group, schema=st)

@@ -17,9 +17,9 @@ medoid.py, enums.py:40-63):
   min/max of inputs (collection.py:710-724).
 
 Spark shape: a pixel stack is a group.  For co-registered collections the
-group key is the tile coordinate; ``applyInPandas`` stacks co-located tiles
-(Arrow batches) and reduces with numpy.  Determinism across parallelism:
-ties and "first" are resolved by explicit (sort_key, image_id) total order —
+group key is the tile coordinate; a grouped kernel (``kernels.map_groups``)
+stacks co-located tiles and reduces them with numpy.  Determinism across
+parallelism: ties and "first" are resolved by explicit (sort_key, image_id) total order —
 never partition order (SURVEY §7.3 hard-part 6).
 """
 
@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geedim_spark import codecs
-from geedim_spark.kernels import map_rows
+from geedim_spark.kernels import map_groups, map_rows
 from geedim_spark.operators import masks
 from geedim_spark.operators.tiler import tile_windows
 
@@ -230,15 +230,16 @@ def composite_collection(
 ) -> DataFrame:
     """Composite co-registered images (same w/h grid) per group.
 
-    Groups (default: one global group) are stacked inside ``applyInPandas``;
+    Groups (default: one global group) are stacked in one grouped kernel;
     order within the stack is (sort_key desc, image_id asc) — explicit total
     order so results are identical across parallelism.  Output pixels are
-    float64 re-encoded raw; NaN marks all-masked pixels.
+    float64 re-encoded raw; NaN marks all-masked pixels.  ``group_id`` is
+    the group column cast to string.
     """
     mask_opts = mask_opts or {}
     src = images.withColumn(
         "group_id",
-        F.col(group_col) if group_col else F.lit("all"),
+        F.col(group_col).cast("string") if group_col else F.lit("all"),
     )
     if "sort_key" not in src.columns:
         src = src.withColumn("sort_key", F.col("time_start").cast("double"))
@@ -246,12 +247,8 @@ def composite_collection(
         "group_id", "image_id", "bytes", "collection", "sort_key", "time_start"
     )
 
-    def _comp(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(
-            ["sort_key", "image_id"], ascending=[False, True], ignore_index=True
-        )
-        n_total = len(pdf)
-        pdf = _cap_medoid_stack(pdf, method, medoid_max_stack, "group")
+    def _comp(pdf: pd.DataFrame):
+        n_total, pdf = _stack_order(pdf, method, medoid_max_stack, "group")
         stacks, valids, dists = [], [], []
         for buf, coll, ts in zip(pdf["bytes"], pdf["collection"], pdf["time_start"]):
             px, _, m = masks.image_masks(buf, coll, ts, **mask_opts)
@@ -262,20 +259,15 @@ def composite_collection(
                     m["CLOUDLESS_MASK"], scale, max_cloud_dist,
                     fill=m["FILL_MASK"],
                 ))
-        stack = np.stack(stacks)
-        valid = np.stack(valids)
         cd = np.stack(dists) if dists else None
-        comp, out_valid = composite_stack(stack, valid, method, cd,
-                                          medoid_metric=medoid_metric)
-        comp = np.where(out_valid[None, :, :], comp, np.nan)
-        return pd.DataFrame([{
-            "group_id": pdf["group_id"].iloc[0],
-            "bytes": codecs.encode_raw(comp.astype(np.float64)),
-            "n_inputs": n_total,
-            "n_used": len(pdf),
-        }])
+        yield (
+            pdf["group_id"].iloc[0],
+            _encode_composite(np.stack(stacks), np.stack(valids), method, cd,
+                              medoid_metric),
+            n_total, len(pdf),
+        )
 
-    return src.groupBy("group_id").applyInPandas(_comp, schema=_COMP_SCHEMA)
+    return map_groups(src, ["group_id"], _COMP_SCHEMA, _comp)
 
 
 _PERIOD_FMT = {
@@ -294,8 +286,8 @@ def composite_by_period(
     (e.g. '2024-01' for month).
 
     Scale shape: identical to :func:`composite_collection` — periods
-    PARTITION the collection, so each applyInPandas group holds only that
-    period's images and different periods composite in parallel; no
+    PARTITION the collection, so each group holds only that period's
+    images and different periods composite in parallel; no
     global state.  For per-period stacks larger than a task, use
     :func:`composite_tiled` with the period key added to the tile key.
     """
@@ -333,6 +325,23 @@ def _cap_medoid_stack(
         RuntimeWarning, stacklevel=2,
     )
     return pdf.iloc[:medoid_max_stack]
+
+
+def _stack_order(pdf, method, medoid_max_stack, unit):
+    """(group size, group rows in (sort_key desc, image_id asc) stack order
+    with the medoid cap applied)."""
+    pdf = pdf.sort_values(
+        ["sort_key", "image_id"], ascending=[False, True], ignore_index=True
+    )
+    return len(pdf), _cap_medoid_stack(pdf, method, medoid_max_stack, unit)
+
+
+def _encode_composite(stack, valid, method, clouddist, medoid_metric) -> bytes:
+    """Reduce a sorted stack to raw float64 bytes, NaN where all masked."""
+    comp, out_valid = composite_stack(stack, valid, method, clouddist,
+                                      medoid_metric=medoid_metric)
+    comp = np.where(out_valid[None, :, :], comp, np.nan)
+    return codecs.encode_raw(comp.astype(np.float64))
 
 
 _TILED_SCHEMA = "tr int, tc int, bytes binary, n_inputs int"
@@ -428,36 +437,39 @@ def composite_tiled(
     keeps reporting the ORIGINAL group size so the truncation is visible
     downstream (n_inputs > medoid_max_stack == truncated).
     """
-    mask_opts = mask_opts or {}
-    tiles = _pixel_tiles(images, tile_h, tile_w, mask_opts)
+    tiles = _pixel_tiles(images, tile_h, tile_w, mask_opts or {})
+    return _reduce_tiles(tiles, method, scale, max_cloud_dist,
+                         medoid_metric, medoid_max_stack)
 
-    def _reduce(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(
-            ["sort_key", "image_id"], ascending=[False, True], ignore_index=True
-        )
-        n_total = len(pdf)
-        pdf = _cap_medoid_stack(pdf, method, medoid_max_stack, "tile group")
+
+def _reduce_tiles(tiles, method, scale, max_cloud_dist, medoid_metric="sed",
+                  medoid_max_stack=64) -> DataFrame:
+    """Stage 2 of the tile-keyed composites: reduce each (tr, tc) group.
+    q-mosaic reads each input's CLOUD_DIST tile from ``dist_bytes`` when
+    the frame carries it (the halo join), else takes the per-tile EDT."""
+    has_dist = "dist_bytes" in tiles.columns
+
+    def _reduce(pdf: pd.DataFrame):
+        n_total, pdf = _stack_order(pdf, method, medoid_max_stack, "tile group")
         stack = np.stack([codecs.decode(bytes(b)) for b in pdf["tile_bytes"]])
         codes = np.stack(
             [codecs.decode(bytes(b))[0] for b in pdf["valid_bytes"]]
         )
-        valid = codes >= 2
         cd = None
-        if method == "q-mosaic":
+        if has_dist:
+            cd = np.stack([codecs.decode(bytes(b))[0] for b in pdf["dist_bytes"]])
+        elif method == "q-mosaic":
             cd = np.stack([
                 masks.cloud_dist(c >= 2, scale, max_cloud_dist, fill=c >= 1)
                 for c in codes
             ])
-        comp, out_valid = composite_stack(stack, valid, method, cd,
-                                          medoid_metric=medoid_metric)
-        comp = np.where(out_valid[None, :, :], comp, np.nan)
-        return pd.DataFrame([{
-            "tr": int(pdf["tr"].iloc[0]), "tc": int(pdf["tc"].iloc[0]),
-            "bytes": codecs.encode_raw(comp.astype(np.float64)),
-            "n_inputs": n_total,
-        }])
+        yield (
+            int(pdf["tr"].iloc[0]), int(pdf["tc"].iloc[0]),
+            _encode_composite(stack, codes >= 2, method, cd, medoid_metric),
+            n_total,
+        )
 
-    return tiles.groupBy("tr", "tc").applyInPandas(_reduce, schema=_TILED_SCHEMA)
+    return map_groups(tiles, ["tr", "tc"], _TILED_SCHEMA, _reduce)
 
 
 def composite_tiled_qmosaic_halo(
@@ -480,22 +492,21 @@ def composite_tiled_qmosaic_halo(
     tiles (stencil.halo_apply + cloud_dist_code_kernel, halo = the clamp
     reach, so each tile's distances equal the whole-image transform
     exactly incl. the uint16 floor); (3) equi-join dist tiles back onto
-    the pixel tiles on the compact (image_id, tr, tc) key; (4) groupBy
-    (tr, tc) argmax reduce.  Two shuffles on integer grid keys, task
-    memory bounded by n_images x tile_size — the same scale contract as
-    composite_tiled.  The returned frame carries the cache handle as
-    ``_tile_cache`` for targeted unpersist; long sessions can
-    ``spark.catalog.clearCache()``.
+    the pixel tiles on the compact (image_id, tr, tc) key; (4)
+    composite_tiled's (tr, tc) reducer, reading the joined distances.  Two
+    shuffles on integer grid keys, task memory bounded by
+    n_images x tile_size — the same scale contract as composite_tiled.
+    The returned frame carries the cache handle as ``_tile_cache`` for
+    targeted unpersist; long sessions can ``spark.catalog.clearCache()``.
     """
-    import math as _math
+    import math
 
     from pyspark import StorageLevel
 
     from geedim_spark.operators import stencil
 
-    mask_opts = mask_opts or {}
-    halo = int(_math.ceil(max_cloud_dist / scale))
-    tiles = _pixel_tiles(images, tile_h, tile_w, mask_opts).persist(
+    halo = math.ceil(max_cloud_dist / scale)
+    tiles = _pixel_tiles(images, tile_h, tile_w, mask_opts or {}).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     codes = tiles.select(
@@ -508,28 +519,10 @@ def composite_tiled_qmosaic_halo(
     ).select(
         "image_id", "tr", "tc", F.col("tile_bytes").alias("dist_bytes")
     )
-    joined = tiles.join(dists, ["image_id", "tr", "tc"])
-
-    def _reduce(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(
-            ["sort_key", "image_id"], ascending=[False, True], ignore_index=True
-        )
-        stack = np.stack([codecs.decode(bytes(b)) for b in pdf["tile_bytes"]])
-        codes = np.stack(
-            [codecs.decode(bytes(b))[0] for b in pdf["valid_bytes"]]
-        )
-        cd = np.stack(
-            [codecs.decode(bytes(b))[0] for b in pdf["dist_bytes"]]
-        )
-        comp, out_valid = composite_stack(stack, codes >= 2, "q-mosaic", cd)
-        comp = np.where(out_valid[None, :, :], comp, np.nan)
-        return pd.DataFrame([{
-            "tr": int(pdf["tr"].iloc[0]), "tc": int(pdf["tc"].iloc[0]),
-            "bytes": codecs.encode_raw(comp.astype(np.float64)),
-            "n_inputs": len(pdf),
-        }])
-
-    out = joined.groupBy("tr", "tc").applyInPandas(_reduce, schema=_TILED_SCHEMA)
+    out = _reduce_tiles(
+        tiles.join(dists, ["image_id", "tr", "tc"]),
+        "q-mosaic", scale, max_cloud_dist,
+    )
     out._tile_cache = tiles
     return out
 

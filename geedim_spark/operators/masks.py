@@ -79,6 +79,19 @@ def fill_mask(refl_bands: np.ndarray, nodata=0) -> np.ndarray:
     return np.all(valid, axis=0)
 
 
+def _landsat_cloud(qa: np.ndarray, mask_cirrus: bool) -> np.ndarray:
+    """Landsat C2 QA_PIXEL cloud (mask.py:183-187): mid-confidence or
+    dilated cloud, or cirrus when ``mask_cirrus`` (each one bit)."""
+    bits = _QA_CLOUD_MID | _QA_CLOUD_DILATED | (_QA_CIRRUS if mask_cirrus else 0)
+    return (qa & bits) != 0
+
+
+def _qa60_cloud(qa: np.ndarray, mask_cirrus: bool) -> np.ndarray:
+    """Sentinel-2 QA60 cloud (mask.py:387-389): opaque cloud, or cirrus
+    when ``mask_cirrus``."""
+    return (qa & (_QA60_CLOUD | (_QA60_CIRRUS if mask_cirrus else 0))) != 0
+
+
 def landsat_masks(
     bands: dict[str, np.ndarray],
     mask_shadows: bool = True,
@@ -94,11 +107,7 @@ def landsat_masks(
     out = {"FILL_MASK": fill_mask(refl, nodata)}
 
     qa = bands["QA_PIXEL"].astype(np.int64)
-    cloud = ((qa & _QA_CLOUD_MID) == _QA_CLOUD_MID) | (
-        (qa & _QA_CLOUD_DILATED) == _QA_CLOUD_DILATED
-    )
-    if mask_cirrus:
-        cloud |= (qa & _QA_CIRRUS) == _QA_CIRRUS
+    cloud = _landsat_cloud(qa, mask_cirrus)
     out["CLOUD_MASK"] = cloud
     combined = cloud.copy()
 
@@ -178,10 +187,7 @@ def s2_masks(
         out["CLOUD_SCORE"] = score.astype(np.float32)
     else:
         if mask_method == "qa":
-            qa = bands["QA60"].astype(np.int64)
-            cloud = (qa & _QA60_CLOUD) != 0
-            if mask_cirrus:
-                cloud |= (qa & _QA60_CIRRUS) != 0
+            cloud = _qa60_cloud(bands["QA60"].astype(np.int64), mask_cirrus)
             if not qa_valid:
                 # QA60 unpopulated window (mask.py:374-391): the reference
                 # MASKS the QA band, which propagates through cloud ->
@@ -406,6 +412,17 @@ def cloud_dist(
         d = np.sqrt(edt_squared(sources, max_r=max_px)) * scale
     # saturate, don't wrap: toUint16 semantics for max_cloud_dist > 65535
     return np.clip(d, 0, min(max_cloud_dist, 65535)).astype(np.uint16)
+
+
+def cloud_dist_sum(cloudless, fill, scale, max_cloud_dist, decimate) -> int:
+    """Sum of CLOUD_DIST over fill pixels (it is masked at invalid pixels,
+    mask.py:102-117), computed on every ``decimate``-th row/col at
+    ``scale * decimate`` — the reference's compute-at-coarse-projection
+    trick (cloud dist at the 60 m B1 projection, mask.py:510-516)."""
+    fk = fill[::decimate, ::decimate]
+    d = cloud_dist(cloudless[::decimate, ::decimate], scale * decimate,
+                   max_cloud_dist, fill=fk)
+    return int(d[fk].sum(dtype=np.int64))
 
 
 def stats_stride(total_px: int, max_pixels: int = MAX_REGION_STAT_PIXELS) -> int:
@@ -711,25 +728,15 @@ def cdi_mask_stats(
         # (mask.py:451-454: aux['cloud'].And(cdi_cloud_mask))
         qa_invalid = False
         if _sensor_for(coll) == "s2":
-            qa = bands["QA60"].astype(np.int64)
-            cloud = ((qa & _QA60_CLOUD) != 0) | ((qa & _QA60_CIRRUS) != 0)
-            if not qa60_valid(ts):
-                # QA60 unpopulated window: the reference's masked QA
-                # band stays masked through the CDI And-refinement and
-                # into CLOUDLESS (see s2_masks) — zero cloud AND zero
-                # cloudless, not "all clear"
-                cloud = np.zeros_like(cloud)
-                qa_invalid = True
+            # QA60 unpopulated window: the reference's masked QA band stays
+            # masked through the CDI And-refinement and into CLOUDLESS (see
+            # s2_masks) — zero cloud AND zero cloudless, not "all clear"
+            qa_invalid = not qa60_valid(ts)
+            cloud = _qa60_cloud(bands["QA60"].astype(np.int64), True)
+            cloud &= not qa_invalid
         else:
-            # full Landsat cloud bits, identical to landsat_masks'
-            # default (mid-confidence | dilated | cirrus) — a lone
-            # bit-9 test silently under-counted vs mask_stats
-            qa = bands["QA_PIXEL"].astype(np.int64)
-            cloud = (
-                ((qa & _QA_CLOUD_MID) == _QA_CLOUD_MID)
-                | ((qa & _QA_CLOUD_DILATED) == _QA_CLOUD_DILATED)
-                | ((qa & _QA_CIRRUS) == _QA_CIRRUS)
-            )
+            # landsat_masks' default cloud bits (cirrus included)
+            cloud = _landsat_cloud(bands["QA_PIXEL"].astype(np.int64), True)
         matched = cbuf is not None
         if matched:
             cdi_arr = codecs.decode(bytes(cbuf))[0]
@@ -756,18 +763,15 @@ def cloud_dist_stats(
     semantics).  Integer output -> oracle-hashable; the strip geometry of the
     synthetic table makes the expected sum closed-form in SQL.
 
-    ``decimate`` computes the transform on every d-th pixel at scale*d — the
-    reference's compute-at-coarse-projection trick (cloud dist at the 60 m
-    B1 projection, mask.py:510-516) that bounds EDT cost on large tiles.
+    ``decimate`` computes the transform on every d-th pixel at scale*d
+    (:func:`cloud_dist_sum`), which bounds EDT cost on large tiles.
     """
     def _row(image_id, buf, coll, ts):
         _, _, m = image_masks(buf, coll, ts, **mask_opts)
-        mk = m["CLOUDLESS_MASK"][::decimate, ::decimate]
-        fk = m["FILL_MASK"][::decimate, ::decimate]
-        d = cloud_dist(mk, scale * decimate, max_cloud_dist, fill=fk)
-        # CLOUD_DIST is masked at invalid pixels (mask.py:117): the sum
-        # covers fill pixels only
-        yield image_id, int(d[fk].sum(dtype=np.int64))
+        yield image_id, cloud_dist_sum(
+            m["CLOUDLESS_MASK"], m["FILL_MASK"], scale, max_cloud_dist,
+            decimate,
+        )
 
     return map_rows(
         _with_time_start(images), _IMAGE_COLS,

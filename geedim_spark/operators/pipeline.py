@@ -109,13 +109,10 @@ def mask_and_tile(
                     cloudy, max(focal_open_px, focal_dilate_px)
                 )
                 cl = ~cloudy & m["FILL_MASK"]
-        # coarse-projection cloud distance (mask.py:510-516 analog);
-        # sources = cloud & fill, sum over fill only (mask.py:102-117)
-        dk = cl[::dist_decimate, ::dist_decimate]
-        fk = m["FILL_MASK"][::dist_decimate, ::dist_decimate]
-        d = masks.cloud_dist(dk, scale * dist_decimate, max_cloud_dist,
-                             fill=fk)
-        dist_sum = int(d[fk].sum(dtype=np.int64))
+        # coarse-projection cloud distance (mask.py:510-516 analog)
+        dist_sum = masks.cloud_dist_sum(
+            cl, m["FILL_MASK"], scale, max_cloud_dist, dist_decimate
+        )
         if scale_offset:
             from geedim_spark.sources.band_props import _CATALOG
             factors = [

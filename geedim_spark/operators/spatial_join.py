@@ -78,49 +78,41 @@ def _refined_pairs(
     images: DataFrame,
     rois: DataFrame,
     res: int,
-    broadcast_rois: bool,
     geo: bool,
 ) -> DataFrame:
     """Shared cover-join + exact refine: candidate (image, roi) rows before
-    any distinct — single source of truth for the pair and semi joins."""
+    any distinct — single source of truth for the pair and semi joins.
+    The ROI cells broadcast: a region-of-interest table is a dim table
+    even at 10^12 images."""
     img_cells = cover_cells(
         images.select("image_id", "x0", "y0", "x1", "y1"),
         "x0", "y0", "x1", "y1", res, geo=geo,
     )
     roi_sel = rois.select("roi_id", "rx0", "ry0", "rx1", "ry1")
-    roi_cells = cover_cells(roi_sel, "rx0", "ry0", "rx1", "ry1", res, geo=geo)
-    if broadcast_rois:
-        roi_cells = F.broadcast(roi_cells)
-    refine = geo_bbox_intersects_col if geo else bbox_intersects_col
-    return images_join_refine(img_cells, roi_cells, refine)
-
-
-def images_join_refine(img_cells, roi_cells, refine) -> DataFrame:
-    return img_cells.join(roi_cells, "cell").where(
-        refine(
-            F.col("x0"), F.col("y0"), F.col("x1"), F.col("y1"),
-            F.col("rx0"), F.col("ry0"), F.col("rx1"), F.col("ry1"),
-        )
+    roi_cells = F.broadcast(
+        cover_cells(roi_sel, "rx0", "ry0", "rx1", "ry1", res, geo=geo)
     )
+    refine = geo_bbox_intersects_col if geo else bbox_intersects_col
+    return img_cells.join(roi_cells, "cell").where(refine(
+        *(F.col(c) for c in ("x0", "y0", "x1", "y1", "rx0", "ry0", "rx1", "ry1"))
+    ))
 
 
 def filter_bounds(
     images: DataFrame,
     rois: DataFrame,
     res: int = cells.DEFAULT_RES,
-    broadcast_rois: bool = True,
     geo: bool = False,
 ) -> DataFrame:
     """images x ROIs intersects join -> distinct (image_id, roi_id) pairs.
 
     The cell equi-join bounds candidate pairs; the bbox refine makes the
-    result exact (independent of ``res``).  ROIs broadcast by default (a
-    region-of-interest table is a dim table even at 10^12 images).
+    result exact (independent of ``res``).  ROIs broadcast.
     ``geo=True`` runs on the geographic grid: footprints and ROIs crossing
     the antimeridian (x0 > x1) cover both sides of the seam and the refine
     uses the wrap-aware circular-arc intersection.
     """
-    exact = _refined_pairs(images, rois, res, broadcast_rois, geo)
+    exact = _refined_pairs(images, rois, res, geo)
     return exact.select("image_id", "roi_id").distinct()
 
 
@@ -128,27 +120,19 @@ def filter_bounds_semi(
     images: DataFrame,
     rois: DataFrame,
     res: int = cells.DEFAULT_RES,
-    broadcast_ids: bool = True,
     geo: bool = False,
 ) -> DataFrame:
     """Images having >= 1 intersecting ROI (the reference's filterBounds
     keeps whole images; left-semi join back to the images table).
 
-    ``broadcast_ids=True`` broadcasts the matched-id set so the (bytes-
-    heavy) images table never shuffles — the right default whenever the ROI
-    set selects << the broadcast threshold of ids.  Disable for joins where
-    most of a 10^12-row table matches; the semi-join then shuffles on
-    image_id (AQE picks the strategy)."""
+    The matched-id set broadcasts, so the (bytes-heavy) images table never
+    shuffles — right whenever the ROI set selects << the broadcast
+    threshold of ids."""
     # project to image_id BEFORE the single distinct: the pair-level
     # distinct inside filter_bounds would shuffle the full candidate-pair
     # set only to be collapsed to ids immediately after
-    matched = (
-        _refined_pairs(images, rois, res, True, geo)
-        .select("image_id").distinct()
-    )
-    if broadcast_ids:
-        matched = F.broadcast(matched)
-    return images.join(matched, "image_id", "left_semi")
+    matched = _refined_pairs(images, rois, res, geo).select("image_id").distinct()
+    return images.join(F.broadcast(matched), "image_id", "left_semi")
 
 
 def adaptive_salted_join(

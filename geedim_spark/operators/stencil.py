@@ -9,9 +9,9 @@ borders need neighbours from *adjacent tiles*, so the distributed form is:
 1. every tile replicates itself to its own group and to each neighbour
    group within the halo reach — an ``explode`` over kRing offsets, making
    the kNN neighbour lookup a plain **equi-join key** (image_id, gr, gc);
-2. ``groupBy(image_id, gr, gc).applyInPandas`` assembles the centre tile
-   plus halo margins into one padded array, runs the numpy kernel, and
-   crops the centre back out.
+2. one grouped kernel per (image_id, gr, gc) (``kernels.map_groups``)
+   assembles the centre tile plus halo margins into one padded array, runs
+   the numpy kernel, and crops the centre back out.
 
 **Exactness contract** (SURVEY §7.3 hard part 1): with
 ``halo_px >= ceil(max_reach / scale)`` the tiled result equals the
@@ -31,12 +31,11 @@ import math
 from itertools import product
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geedim_spark import codecs
-from geedim_spark.kernels import map_rows
+from geedim_spark.kernels import map_groups, map_rows
 from geedim_spark.operators import masks
 from geedim_spark.operators.tiler import tile_windows
 
@@ -124,9 +123,7 @@ def halo_apply(
         .select("image_id", "gr", "gc", "tr", "tc", "n_tr", "n_tc", "tile_bytes")
     )
 
-    schema = "image_id string, tr int, tc int, n_tr int, n_tc int, tile_bytes binary"
-
-    def _group(pdf: pd.DataFrame) -> pd.DataFrame:
+    def _group(pdf):
         gr, gc = int(pdf["gr"].iloc[0]), int(pdf["gc"].iloc[0])
         n_tr, n_tc = int(pdf["n_tr"].iloc[0]), int(pdf["n_tc"].iloc[0])
         pad = np.zeros((tile_h + 2 * halo_px, tile_w + 2 * halo_px), dtype=np.float64)
@@ -148,41 +145,22 @@ def halo_apply(
                 centre_shape = blk.shape
         out = kernel(pad, valid, halo_px)
         crop = out[halo_px:halo_px + centre_shape[0], halo_px:halo_px + centre_shape[1]]
-        return pd.DataFrame([{
-            "image_id": pdf["image_id"].iloc[0], "tr": gr, "tc": gc,
-            "n_tr": n_tr, "n_tc": n_tc,
-            "tile_bytes": codecs.encode_raw(
-                np.ascontiguousarray(crop.astype(out_dtype))[None, :, :]
-            ),
-        }])
+        yield (pdf["image_id"].iloc[0], gr, gc, n_tr, n_tc, codecs.encode_raw(
+            np.ascontiguousarray(crop.astype(out_dtype))[None, :, :]))
 
-    return exploded.groupBy("image_id", "gr", "gc").applyInPandas(_group, schema)
+    return map_groups(exploded, ["image_id", "gr", "gc"], _TILE_SCHEMA, _group)
 
 
 # -- ready-made halo kernels --------------------------------------------------
 
-def _floor_u16(d: np.ndarray, max_cloud_dist: float) -> np.ndarray:
-    """masks.cloud_dist's toUint16 semantics (mask.py:124): clamp then
-    floor to the uint16 metre grid.  The tiled kernels must apply the SAME
-    floor or q-mosaic tie-breaks diverge from the whole-image path
-    (diagonal EDT distances are irrational multiples of scale: 14.1 m and
-    14.9 m both floor to 14 -> tie -> sort order decides, while unfloored
-    floats would pick 14.9)."""
-    return np.floor(np.clip(d, 0, min(max_cloud_dist, 65535)))
-
-
 def cloud_dist_kernel(scale: float, max_cloud_dist: float):
     """Tiled CLOUD_DIST: sources are the non-cloudless pixels (mask==0) —
     only *real* pixels can be sources (beyond-image padding is not cloud).
-    Exact vs whole image when halo_px >= ceil(max_cloud_dist/scale)."""
+    Exact vs whole image when halo_px >= ceil(max_cloud_dist/scale),
+    including ``masks.cloud_dist``'s uint16 floor (q-mosaic tie-breaks
+    depend on it)."""
     def kernel(padded: np.ndarray, valid: np.ndarray, halo: int) -> np.ndarray:
-        sources = (padded == 0) & valid
-        if not sources.any():
-            return _floor_u16(np.full(padded.shape, max_cloud_dist),
-                              max_cloud_dist)
-        max_px = int(math.ceil(max_cloud_dist / scale))
-        d = np.sqrt(masks.edt_squared(sources, max_r=max_px)) * scale
-        return _floor_u16(d, max_cloud_dist)
+        return masks.cloud_dist(padded != 0, scale, max_cloud_dist, fill=valid)
     return kernel
 
 
@@ -195,14 +173,9 @@ def cloud_dist_code_kernel(scale: float, max_cloud_dist: float):
     ``masks.cloud_dist(..., fill=...)`` when
     halo_px >= ceil(max_cloud_dist/scale)."""
     def kernel(padded: np.ndarray, valid: np.ndarray, halo: int) -> np.ndarray:
-        sources = (padded == 1) & valid
-        if sources.any():
-            max_px = int(math.ceil(max_cloud_dist / scale))
-            d = np.sqrt(masks.edt_squared(sources, max_r=max_px)) * scale
-        else:
-            d = np.full(padded.shape, max_cloud_dist)
-        d = _floor_u16(d, max_cloud_dist)  # whole-image uint16 parity
-        d[(padded == 0) | ~valid] = 0.0
+        fill = (padded != 0) & valid
+        d = masks.cloud_dist(padded == 2, scale, max_cloud_dist, fill=fill)
+        d[~fill] = 0
         return d
     return kernel
 

@@ -112,9 +112,9 @@ def write_image_files(
     """
     import os
 
-    import pandas as pd
-    from pyspark.sql import functions as F  # noqa: F401
+    from pyspark.sql import functions as F
 
+    from geedim_spark.kernels import map_groups
     from geedim_spark.sources.geotiff import write_geotiff
 
     if fmt not in ("gtiff", "npy"):
@@ -124,6 +124,7 @@ def write_image_files(
     os.makedirs(out_dir, exist_ok=True)
     has_geo = "transform" in tiles.columns
     has_crs = "crs" in tiles.columns
+    schema = "image_id string, path string, nbytes long"
 
     def _geo_of(row) -> tuple:
         transform = list(row["transform"]) if has_geo else None
@@ -145,7 +146,8 @@ def write_image_files(
                 )
         return transform, epsg, geo
 
-    def _emit(name: str, arr, transform, epsg, geo) -> dict:
+    def _emit(name: str, arr, geo_row) -> tuple:
+        """Write one file; ``geo_row`` supplies the GeoTIFF georeferencing."""
         from urllib.parse import quote
         # percent-escape (collision-free, reversible) rather than '/'->'-'
         # (download.py:82-86): 'A/B' and 'A-B' must not share one file
@@ -155,6 +157,7 @@ def write_image_files(
             np.save(path, arr)
         else:
             path = os.path.join(out_dir, f"{safe}.tif")
+            transform, epsg, geo = _geo_of(geo_row)
             write_geotiff(
                 path, arr, transform=transform, crs_epsg=epsg,
                 geographic=geo, nodata=nodata,
@@ -163,10 +166,9 @@ def write_image_files(
                 overwrite=True,  # the manifest dir is the unit of intent
                 driver=driver,
             )
-        return {"image_id": name, "path": path,
-                "nbytes": int(os.path.getsize(path))}
+        return name, path, int(os.path.getsize(path))
 
-    def _write_band(pdf: pd.DataFrame) -> pd.DataFrame:
+    def _write_band(pdf):
         # the reference transpose (collection.py:465-495): this group is
         # ONE band index across every image; the output file's bands are
         # the images in image_id order
@@ -177,11 +179,9 @@ def write_image_files(
             sub = pdf[pdf["image_id"] == iid]
             arr[i] = assemble_image(sub.to_dict("records"), bands, h, w,
                                     dtype)[b]
-        first = pdf[pdf["image_id"] == ids[0]].iloc[0]
-        transform, epsg, geo = _geo_of(first)
         name = (band_names[b] if band_names and b < len(band_names)
                 else f"B{b}")
-        return pd.DataFrame([_emit(name, arr, transform, epsg, geo)])
+        yield _emit(name, arr, pdf[pdf["image_id"] == ids[0]].iloc[0])
 
     if split == "bands":
         banded = tiles.withColumn(
@@ -189,57 +189,10 @@ def write_image_files(
             F.explode(F.sequence(F.col("band_start"),
                                  F.col("band_stop") - 1)),
         )
-        return banded.groupBy("_band").applyInPandas(
-            _write_band, schema="image_id string, path string, nbytes long"
-        )
+        return map_groups(banded, ["_band"], schema, _write_band)
 
-    def _write(pdf: pd.DataFrame) -> pd.DataFrame:
-        image_id = pdf["image_id"].iloc[0]
+    def _write(pdf):
         arr = assemble_image(pdf.to_dict("records"), bands, h, w, dtype)
-        # percent-escape (collision-free, reversible) rather than '/'->'-'
-        # (download.py:82-86): 'A/B' and 'A-B' must not share one file
-        from urllib.parse import quote
-        safe = quote(str(image_id), safe="")
-        if fmt == "npy":
-            path = os.path.join(out_dir, f"{safe}.npy")
-            np.save(path, arr)
-            return pd.DataFrame([
-                {"image_id": image_id, "path": path,
-                 "nbytes": int(os.path.getsize(path))}
-            ])
-        else:
-            transform = list(pdf["transform"].iloc[0]) if has_geo else None
-            epsg = None
-            geo = bool(geographic)
-            if has_crs:
-                crs = str(pdf["crs"].iloc[0])
-                if crs.upper().startswith("EPSG:"):
-                    epsg = int(crs.split(":", 1)[1])
-                    # geographic (lat/lon) vs projected GeoKey choice:
-                    # explicit `geographic` argument wins; otherwise a
-                    # known-codes list (NOT exhaustive — geographic CRSs
-                    # outside it, e.g. EPSG:4171/4617, need the explicit
-                    # argument or they are written under
-                    # ProjectedCSTypeGeoKey)
-                    geo = geographic if geographic is not None else epsg in (
-                        4326, 4269, 4267, 4258, 4283, 4148, 4490,
-                        4171, 4617, 4619, 4759,
-                    )
-            path = os.path.join(out_dir, f"{safe}.tif")
-            write_geotiff(
-                path, arr, transform=transform, crs_epsg=epsg,
-                geographic=geo, nodata=nodata,
-                compress="deflate", overviews=overviews,
-                min_overview_dim=min_overview_dim,
-                overwrite=True,  # the manifest dir is the unit of intent
-                driver=driver,
-            )
-            return pd.DataFrame([
-                {"image_id": image_id, "path": path,
-                 "nbytes": int(os.path.getsize(path))}
-            ])
+        yield _emit(pdf["image_id"].iloc[0], arr, pdf.iloc[0])
 
-    return (
-        tiles.groupBy("image_id")
-        .applyInPandas(_write, schema="image_id string, path string, nbytes long")
-    )
+    return map_groups(tiles, ["image_id"], schema, _write)

@@ -17,7 +17,7 @@ sink is the corpus-scale equivalent the training-data pipeline needs —
 streamed sequentially by dataloader workers.
 
 Scale shape: one shuffle (hash repartition on the shard id), then each
-shard is written by exactly one task via ``applyInPandas`` — no driver
+shard is written by exactly one task (``kernels.map_groups``) — no driver
 collect, no cross-shard coordination.  Size shards via ``n_shards`` so a
 shard is O(100 MB–1 GB) at the target corpus (WebDataset's own guidance);
 tar bytes are deterministic (sorted keys, zeroed ustar headers) so shard
@@ -36,7 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from geedim_spark.kernels import map_batches
+from geedim_spark.kernels import map_batches, map_groups
 from geedim_spark.operators.sampling import hash_bucket
 
 MANIFEST_SCHEMA = (
@@ -144,7 +144,7 @@ def write_wds_shards(
         # moves only the missing shards' bytes
         samples = samples.filter(~F.col("shard").isin(*done_shards))
 
-    def _write(pdf: pd.DataFrame) -> pd.DataFrame:
+    def _write(pdf: pd.DataFrame):
         shard = int(pdf["shard"].iloc[0])
         rows = pdf.to_dict("records")
         path = os.path.join(out_dir, f"shard-{shard:05d}.tar")
@@ -155,19 +155,10 @@ def write_wds_shards(
         finally:
             if os.path.exists(tmp):
                 os.unlink(tmp)
-        return pd.DataFrame([{
-            "shard": shard,
-            "n_samples": len(rows),
-            "n_data_bytes": n_data,
-            "tar_sha256": sha,
-            "path": path,
-        }])
+        yield shard, len(rows), n_data, sha, path
 
-    manifest = (
-        samples.repartition(n_shards, "shard")
-        .groupBy("shard")
-        .applyInPandas(_write, schema=MANIFEST_SCHEMA)
-    )
+    manifest = map_groups(samples.repartition(n_shards, "shard"), ["shard"],
+                          MANIFEST_SCHEMA, _write)
     manifest_dir = os.path.join(out_dir, "_manifest")
     if done_shards and os.path.exists(manifest_dir):
         # keep the completed shards' manifest rows alongside the new ones

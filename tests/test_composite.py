@@ -134,6 +134,33 @@ def test_composite_collection_spark(spark):
     assert meta["n_inputs"] == 3
 
 
+def test_composite_collection_int_group_col(spark):
+    """A non-string group column groups like its string form: the output
+    ``group_id`` is the group value cast to string."""
+    from pyspark.sql import functions as F
+
+    rows = []
+    base = pd.Timestamp("2024-01-01")
+    for i, v in enumerate([10, 20, 30, 40]):
+        rows.append({
+            "image_id": f"IMG/{i:08d}",
+            "bytes": codecs.encode_raw(np.full((2, 4, 6), v, np.uint16)),
+            "collection": "MOCK/CONST",
+            "time_start": base + pd.Timedelta(hours=i),
+            "parity": i % 2,
+        })
+    images = spark.createDataFrame(pd.DataFrame(rows)).withColumn(
+        "parity", F.col("parity").cast("int")
+    )
+    out = {r["group_id"]: r for r in
+           comp.composite_collection(images, "mean", group_col="parity")
+           .collect()}
+    assert set(out) == {"0", "1"}
+    assert all(r["n_inputs"] == 2 for r in out.values())
+    assert (codecs.decode(bytes(out["0"]["bytes"]))[0] == 20).all()
+    assert (codecs.decode(bytes(out["1"]["bytes"]))[0] == 30).all()
+
+
 def test_composite_tiled_equals_whole_image(spark):
     """Tiled (groupBy tile coord) composite == whole-image composite —
     pixelwise reducers commute with tiling."""

@@ -1,10 +1,13 @@
-"""The worker-side zip-directory guard of the shared kernel layer
-(``kernels.install_zip_cache_guard``): unit tests on a temp zip without
-Spark, and a Spark test that every Python worker an engine kernel ran on is
-patched while the driver is not."""
+"""The shared kernel layer (``geedim_spark.kernels``): the worker-side
+zip-directory guard (``install_zip_cache_guard``: unit tests on a temp zip
+without Spark, and a Spark test that every Python worker an engine kernel
+ran on is patched while the driver is not), the grouped-map driver
+``map_groups``, and the rule that only ``kernels.py`` calls Spark's pandas
+map APIs."""
 
 from __future__ import annotations
 
+import ast
 import importlib
 import os
 import sys
@@ -137,3 +140,59 @@ def test_every_kernel_worker_is_patched(spark):
         .mapInPandas(probe, "pid long, module string").collect()
     assert {r["module"] for r in rows} == {"geedim_spark.kernels"}
     assert zipimport.zipimporter.invalidate_caches is _STDLIB_INVALIDATE
+
+
+_GROUPS_DDL = "k long, n long, s string"
+
+
+def _group_rows():
+    # built inside each test: a test-module function would be pickled by
+    # reference, and workers cannot import the test module
+    def fn(pdf):
+        k = int(pdf["k"].iloc[0])
+        for i in range(k):  # group 0 yields nothing
+            yield k, int(pdf["v"].sum()) + i, f"g{k}"
+    return fn
+
+
+def test_map_groups_empty_input_keeps_declared_schema(spark):
+    from pyspark.sql.types import StructType
+
+    df = spark.range(0).selectExpr("id % 3 AS k", "id AS v")
+    out = kernels.map_groups(df, ["k"], _GROUPS_DDL, _group_rows())
+    want = [(f.name, f.dataType) for f in StructType.fromDDL(_GROUPS_DDL)]
+    assert [(f.name, f.dataType) for f in out.schema.fields] == want
+    assert out.collect() == []
+
+
+def test_map_groups_rows_per_group(spark):
+    """One ``fn`` call per group; a group that yields no tuples adds no
+    rows, and a group may yield several."""
+    df = spark.range(6).selectExpr("id % 3 AS k", "id AS v")
+    rows = sorted(map(tuple, kernels.map_groups(
+        df, ["k"], _GROUPS_DDL, _group_rows()).collect()))
+    # groups: k=0 {0, 3}, k=1 {1, 4}, k=2 {2, 5}
+    assert rows == [(1, 5, "g1"), (2, 7, "g2"), (2, 8, "g2")]
+
+
+def test_only_kernels_calls_pandas_map_apis():
+    """``mapInPandas`` / ``applyInPandas`` belong to the kernel layer
+    (``map_batches``, ``map_rows``, ``map_groups``); a direct call anywhere
+    else in the package is a per-operator copy of it.  Streaming's
+    ``applyInPandasWithState`` is a different API and is not covered."""
+    root = os.path.dirname(kernels.__file__)
+    calls = []
+    for dirpath, _, files in os.walk(root):
+        for name in files:
+            path = os.path.join(dirpath, name)
+            if not name.endswith(".py") or path == kernels.__file__:
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            calls += [
+                f"{os.path.relpath(path, root)}:{n.lineno} {n.attr}"
+                for n in ast.walk(tree)
+                if isinstance(n, ast.Attribute)
+                and n.attr in ("mapInPandas", "applyInPandas")
+            ]
+    assert not calls, calls
