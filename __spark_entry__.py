@@ -657,7 +657,7 @@ def q_halo_edt(spark: SparkSession, sf_dir: str) -> DataFrame:
     imgs = synth.images_df(
         spark, min(n, 1200), scalar_filter="fmt = 'raw' AND i % 3 = 1"
     )
-    tiles = stencil.mask_tiles(imgs, tile_h=16, tile_w=16, plane="code")
+    tiles = stencil.mask_tiles(imgs, tile_h=16, tile_w=16)
     out = stencil.halo_apply(
         tiles, stencil.cloud_dist_code_kernel(scale=synth.SCALE, max_cloud_dist=200.0),
         halo_px=20, tile_h=16, tile_w=16, out_dtype="float64",

@@ -13,18 +13,17 @@ per-row Python); spatial joins as cell-index equi-joins with exact refinement.
 
 Subpackages
 -----------
-- :mod:`geedim_spark.cells`       grid cell index (H3/S2-style, pure numpy/SQL)
+- :mod:`geedim_spark.cells`       grid cell index (H3/S2-style, Catalyst covers)
 - :mod:`geedim_spark.codecs`      raw + DCT8 lossy image codecs
 - :mod:`geedim_spark.synth`       deterministic synthetic images/ROI tables
 - :mod:`geedim_spark.operators`   tiler, spatial join, masks, stencils, composites,
                                   dedup, similarity, text analysis
 - :mod:`geedim_spark.sources`     table IO, Iceberg-style snapshot manifests,
                                   pure-numpy GeoTIFF writer/reader
-- :mod:`geedim_spark.functions`   column helpers (dtype promotion, nodata, geometry)
-- :mod:`geedim_spark.plans`       metrics listener + lineage
+- :mod:`geedim_spark.functions`   pixel dtype helpers (nodata, saturating casts)
 - :mod:`geedim_spark.schema`      declared per-collection property schemas,
                                   abbreviations, mask-family registry
-- :mod:`geedim_spark.streaming`   ingest/windows/sessions/stateful dedup
+- :mod:`geedim_spark.streaming`   ingest/windows/sessions/stateful dedup/joins
 """
 
 __version__ = "0.1.0"

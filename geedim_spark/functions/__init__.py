@@ -1,4 +1,2 @@
-"""Column helpers + scalar utilities (SURVEY §2.8): dtype promotion, nodata,
-id/string functions, date helpers, band set ops."""
-
-from geedim_spark.functions.dtypes import promote_dtype, nodata_for  # noqa: F401
+"""Pixel dtype helpers (SURVEY §2.8): per-dtype nodata and the saturating
+``cast_pixels`` the export kernels call (:mod:`.dtypes`)."""

@@ -1,6 +1,6 @@
-"""Pixel dtype promotion + nodata — reference semantics from
+"""Pixel nodata + saturating dtype casts — reference semantics from
 /root/reference/geedim/image.py:55-73 (nodata table, no int64) and
-image.py:304-339 (minimum dtype able to represent all bands).
+image.py:571-596 (toUint8...toDouble).
 """
 
 from __future__ import annotations
@@ -9,41 +9,9 @@ import numpy as np
 
 from geedim_spark.codecs import NODATA_VALS
 
-# promotion lattice order (image.py:304-339: smallest dtype that can
-# represent every band's range; int64 unsupported upstream and here)
-_INT_ORDER = ["uint8", "int8", "uint16", "int16", "uint32", "int32"]
-
 
 def nodata_for(dtype: str):
     return NODATA_VALS[dtype]
-
-
-def promote_dtype(dtypes: list[str]) -> str:
-    """Minimum dtype able to represent all the given band dtypes.
-
-    Mirrors the reference's promotion: any float -> float64 if float64
-    present else float32 widened as needed; ints widen to the smallest type
-    whose [min, max] covers the union of ranges; int64 raises (unsupported,
-    image.py:66-73).
-    """
-    if any(d == "int64" or d == "uint64" for d in dtypes):
-        raise ValueError("int64/uint64 pixel types are unsupported (image.py:66-73)")
-    if any(d.startswith("float") for d in dtypes):
-        # floats can represent all int32/uint32 approximately; the reference
-        # promotes to the widest float present, float64 if any 32-bit int
-        # would lose precision
-        if "float64" in dtypes:
-            return "float64"
-        if any(d in ("int32", "uint32") for d in dtypes):
-            return "float64"
-        return "float32"
-    lo = min(np.iinfo(d).min for d in dtypes)
-    hi = max(np.iinfo(d).max for d in dtypes)
-    for cand in _INT_ORDER:
-        info = np.iinfo(cand)
-        if info.min <= lo and info.max >= hi:
-            return cand
-    raise ValueError(f"no supported dtype covers [{lo}, {hi}]")
 
 
 def cast_pixels(pixels: np.ndarray, dtype: str) -> np.ndarray:

@@ -1,7 +1,7 @@
 """Pure-numpy geometry kernels (no shapely in this environment).
 
-Backs the exact-refinement step of the cell-cover spatial join
-(:mod:`geedim_spark.operators.spatial_join`) and the raster<->vector mask
+Backs the polygon zonal statistics (:mod:`geedim_spark.operators.zonal`),
+the CLI's ``--bbox``/``--region`` bounds and the raster<->vector mask
 conversions the north rule requires.  The reference delegates all of this to
 the Earth Engine service (``filterBounds`` collection.py:601; geometry
 handling cli.py:171-176, image.py:384-404); our engine owns it.
@@ -13,41 +13,6 @@ pandas UDFs only — never per-row Python.
 from __future__ import annotations
 
 import numpy as np
-
-
-# ---------------------------------------------------------------------------
-# predicates
-# ---------------------------------------------------------------------------
-
-def bbox_intersects(ax0, ay0, ax1, ay1, bx0, by0, bx1, by1):
-    """Closed-interval bbox intersection (touching edges intersect).
-
-    Vectorised; the Spark-side refine uses the same predicate as Catalyst
-    column expressions — this twin exists for kernel-side use and tests.
-    """
-    return (
-        (np.asarray(ax0) <= bx1) & (np.asarray(ax1) >= bx0)
-        & (np.asarray(ay0) <= by1) & (np.asarray(ay1) >= by0)
-    )
-
-
-def lon_interval_contains(x0, x1, p):
-    """Is longitude ``p`` inside the circular arc [x0, x1]?  ``x0 > x1``
-    means the arc crosses the antimeridian."""
-    x0, x1, p = np.asarray(x0), np.asarray(x1), np.asarray(p)
-    return np.where(x0 <= x1, (x0 <= p) & (p <= x1), (p >= x0) | (p <= x1))
-
-
-def geo_bbox_intersects(ax0, ay0, ax1, ay1, bx0, by0, bx1, by1):
-    """Wrap-aware bbox intersection: lon intervals are arcs on the circle
-    (start > end = crosses the antimeridian), lat intervals are plain.
-
-    Two circular arcs intersect iff either contains the other's start —
-    the closed-interval version of the standard arc test."""
-    lon = lon_interval_contains(ax0, ax1, bx0) | lon_interval_contains(
-        bx0, bx1, ax0
-    )
-    return lon & (np.asarray(ay0) <= by1) & (np.asarray(ay1) >= by0)
 
 
 def points_in_polygon(px: np.ndarray, py: np.ndarray, poly: np.ndarray) -> np.ndarray:
@@ -87,11 +52,6 @@ def bbox_polygon(x0: float, y0: float, x1: float, y1: float) -> np.ndarray:
     return np.array(
         [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]], dtype=np.float64
     )
-
-
-def buffer_bbox(x0, y0, x1, y1, dist: float):
-    """Bbox inflation buffer (reference CLI ``--buffer`` analog, cli.py:230)."""
-    return x0 - dist, y0 - dist, x1 + dist, y1 + dist
 
 
 # ---------------------------------------------------------------------------

@@ -216,8 +216,12 @@ def check_compatible_collections(images: DataFrame) -> list[str]:
     C01 vs C02 are incompatible)."""
     import re
 
+    # NULL sorts last (None and str do not compare), so a NULL next to a
+    # named collection fails the loop below like any other mismatch
     ids = sorted(
-        r["collection"] for r in images.select("collection").distinct().collect()
+        (r["collection"] for r in
+         images.select("collection").distinct().collect()),
+        key=lambda c: (c is None, c or ""),
     )
     if len(ids) <= 1:
         return ids

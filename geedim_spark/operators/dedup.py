@@ -12,7 +12,9 @@ Training-data pipeline staples, each expressed as a DataFrame plan:
 
 Shingle hashing uses md5 (first 8 hex chars as int) so the DuckDB oracle can
 reproduce signatures exactly — xxhash64/sha differ or are engine-specific.
-All shingle work is Catalyst (sequence/transform/substring) — no Python.
+Shingle sets are Catalyst (sequence/transform/substring); the MinHash and
+SimHash signatures are vectorised Arrow kernels over the same md5 hash,
+value-identical to their Catalyst forms (tested).
 """
 
 from __future__ import annotations
@@ -101,7 +103,7 @@ def shingles(text: Column, n: int = 5) -> Column:
     """Distinct character n-gram array — pure Catalyst.
 
     NULL text coerces to '' (one empty shingle), matching the kernel paths
-    (_np_shingle_hashes) so the Catalyst and Arrow implementations stay
+    (:func:`minhash_sig_df`) so the Catalyst and Arrow implementations stay
     value-identical on corpora containing NULLs."""
     text = F.coalesce(text, F.lit(""))
     return F.array_distinct(
@@ -128,25 +130,6 @@ def _check_n_hashes(n_hashes: int, bands: int | None = None) -> None:
             f"bands ({bands}) must divide n_hashes ({n_hashes}) — "
             "trailing hashes would be silently dropped"
         )
-
-
-def minhash_signature(text: Column, n_hashes: int = 16, n: int = 5) -> Column:
-    """array<long> of n_hashes permutation minima over the shingle set."""
-    _check_n_hashes(n_hashes)
-    hashes = F.transform(shingles(text, n), lambda s: shingle_hash(s) % F.lit(_P))
-
-    def _perm_fn(a: int, b: int):
-        # PySpark lambda introspection fills ALL parameters with Columns, so
-        # capture the coefficients via a closure, not default args.
-        def fn(h):
-            return (F.lit(a) * h + F.lit(b)) % F.lit(_P)
-        return fn
-
-    sig = [
-        F.array_min(F.transform(hashes, _perm_fn(_A[i], _B[i])))
-        for i in range(n_hashes)
-    ]
-    return F.array(*sig)
 
 
 # --- vectorised single-block MD5 (guide §4.2: batch native compute) --------
@@ -214,24 +197,14 @@ def _md5_u32_batch(msgs: list[bytes]) -> np.ndarray:
     return a.byteswap().astype(np.int64)
 
 
-def _np_shingle_hashes(text: str, n: int = 5) -> np.ndarray:
-    """Distinct shingle hashes — value-identical to shingle_hash()%P
-    (md5 prefix), but computed kernel-side (the Catalyst expression tree is
-    ~10x slower for long documents)."""
-    if text is None:
-        text = ""
-    sh = {text[i: i + n] for i in range(max(len(text) - (n - 1), 1))}
-    return _md5_u32_batch([s.encode("utf-8") for s in sh]) % _P
-
-
 def minhash_sig_df(
     documents: DataFrame, n_hashes: int = 16, n: int = 5
 ) -> DataFrame:
     """(doc_id, sig array<long>) via a vectorised Arrow kernel.
 
-    Same values as :func:`minhash_signature` (tested equivalent); use this
-    in pipelines — one md5 per distinct shingle instead of a Catalyst
-    expression tree per permutation.
+    Same values as the Catalyst form in ``tests/reference/dedup.py``
+    (tested equivalent) — one md5 per distinct shingle instead of a
+    Catalyst expression tree per permutation.
     """
     _check_n_hashes(n_hashes)
     a = np.array(_A[:n_hashes], dtype=np.int64)[:, None]
@@ -854,22 +827,6 @@ def benchmark_overlap(
         .groupBy("doc_id", "bench_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
     )
-
-
-def decontaminate(
-    documents: DataFrame,
-    benchmark: DataFrame,
-    n: int = 5,
-    min_overlap: int = 1,
-) -> DataFrame:
-    """Remove documents sharing >= ``min_overlap`` distinct n-grams with
-    ANY benchmark document (left-anti join against the contaminated id
-    set — the id set is the only shuffled payload)."""
-    hits = benchmark_overlap(documents, benchmark, n=n)
-    contaminated = hits.where(
-        F.col("n_hits") >= min_overlap
-    ).select("doc_id").distinct()
-    return documents.join(contaminated, "doc_id", "left_anti")
 
 
 def apply_exact(documents: DataFrame) -> DataFrame:

@@ -245,18 +245,6 @@ def s2_masks(
 
 # -- neighbourhood kernels ---------------------------------------------------
 
-def _disk_offsets(radius: int) -> list[tuple[int, int]]:
-    if radius <= 0:
-        return [(0, 0)]
-    r2 = radius * radius
-    return [
-        (dy, dx)
-        for dy in range(-radius, radius + 1)
-        for dx in range(-radius, radius + 1)
-        if dy * dy + dx * dx <= r2
-    ]
-
-
 def _shift(mask: np.ndarray, dy: int, dx: int, fill: bool) -> np.ndarray:
     out = np.full_like(mask, fill)
     h, w = mask.shape
@@ -305,16 +293,6 @@ def focal_min(mask: np.ndarray, radius: int) -> np.ndarray:
     if radius <= 0:
         return mask
     return ~focal_max(~mask, radius)
-
-
-def _focal_min_naive(mask: np.ndarray, radius: int) -> np.ndarray:
-    """Reference per-offset erosion (kept for the equivalence tests)."""
-    if radius <= 0:
-        return mask
-    out = np.ones_like(mask)
-    for dy, dx in _disk_offsets(radius):
-        out &= _shift(mask, dy, dx, True)
-    return out
 
 
 def directional_project(mask: np.ndarray, azimuth_deg: float, npix: int) -> np.ndarray:

@@ -7,12 +7,10 @@ mp4) have **stub decoders** — the media libraries are not in this
 environment — behind deterministic fakes so the Spark-side plumbing
 (schemas, Arrow batching, partitioning, UDF signatures) is real and tested:
 
-- ``decode_media``      -> (bands, h, w) pixels or (channels, samples) audio
+- ``decode_pixels``     -> (bands, h, w) pixels
 - ``image_features``    -> per-band mean/std + phash (real compute)
-- ``resize_media``      -> resample kernels over decoded pixels
-- ``frame_sample``      -> every-Nth-frame extraction from a frame-blocked
-                          binary layout (real slicing over a synthetic
-                          container format)
+- ``aspect_bucket``     -> multi-aspect training-resolution buckets
+- ``quality_gate``      -> metadata-only admission rules
 
 STUBS: :func:`_fake_decode` derives deterministic pseudo-pixels from the
 payload's md5 — replace with a real decoder (Pillow/ffmpeg) when available.
@@ -21,14 +19,12 @@ payload's md5 — replace with a real decoder (Pillow/ffmpeg) when available.
 from __future__ import annotations
 
 import hashlib
-import struct
 
 import numpy as np
 from pyspark.sql import DataFrame
 
 from geedim_spark import codecs
 from geedim_spark.kernels import map_rows
-from geedim_spark.operators.resample import resample
 
 _REAL_FMTS = {"raw", "dct8"}
 _MEDIA_COLS = ["image_id", "bytes", "fmt", "w", "h"]
@@ -72,62 +68,6 @@ def image_features(images: DataFrame) -> DataFrame:
         "image_id string, band_means array<double>, "
         "band_stds array<double>, phash long",
         _row,
-    )
-
-
-# -- frame-blocked synthetic video container ---------------------------------
-
-# header: magic, n_frames, h, w — kept as a plain format string because
-# struct.Struct instances aren't cloudpickle-able into UDF closures
-_VFMT = "<4sHHH"
-_VHDR_SIZE = struct.calcsize(_VFMT)
-_VMAGIC = b"GDV1"
-
-
-def encode_video(frames: np.ndarray) -> bytes:
-    """(n_frames, h, w) uint8 -> synthetic container (deterministic)."""
-    n, h, w = frames.shape
-    return struct.pack(_VFMT, _VMAGIC, n, h, w) + np.ascontiguousarray(frames).tobytes()
-
-
-def frame_sample(videos: DataFrame, every_n: int = 2) -> DataFrame:
-    """Every-Nth-frame extraction: one input row per video, one output row
-    per sampled frame (kernel-side explode — the video blob is decoded once,
-    never duplicated through a join)."""
-    def _row(video_id, buf):
-        buf = bytes(buf)
-        magic, n, h, w = struct.unpack_from(_VFMT, buf, 0)
-        if magic != _VMAGIC:
-            raise NotImplementedError(
-                "real video containers need ffmpeg; only the GDV1 "
-                "synthetic layout is decodable here"
-            )
-        frames = np.frombuffer(
-            buf, dtype=np.uint8, offset=_VHDR_SIZE, count=n * h * w
-        ).reshape(n, h, w)
-        for fi in range(0, n, every_n):
-            yield video_id, fi, codecs.encode_raw(frames[fi][None, :, :])
-
-    return map_rows(
-        videos, ["video_id", "bytes"],
-        "video_id string, frame_idx int, frame_bytes binary", _row,
-    )
-
-
-def resize_media(images: DataFrame, out_h: int, out_w: int,
-                 method: str = "bilinear") -> DataFrame:
-    """Decode (real or stub) -> resample -> re-encode raw float64."""
-    def _row(image_id, buf, fmt, w, h):
-        px = decode_pixels(bytes(buf), fmt, int(w), int(h))
-        res = resample(px, out_h, out_w, method)
-        # re-encoded raw: fmt rewritten like masks.mask_clouds, so the
-        # result feeds straight back into image_features / resize_media
-        yield (image_id, codecs.encode_raw(np.ascontiguousarray(res)), "raw",
-               out_w, out_h)
-
-    return map_rows(
-        images, _MEDIA_COLS,
-        "image_id string, bytes binary, fmt string, w int, h int", _row,
     )
 
 

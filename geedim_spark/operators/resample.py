@@ -12,11 +12,6 @@ Pure numpy, separable kernels, deterministic.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-
-from geedim_spark import codecs
-from geedim_spark.kernels import map_rows
 
 
 def _lin_weights(src_n: int, dst_n: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -130,32 +125,3 @@ def resample(
     out = np.full(num.shape, float(nodata), np.float64)
     np.divide(num, den, out=out, where=ok)
     return out
-
-
-def resample_images(
-    images: DataFrame, out_h: int, out_w: int, method: str = "bilinear",
-    nodata=None,
-) -> DataFrame:
-    """Spark op: re-encode every image resampled to (out_h, out_w) float64.
-
-    Composites (rows with ``fixed = false`` column, if present) pass through
-    unaltered per image.py:559-561.  ``nodata`` opts into mask-aware
-    resampling (see :func:`resample`) — pass
-    ``codecs.NODATA_VALS[dtype]`` when chaining after ``mask_clouds`` so
-    masked pixels neither bleed into valid neighbours nor get resurrected.
-    """
-    has_fixed = "fixed" in images.columns
-
-    def _row(image_id, buf, fixed=True):
-        buf = bytes(buf)
-        # pass through only on an EXPLICIT False (composites); a null
-        # flag resamples — None and NaN previously took different paths
-        if not pd.isna(fixed) and not fixed:
-            yield image_id, buf
-            return
-        px = codecs.decode(buf)
-        res = resample(px, out_h, out_w, method, nodata=nodata)
-        yield image_id, codecs.encode_raw(np.ascontiguousarray(res))
-
-    cols = ["image_id", "bytes"] + (["fixed"] if has_fixed else [])
-    return map_rows(images, cols, "image_id string, bytes binary", _row)

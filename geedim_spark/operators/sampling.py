@@ -51,18 +51,6 @@ def hash_bucket(key: Column, salt: str = "") -> Column:
     )
 
 
-def deterministic_sample(
-    df: DataFrame, key_col: str, fraction: float, salt: str = ""
-) -> DataFrame:
-    """Rows whose key hashes under ``fraction`` — reproducible across
-    layout/engines; nested for growing fractions at a fixed salt."""
-    if not 0.0 <= fraction <= 1.0:
-        raise ValueError(f"fraction must be in [0, 1] (got {fraction})")
-    return df.where(
-        hash_bucket(F.col(key_col), salt) < F.lit(int(round(fraction * _M)))
-    )
-
-
 def stratified_sample(
     df: DataFrame,
     key_col: str,

@@ -3,9 +3,11 @@
 Brute-force cosine top-k is the exact baseline: broadcast the (small) query
 set, JVM-side dot products via ``aggregate``/``zip_with`` (no Python in the
 hot path), rank with a window.  The scale path is LSH bucketing
-(:func:`lsh_bucket_topk`): random-hyperplane signatures prune candidates to
-same-bucket pairs, turning the O(N*Q) scan into an equi-join on the bucket
-key — the same cover-join shape the spatial engine uses on H3 cells.
+(:func:`lsh_bucket_topk_quantised`, :func:`near_dup_pairs`): hyperplane
+signatures prune candidates to same-bucket pairs, turning the O(N*Q) scan
+into an equi-join on the bucket key — the same cover-join shape the spatial
+engine uses on H3 cells.  The Catalyst bucket folds the Arrow kernels are
+checked against are in ``tests/reference/similarity.py``.
 """
 
 from __future__ import annotations
@@ -107,16 +109,6 @@ def lsh_signature(dim: int, n_planes: int = 16, seed: int = 42) -> np.ndarray:
     return rng.standard_normal((n_planes, dim))
 
 
-def lsh_bucket(emb_col: Column, planes: np.ndarray) -> Column:
-    """Sign-bit bucket id from hyperplane projections — pure Catalyst:
-    one fold per plane, OR-ed into an int."""
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        proj = dot(emb_col, F.array(*[F.lit(float(v)) for v in plane]))
-        bucket = bucket + F.when(proj > 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return bucket
-
-
 def lsh_int_planes(dim: int, n_planes: int = 4, seed: int = 42) -> np.ndarray:
     """Small-integer hyperplanes for the oracle-exact quantised LSH path."""
     rng = np.random.default_rng(seed)
@@ -134,32 +126,9 @@ def quantise(emb_col: Column) -> Column:
     )
 
 
-def lsh_bucket_quantised(emb_col: Column, planes: np.ndarray) -> Column:
-    """Sign-bit bucket over integer-quantised embeddings x integer planes.
-
-    Every term is exact int64 arithmetic (|q| <= 4096*|x|, dims ~64, plane
-    values in [-5,5] -> |proj| << 2^53), so the sign — hence the bucket —
-    is identical across Spark / DuckDB / numpy, unlike float hyperplanes
-    whose near-zero projections can flip on summation-order differences."""
-    q = quantise(emb_col)
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        proj = F.aggregate(
-            F.zip_with(
-                q,
-                F.array(*[F.lit(int(v)).cast("long") for v in plane]),
-                lambda x, y: x * y,
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(proj > 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return bucket
-
-
 def _np_float_buckets(E: np.ndarray, planes: np.ndarray) -> np.ndarray:
-    """Sign-bit buckets over FLOAT hyperplanes, bit-identical to
-    :func:`lsh_bucket`: per-plane left-fold double projections
+    """Sign-bit buckets over FLOAT hyperplanes, bit-identical to the
+    Catalyst ``lsh_bucket`` fold: per-plane left-fold double projections
     (acc + e_j*p_j, j ascending — the exact Catalyst aggregate order) and
     Spark's total-order sign test (NaN > 0 is TRUE under Spark SQL's
     ordering, so a NaN projection sets the bit — replicated with isnan;
@@ -226,32 +195,13 @@ def embedding_dim(embeddings: DataFrame) -> int:
     return len(row["embedding"])
 
 
-def _bucket_topk(
-    embeddings: DataFrame, bucket_fn, n_queries: int, k: int
-) -> DataFrame:
-    """Shared LSH plan: bucket every vector, broadcast the query rows, rank
-    exact cosine within same-bucket candidates."""
-    emb = embeddings.select(
-        "vec_id", _as_double(F.col("embedding")).alias("e")
-    ).withColumn("bucket", bucket_fn(F.col("e"))) \
-     .withColumn("nrm", norm(F.col("e")))
-    q = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe"),
-        F.col("bucket").alias("qbucket"), F.col("nrm").alias("qnrm"),
-    )
-    pairs = emb.join(
-        F.broadcast(q),
-        (F.col("bucket") == F.col("qbucket")) & (F.col("vec_id") != F.col("query_id")),
-    )
-    return _rank_topk(sims_with(pairs), k)
-
-
 def lsh_bucket_topk_quantised(
     embeddings: DataFrame, n_queries: int = 5, k: int = 10, n_planes: int = 4
 ) -> DataFrame:
-    """:func:`lsh_bucket_topk` with exact integer bucketing — same plan shape
-    (bucket equi-join prunes candidates), but the bucket key is reproducible
-    bit-for-bit in ANSI SQL, so the whole query is value-checkable.
+    """Approximate top-k: candidates limited to the query's LSH bucket (a
+    bucket equi-join), with exact integer bucketing — the bucket key is
+    reproducible bit-for-bit in ANSI SQL, so the whole query is
+    value-checkable.  Recall is approximate by construction.
 
     r6: buckets and norms come from one Arrow base kernel
     (:func:`_np_quantised_buckets` / :func:`_np_fold_norm` — exact int64 /
@@ -360,7 +310,7 @@ def near_dup_pairs(
 
     Plan shape (r6, guide §4.2/§2.4): buckets and norms come from ONE
     Arrow base kernel (bit-identical to the Catalyst
-    :func:`lsh_bucket`/:func:`norm` folds — pinned by
+    ``lsh_bucket``/:func:`norm` folds — pinned by
     test_near_dup_base_kernel_matches_catalyst — with the hyperplanes
     derived from the batch's vector width, so the old plan-construction
     ``embedding_dim()`` job is gone); candidates come from per-bucket
@@ -537,21 +487,6 @@ def ivf_recall_at_k(
     )
 
 
-def lsh_bucket_topk(
-    embeddings: DataFrame, n_queries: int = 5, k: int = 10, n_planes: int = 8
-) -> DataFrame:
-    """Approximate top-k: candidates limited to the query's LSH bucket.
-
-    At 100 TB this is the shape that survives: bucket is a shuffle key with
-    ~N/2^planes rows per bucket; the per-bucket join is local.  Recall is
-    approximate by construction — verify against :func:`cosine_topk`.
-    """
-    planes = lsh_signature(embedding_dim(embeddings), n_planes)
-    return _bucket_topk(
-        embeddings, lambda e: lsh_bucket(e, planes), n_queries, k
-    )
-
-
 def _np_fold_dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
     """Pairwise dot products A(r,d) x B(c,d) -> (r,c), accumulated one
     DIMENSION at a time (acc = acc + a_j*b_j, j ascending) — the exact
@@ -575,8 +510,8 @@ def _np_fold_norm(V: np.ndarray) -> np.ndarray:
 
 
 def _np_quantised_buckets(V64: np.ndarray, planes: np.ndarray) -> np.ndarray:
-    """Integer-quantised LSH bucket ids, bit-identical to
-    :func:`lsh_bucket_quantised`: floor(x*4096) int64 components, exact
+    """Integer-quantised LSH bucket ids, bit-identical to the Catalyst
+    ``lsh_bucket_quantised``: floor(x*4096) int64 components, exact
     int64 left-fold projections (|terms| << 2^53 — no wraparound), sign
     bits OR-ed."""
     q = np.floor(V64 * QUANT_SCALE).astype(np.int64)

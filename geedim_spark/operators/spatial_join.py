@@ -9,16 +9,15 @@ cover-join pattern:
 2. equi-join on ``cell`` — broadcast when one side is a dim table (ROIs),
    shuffle hash/sort-merge with optional count-sized **salting** for
    big-big joins;
-3. exact geometric refine (bbox predicate as Catalyst expressions; arbitrary
-   polygons via a vectorised point-in-polygon pandas UDF);
+3. exact geometric refine (bbox predicate as Catalyst expressions, with
+   numpy twins in ``tests/reference/geometry.py``);
 4. distinct on the key pair (cell coverings overlap between resolutions).
 
 Scale notes (10^12 rows): footprint density over popular cells is Zipfian —
 AQE skew-join (enabled in session.py) splits oversized partitions at runtime,
 and :func:`adaptive_salted_join` pre-splits pathological keys into salt
 buckets sized from each key's row count, replicating the small side only
-for those keys.  ROI-side joins broadcast (no shuffle at all); only
-tile<->tile self-joins (stencil halos) pay a shuffle, on the cell key.
+for those keys.  ROI-side joins broadcast (no shuffle at all).
 """
 
 from __future__ import annotations
@@ -49,8 +48,8 @@ def cover_cells(
 
 
 def lon_contains_col(x0: Column, x1: Column, p: Column) -> Column:
-    """Circular-arc membership: Catalyst twin of
-    geometry.lon_interval_contains."""
+    """Circular-arc membership: numpy twin in
+    tests/reference/geometry.py."""
     return F.when(x0 <= x1, (x0 <= p) & (p <= x1)).otherwise((p >= x0) | (p <= x1))
 
 
@@ -59,8 +58,8 @@ def geo_bbox_intersects_col(
     bx0: Column, by0: Column, bx1: Column, by1: Column,
 ) -> Column:
     """Wrap-aware bbox intersection (two circular lon arcs intersect iff
-    either contains the other's start) — Catalyst twin of
-    geometry.geo_bbox_intersects."""
+    either contains the other's start) — numpy twin in
+    tests/reference/geometry.py."""
     lon = lon_contains_col(ax0, ax1, bx0) | lon_contains_col(bx0, bx1, ax0)
     return lon & (ay0 <= by1) & (ay1 >= by0)
 
@@ -69,8 +68,8 @@ def bbox_intersects_col(
     ax0: Column, ay0: Column, ax1: Column, ay1: Column,
     bx0: Column, by0: Column, bx1: Column, by1: Column,
 ) -> Column:
-    """Closed-interval bbox intersection — Catalyst twin of
-    :func:`geedim_spark.geometry.bbox_intersects`."""
+    """Closed-interval bbox intersection — numpy twin in
+    tests/reference/geometry.py."""
     return (ax0 <= bx1) & (ax1 >= bx0) & (ay0 <= by1) & (ay1 >= by0)
 
 

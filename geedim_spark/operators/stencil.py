@@ -7,7 +7,7 @@ The reference's neighbourhood ops run server-side on whole images:
 borders need neighbours from *adjacent tiles*, so the distributed form is:
 
 1. every tile replicates itself to its own group and to each neighbour
-   group within the halo reach — an ``explode`` over kRing offsets, making
+   group within the halo reach — an ``explode`` over neighbour offsets, making
    the kNN neighbour lookup a plain **equi-join key** (image_id, gr, gc);
 2. one grouped kernel per (image_id, gr, gc) (``kernels.map_groups``)
    assembles the centre tile plus halo margins into one padded array, runs
@@ -45,33 +45,21 @@ _TILE_SCHEMA = (
 
 
 def mask_tiles(
-    images: DataFrame, tile_h: int, tile_w: int, plane: str = "cloudless",
-    **mask_opts,
+    images: DataFrame, tile_h: int, tile_w: int, **mask_opts,
 ) -> DataFrame:
     """Decode each image (per-collection mask dispatch), and emit uint8
     mask tiles on a (tr, tc) grid.  One decode per image; tiles are the
     unit of all downstream stencil work.
 
-    ``plane`` selects the emitted plane:
-    - ``'cloudless'`` — CLOUDLESS_MASK as 0/1 (generic stencil input);
-    - ``'cloud'``     — FILL & ~CLOUDLESS as 0/1 (the reference's EDT
-      source plane, mask.py:102-104: nodata pixels are non-cloud);
-    - ``'code'``      — 3-state 0 invalid / 1 filled-cloudy / 2 cloudless
-      (carries both masks for kernels that must also exclude invalid
-      pixels from their output, mask.py:117).
+    Each tile is the 3-state code plane: 0 invalid / 1 filled-cloudy /
+    2 cloudless.  It carries both masks, so a kernel can take the
+    reference's EDT sources (filled cloudy pixels, mask.py:102-104) and
+    also exclude invalid pixels from its output (mask.py:117).
     """
-    if plane not in ("cloudless", "cloud", "code"):
-        raise ValueError(f"unknown plane {plane!r}")
-
     def _row(image_id, buf, coll, ts):
         _, _, m = masks.image_masks(buf, coll, ts, **mask_opts)
         cl, fill = m["CLOUDLESS_MASK"], m["FILL_MASK"]
-        if plane == "cloudless":
-            mk = cl.astype(np.uint8)
-        elif plane == "cloud":
-            mk = (fill & ~cl).astype(np.uint8)
-        else:
-            mk = fill.astype(np.uint8) + cl.astype(np.uint8)
+        mk = fill.astype(np.uint8) + cl.astype(np.uint8)
         h, w = mk.shape
         n_tr, n_tc = math.ceil(h / tile_h), math.ceil(w / tile_w)
         for (tr, tc), ((r0, r1), (c0, c1)) in tile_windows(
@@ -104,7 +92,7 @@ def halo_apply(
     its input; the centre crop is re-encoded as the tile result.
     """
     # halo_px=0 needs NO neighbour replication (k=0 -> only the centre
-    # tile survives the kRing explode); a forced k=1 would shuffle 9x the
+    # tile survives the offset explode); a forced k=1 would shuffle 9x the
     # volume and discard 8/9ths at the placement clamp
     k = math.ceil(halo_px / min(tile_h, tile_w))
     offs = [(dy, dx) for dy, dx in product(range(-k, k + 1), repeat=2)]
@@ -153,20 +141,9 @@ def halo_apply(
 
 # -- ready-made halo kernels --------------------------------------------------
 
-def cloud_dist_kernel(scale: float, max_cloud_dist: float):
-    """Tiled CLOUD_DIST: sources are the non-cloudless pixels (mask==0) —
-    only *real* pixels can be sources (beyond-image padding is not cloud).
-    Exact vs whole image when halo_px >= ceil(max_cloud_dist/scale),
-    including ``masks.cloud_dist``'s uint16 floor (q-mosaic tie-breaks
-    depend on it)."""
-    def kernel(padded: np.ndarray, valid: np.ndarray, halo: int) -> np.ndarray:
-        return masks.cloud_dist(padded != 0, scale, max_cloud_dist, fill=valid)
-    return kernel
-
-
 def cloud_dist_code_kernel(scale: float, max_cloud_dist: float):
-    """Reference-semantics tiled CLOUD_DIST over 3-state code tiles
-    (``mask_tiles(plane='code')``): sources are FILLED CLOUDY pixels only
+    """Reference-semantics tiled CLOUD_DIST over the 3-state code tiles
+    of :func:`mask_tiles`: sources are FILLED CLOUDY pixels only
     (code 1 — mask.py:102-104), and invalid pixels (code 0 / beyond-image)
     output 0 so per-image sums cover fill pixels only (the updateMask
     analog, mask.py:117).  Exact vs the whole-image
@@ -178,35 +155,3 @@ def cloud_dist_code_kernel(scale: float, max_cloud_dist: float):
         d[~fill] = 0
         return d
     return kernel
-
-
-def focal_max_kernel(radius: int):
-    def kernel(padded: np.ndarray, valid: np.ndarray, halo: int) -> np.ndarray:
-        # beyond-image = False: dilation can't grow from outside (matches
-        # masks.focal_max whole-image shift fill)
-        return masks.focal_max((padded != 0) & valid, radius).astype(np.float64)
-    return kernel
-
-
-def focal_min_kernel(radius: int):
-    def kernel(padded: np.ndarray, valid: np.ndarray, halo: int) -> np.ndarray:
-        # beyond-image = True: erosion treats outside as set (matches
-        # masks.focal_min whole-image shift fill)
-        return masks.focal_min((padded != 0) | ~valid, radius).astype(np.float64)
-    return kernel
-
-
-def assemble_tiles(tile_rows, tile_h: int, tile_w: int, dtype="float64") -> np.ndarray:
-    """Test-scale sink: stitch (tr, tc) tiles back into one array."""
-    n_tr = max(r["tr"] for r in tile_rows) + 1
-    n_tc = max(r["tc"] for r in tile_rows) + 1
-    blks = {}
-    for r in tile_rows:
-        blks[(r["tr"], r["tc"])] = codecs.decode(bytes(r["tile_bytes"]))[0]
-    h = sum(blks[(tr, 0)].shape[0] for tr in range(n_tr))
-    w = sum(blks[(0, tc)].shape[1] for tc in range(n_tc))
-    out = np.zeros((h, w), dtype=dtype)
-    for (tr, tc), blk in blks.items():
-        out[tr * tile_h:tr * tile_h + blk.shape[0],
-            tc * tile_w:tc * tile_w + blk.shape[1]] = blk
-    return out

@@ -6,14 +6,9 @@ descriptions — stac.py:29-107) and applies scale/offset during export
 static in-repo table; the engine treats it the way a 100 TB job should: a
 tiny dimension DataFrame **broadcast-joined** to the images by collection,
 with the per-band scale/offset array carried into the export kernel.
-
-Also derives the portion-stat scale heuristic (collection.py:168-194):
-geometric mean of band GSDs, or min GSD when max/min > 10.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -75,15 +70,3 @@ def with_scale_offset(images: DataFrame, props: DataFrame) -> DataFrame:
         "array<struct<band:string,scale:double,offset:double>>"
     )
     return joined.withColumn("band_so", F.coalesce(F.col("band_so"), empty))
-
-
-def portion_scale(props: DataFrame, collection: str) -> float:
-    """Stat scale heuristic (collection.py:190-194): min band GSD when the
-    GSD spread exceeds 10x, else the geometric mean."""
-    rows = props.filter(F.col("collection") == collection).select("gsd").collect()
-    gsds = [r["gsd"] for r in rows]
-    if not gsds:
-        raise ValueError(f"unknown collection {collection!r}")
-    if max(gsds) / min(gsds) > 10:
-        return float(min(gsds))
-    return float(math.exp(sum(math.log(g) for g in gsds) / len(gsds)))

@@ -1,4 +1,4 @@
-"""Secondary sinks: numpy-structured and xarray-style outputs.
+"""Secondary sinks: numpy-structured outputs and per-image files.
 
 The reference offers GeoTIFF / NumPy / Xarray sinks (image.py:954-1279).
 Here the primary sink is the snapshot-committed tiles table; these helpers
@@ -7,9 +7,6 @@ rebuild client-side array forms at test scale:
 - :func:`to_numpy`   — (bands, h, w) array (K2; export_ops.assemble_image)
 - :func:`to_structured` — structured dtype view, one field per band
   (image.py:1167-1175 analog)
-- :func:`to_xarray`  — DataArray with coords derived from the affine
-  transform (K3; gated on xarray being importable — it is not installed in
-  this environment, so the coord math is exposed separately and tested)
 """
 
 from __future__ import annotations
@@ -38,30 +35,6 @@ def to_structured(
     for i, n in enumerate(dt.names):
         out[n] = array[i]
     return out
-
-
-def xarray_coords(transform, h: int, w: int) -> dict[str, np.ndarray]:
-    """Pixel-centre x/y coordinate vectors from the affine transform
-    (image.py:1178-1279 coord derivation)."""
-    sx, _, x0, _, nsy, y1 = [float(t) for t in transform]
-    return {
-        "x": x0 + (np.arange(w) + 0.5) * sx,
-        "y": y1 + (np.arange(h) + 0.5) * nsy,
-    }
-
-
-def to_xarray(array: np.ndarray, transform, band_names: list[str], attrs=None):
-    """DataArray (band, y, x) with geo coords; raises ImportError when
-    xarray is unavailable (this sandbox) — use xarray_coords directly."""
-    import xarray as xr  # gated: not installed here
-
-    coords = xarray_coords(transform, array.shape[1], array.shape[2])
-    return xr.DataArray(
-        array,
-        dims=("band", "y", "x"),
-        coords={"band": band_names[: array.shape[0]], **coords},
-        attrs=attrs or {},
-    )
 
 
 def write_image_files(

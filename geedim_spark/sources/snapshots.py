@@ -426,22 +426,6 @@ def pending_keys(work: DataFrame, table_dir: str, key_col: str) -> DataFrame:
     )
 
 
-def prune_partitions(table_dir: str, stat: str, lo=None, hi=None) -> list:
-    """Manifest-level partition pruning on a recorded min/max stat."""
-    snap = current_snapshot(table_dir)
-    if snap is None:
-        return []
-    out = []
-    for p in snap["partitions"]:
-        pmin, pmax = p.get(f"min_{stat}"), p.get(f"max_{stat}")
-        if lo is not None and pmax is not None and pmax < lo:
-            continue
-        if hi is not None and pmin is not None and pmin > hi:
-            continue
-        out.append(p["key"])
-    return out
-
-
 def expire_snapshots(table_dir: str, keep_last: int = 1) -> dict:
     """Iceberg-style snapshot expiry: drop all but the newest ``keep_last``
     manifests and delete commit directories no retained manifest references.

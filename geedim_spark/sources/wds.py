@@ -214,30 +214,3 @@ def read_wds_shards(spark: SparkSession, out_dir: str) -> DataFrame:
         os.path.join(out_dir, "shard-*.tar")
     )
     return map_batches(tars.select("path", "content"), _SAMPLE_SCHEMA, _parse)
-
-
-def verify_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Integrity check: re-hash every shard tar on executors and compare
-    with the committed manifest.  Returns (shard, ok) — a reader can gate
-    on ``ok`` before trusting a shard (bit-rot / partial-copy detection)."""
-    manifest = spark.read.parquet(os.path.join(out_dir, "_manifest"))
-    tars = spark.read.format("binaryFile").load(
-        os.path.join(out_dir, "shard-*.tar")
-    )
-
-    def _hash(pdf):
-        return pd.DataFrame({
-            "path": pdf["path"].map(
-                lambda p: p[len("file:"):] if p.startswith("file:") else p
-            ),
-            "actual_sha256": pdf["content"].map(
-                lambda c: hashlib.sha256(bytes(c)).hexdigest()
-            ),
-        })
-
-    hashed = map_batches(tars.select("path", "content"),
-                         "path string, actual_sha256 string", _hash)
-    return manifest.join(hashed, "path", "left").select(
-        "shard",
-        (F.col("actual_sha256") == F.col("tar_sha256")).alias("ok"),
-    )

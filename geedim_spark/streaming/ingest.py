@@ -17,7 +17,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from geedim_spark.operators import masks
 from geedim_spark.sources import snapshots
@@ -40,11 +39,7 @@ def stream_mask_stats(
 
     ``available_now=True`` drains everything currently in ``source_dir`` and
     stops — the test/CI mode; pass False for a continuous ingest.
-    For a per-batch lineage log, wrap the run in
-    ``streaming.listener.lineage(spark, path)`` — the context manager owns
-    the listener's lifecycle (the bus is session-global; registering one
-    here with no handle would accumulate listeners across calls and log
-    unrelated queries forever).
+    Per-batch progress is on the returned query (``recentProgress``).
     """
     src = (
         spark.readStream.schema(IMAGES_SCHEMA)

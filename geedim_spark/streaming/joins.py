@@ -88,23 +88,3 @@ def stream_event_join(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def event_join_batch(events, left_type="view", right_type="purchase",
-                     within: str = "1 hour"):
-    """Batch twin of :func:`stream_event_join` (same join, one shuffle on
-    user_id) — what the drained stream must equal."""
-    ev = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    left = ev.filter(F.col("event_type") == left_type).select(
-        F.col("event_id").alias("l_id"), "user_id",
-        F.col("ts").alias("l_ts"))
-    right = ev.filter(F.col("event_type") == right_type).select(
-        F.col("event_id").alias("r_id"),
-        F.col("user_id").alias("r_user"), F.col("ts").alias("r_ts"))
-    return left.join(
-        right,
-        (F.col("user_id") == F.col("r_user"))
-        & (F.col("r_ts") > F.col("l_ts"))
-        & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"INTERVAL {within}")),
-        "inner",
-    ).select("user_id", "l_id", "r_id", "l_ts", "r_ts")

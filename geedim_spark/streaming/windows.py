@@ -10,26 +10,13 @@ incrementally with state bounded by (watermark / window) windows.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp_ntz, user_id long, event_type string, "
     "value double, props string"
 )
-
-
-def windowed_counts_batch(events: DataFrame, window: str = "1 day") -> DataFrame:
-    # watermarks require TIMESTAMP (not NTZ); session tz is UTC so the cast
-    # is value-preserving — mirror it here for parity
-    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (
-        events.groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .select(
-            F.col("w.start").alias("window_start"), "event_type", "n",
-        )
-    )
 
 
 def stream_windowed_counts(

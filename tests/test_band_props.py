@@ -1,10 +1,6 @@
-"""STAC-analog band-props dimension: broadcast join + scale heuristics."""
+"""STAC-analog band-props dimension: broadcast join of per-band scale/offset."""
 
 from __future__ import annotations
-
-import math
-
-import pytest
 
 from geedim_spark import synth
 from geedim_spark.sources import band_props as bp
@@ -19,15 +15,6 @@ def test_with_scale_offset_broadcast_join(spark):
     assert so["B1"] == (2.75e-05, -0.2)  # the reference's SR constants
     assert so["QA_PIXEL"] == (1.0, 0.0)
     assert out.count() == 12
-
-
-def test_portion_scale_heuristics(spark):
-    props = bp.band_props_df(spark)
-    # equal GSDs -> geometric mean == the GSD
-    assert bp.portion_scale(props, "MOCK/CONST") == pytest.approx(10.0)
-    assert bp.portion_scale(props, "LANDSAT/LC09/C02/T1_L2") == pytest.approx(30.0)
-    with pytest.raises(ValueError, match="unknown collection"):
-        bp.portion_scale(props, "NOPE")
 
 
 def test_plan_uses_broadcast(spark):

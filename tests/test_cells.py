@@ -1,57 +1,31 @@
-"""Cell-index invariants: numpy == Spark column == SQL oracle; hierarchy;
-kRing clipping."""
+"""Cell-index invariants: the Catalyst covers == their numpy twins
+(tests/reference/cells.py); hierarchy; antimeridian wrap."""
 
 from __future__ import annotations
 
-import duckdb
 import numpy as np
 from pyspark.sql import functions as F
 
 from geedim_spark import cells
+from tests.reference import cells as ref
 
 
 def test_np_cell_invertible_hierarchical():
     rng = np.random.default_rng(0)
     x = rng.uniform(0, cells.WORLD_SIZE, 1000)
     y = rng.uniform(0, cells.WORLD_SIZE, 1000)
-    c7 = cells.np_cell(x, y, 7)
-    c5 = cells.np_cell(x, y, 5)
-    assert np.array_equal(cells.np_parent(c7, 7, 5), c5)
+    c7 = ref.np_cell(x, y, 7)
+    c5 = ref.np_cell(x, y, 5)
+    assert np.array_equal(ref.np_parent(c7, 7, 5), c5)
 
 
 def test_cover_bbox_contains_corners():
-    cover = cells.np_cover_bbox(1000, 2000, 1400, 2400, 7)
+    cover = ref.np_cover_bbox(1000, 2000, 1400, 2400, 7)
     for x, y in [(1000, 2000), (1400, 2400), (1200, 2200)]:
-        assert cells.np_cell(np.array([x]), np.array([y]), 7)[0] in cover
+        assert ref.np_cell(np.array([x]), np.array([y]), 7)[0] in cover
 
 
-def test_kring_counts_and_clipping():
-    c = cells.np_cell(np.array([50000.0]), np.array([50000.0]), 7)[0]
-    assert len(cells.np_kring(c, 1, 7)) == 9
-    assert len(cells.np_kring(c, 2, 7)) == 25
-    # corner cell: clipped ring
-    corner = cells.np_cell(np.array([0.0]), np.array([0.0]), 7)[0]
-    assert len(cells.np_kring(corner, 1, 7)) == 4
-
-
-def test_spark_and_sql_match_numpy(spark):
-    rng = np.random.default_rng(1)
-    pts = [(float(x), float(y)) for x, y in
-           zip(rng.uniform(0, cells.WORLD_SIZE, 200), rng.uniform(0, cells.WORLD_SIZE, 200))]
-    df = spark.createDataFrame(pts, "x double, y double")
-    got = [r[0] for r in df.select(cells.col_cell(F.col("x"), F.col("y"), 7)).collect()]
-    want = cells.np_cell(np.array([p[0] for p in pts]), np.array([p[1] for p in pts]), 7)
-    assert got == want.tolist()
-
-    con = duckdb.connect()
-    con.execute("CREATE TABLE pts(x DOUBLE, y DOUBLE)")
-    con.executemany("INSERT INTO pts VALUES (?, ?)", pts)
-    sql_got = [r[0] for r in con.execute(
-        f"SELECT {cells.sql_cell('x', 'y', 7)} FROM pts").fetchall()]
-    assert sql_got == want.tolist()
-
-
-def test_spark_cover_and_kring_match_numpy(spark):
+def test_spark_cover_matches_numpy(spark):
     df = spark.createDataFrame(
         [(1000.0, 2000.0, 9000.0, 7500.0)], "x0 double, y0 double, x1 double, y1 double"
     )
@@ -59,13 +33,8 @@ def test_spark_cover_and_kring_match_numpy(spark):
         cells.col_cover_bbox(F.col("x0"), F.col("y0"), F.col("x1"), F.col("y1"), 7)
         .alias("c")
     ).first()["c"]
-    want = cells.np_cover_bbox(1000, 2000, 9000, 7500, 7)
+    want = ref.np_cover_bbox(1000, 2000, 9000, 7500, 7)
     assert sorted(got) == sorted(want.tolist())
-
-    c = int(cells.np_cell(np.array([0.0]), np.array([0.0]), 7)[0])
-    got_ring = spark.createDataFrame([(c,)], "cell long").select(
-        cells.col_kring(F.col("cell"), 1, 7).alias("r")).first()["r"]
-    assert sorted(got_ring) == sorted(cells.np_kring(c, 1, 7).tolist())
 
 
 def test_geo_lon_wrap_identities():
@@ -73,59 +42,33 @@ def test_geo_lon_wrap_identities():
     res = 7
     lons = np.array([-180.0, -179.9, 0.0, 179.9, 180.0, 200.0, -160.0])
     lats = np.zeros_like(lons)
-    c = cells.np_geo_cell(lons, lats, res)
+    c = ref.np_geo_cell(lons, lats, res)
     assert c[0] == c[4]                      # -180 == +180
     assert c[5] == c[6]                      # 200 == -160 (wrap)
-    assert (cells.np_geo_cell(lons + 360.0, lats, res) == c).all()
+    assert (ref.np_geo_cell(lons + 360.0, lats, res) == c).all()
     # poles clamp, don't wrap
-    assert cells.np_geo_iy(np.array([90.0]), res)[0] == (1 << res) - 1
-    assert cells.np_geo_iy(np.array([-90.0]), res)[0] == 0
-
-
-def test_geo_kring_crosses_antimeridian():
-    """A cell at ix=0 has ring neighbours at ix=n-1 (no clamping in lon)."""
-    res = 5
-    n = 1 << res
-    c = int(cells.np_geo_cell(np.array([-179.9]), np.array([0.0]), res)[0])
-    ix = c // n
-    assert ix == 0
-    ring = cells.np_geo_kring(c, 1, res)
-    assert any(r // n == n - 1 for r in ring)       # wrapped west neighbour
-    assert len(ring) == 9                            # full 3x3, nothing clipped
+    assert ref.np_geo_iy(np.array([90.0]), res)[0] == (1 << res) - 1
+    assert ref.np_geo_iy(np.array([-90.0]), res)[0] == 0
 
 
 def test_geo_cover_bbox_antimeridian_split():
     res = 5
     n = 1 << res
-    cover = cells.np_geo_cover_bbox(170.0, -5.0, -170.0, 5.0, res)
+    cover = ref.np_geo_cover_bbox(170.0, -5.0, -170.0, 5.0, res)
     ixs = sorted(set(int(c) // n for c in cover))
     assert 0 in ixs and n - 1 in ixs                 # both sides of the seam
     assert not any(5 < ix < n - 5 for ix in ixs)     # nothing in the middle
 
 
 def test_geo_columns_match_numpy(spark):
-    """Catalyst geo cell / kring / cover == numpy on wrap-heavy inputs."""
+    """Catalyst geo cover == numpy on wrap-heavy inputs."""
     res = 6
-    pts = [(-180.0, -90.0), (-179.99, 45.0), (179.99, 45.0), (180.0, 0.0),
-           (250.0, 89.9), (-300.0, -89.9), (0.0, 0.0)]
-    df = spark.createDataFrame(pts, "lon double, lat double")
-    got = [r["cell"] for r in
-           df.select(cells.col_geo_cell(F.col("lon"), F.col("lat"), res)).collect()]
-    want = cells.np_geo_cell(np.array([p[0] for p in pts]),
-                             np.array([p[1] for p in pts]), res)
-    assert got == want.tolist()
-
-    c = int(cells.np_geo_cell(np.array([179.9]), np.array([60.0]), res)[0])
-    ring = spark.createDataFrame([(c,)], "cell long").select(
-        cells.col_geo_kring(F.col("cell"), 2, res).alias("r")).first()["r"]
-    assert sorted(set(ring)) == cells.np_geo_kring(c, 2, res).tolist()
-
     boxes = [(170.0, -5.0, -170.0, 5.0), (-10.0, -5.0, 10.0, 5.0)]
     bdf = spark.createDataFrame(boxes, "x0 double, y0 double, x1 double, y1 double")
     got_cov = [sorted(r["cov"]) for r in bdf.select(
         cells.col_geo_cover_bbox(F.col("x0"), F.col("y0"), F.col("x1"),
                                  F.col("y1"), res).alias("cov")).collect()]
-    want_cov = [sorted(cells.np_geo_cover_bbox(*b, res).tolist()) for b in boxes]
+    want_cov = [sorted(ref.np_geo_cover_bbox(*b, res).tolist()) for b in boxes]
     assert got_cov == want_cov
 
 
@@ -135,14 +78,14 @@ def test_geo_cover_right_edge_at_seam(spark):
     (previously: empty / column-0-only covers)."""
     res = 5
     n = 1 << res
-    world = cells.np_geo_cover_bbox(-180.0, -5.0, 180.0, 5.0, res)
+    world = ref.np_geo_cover_bbox(-180.0, -5.0, 180.0, 5.0, res)
     assert sorted(set(int(c) // n for c in world)) == list(range(n))
-    strip = cells.np_geo_cover_bbox(170.0, -5.0, 180.0, 5.0, res)
+    strip = ref.np_geo_cover_bbox(170.0, -5.0, 180.0, 5.0, res)
     assert len(strip) > 0
     # 170 sits inside the last column (starts at 168.75 at res=5)
     assert set(int(c) // n for c in strip) == {n - 1}
     # [170, -180] is the same box as [170, 180] (right edge normalised)
-    same = cells.np_geo_cover_bbox(170.0, -5.0, -180.0, 5.0, res)
+    same = ref.np_geo_cover_bbox(170.0, -5.0, -180.0, 5.0, res)
     assert sorted(same.tolist()) == sorted(strip.tolist())
 
     # Catalyst twin agrees on all three
@@ -152,21 +95,8 @@ def test_geo_cover_right_edge_at_seam(spark):
     got = [sorted(r["cov"]) for r in bdf.select(
         cells.col_geo_cover_bbox(F.col("x0"), F.col("y0"), F.col("x1"),
                                  F.col("y1"), res).alias("cov")).collect()]
-    want = [sorted(cells.np_geo_cover_bbox(*b, res).tolist()) for b in boxes]
+    want = [sorted(ref.np_geo_cover_bbox(*b, res).tolist()) for b in boxes]
     assert got == want
-
-
-def test_geo_kring_full_wrap_dedup(spark):
-    """Regression: a ring wider than the circle (2k+1 > n) dedups identically
-    in numpy and Catalyst."""
-    res = 3  # n = 8
-    n = 1 << res
-    c = int(cells.np_geo_cell(np.array([0.0]), np.array([0.0]), res)[0])
-    want = cells.np_geo_kring(c, 5, res)  # 11 > 8 -> full wrap
-    got = spark.createDataFrame([(c,)], "cell long").select(
-        cells.col_geo_kring(F.col("cell"), 5, res).alias("r")).first()["r"]
-    assert got == want.tolist()
-    assert len(got) == len(set(got))
 
 
 def test_geo_ix_hi_wraps_out_of_contract_lons(spark):
@@ -190,7 +120,6 @@ def test_geo_ix_hi_wraps_out_of_contract_lons(spark):
         )
         .toPandas()
     )
-    import numpy as np
-    assert got["hi"].tolist() == cells.np_geo_ix_hi(
+    assert got["hi"].tolist() == ref.np_geo_ix_hi(
         np.array(lons), 3).tolist()
-    assert got["ix"].tolist() == cells.np_geo_ix(np.array(lons), 3).tolist()
+    assert got["ix"].tolist() == ref.np_geo_ix(np.array(lons), 3).tolist()

@@ -87,14 +87,6 @@ def test_export_guards(spark):
         co.check_export_guards(too_many)
 
 
-def test_enums_vocabulary():
-    from geedim_spark import enums
-    assert enums.CompositeMethod("q-mosaic").value == "q-mosaic"
-    assert {m.value for m in enums.CloudMaskMethod} == {
-        "cloud-score", "cloud-prob", "qa"}
-    assert enums.ResamplingMethod.bilinear.value == "bilinear"
-
-
 def test_compatible_collections(spark):
     ok = synth.images_meta_df(spark, 9).filter("collection = 'MOCK/CONST'")
     assert co.check_compatible_collections(ok) == ["MOCK/CONST"]
@@ -128,6 +120,24 @@ def test_compatible_collections_landsat(spark):
     with pytest.raises(ValueError, match="Incompatible"):
         co.check_compatible_collections(
             df("LANDSAT/LC08/C02/T1_L2", "COPERNICUS/S2_SR_HARMONIZED"))
+
+
+def test_compatible_collections_null_collection(spark):
+    """A NULL collection next to a named one is an incompatible mix (the
+    loud ValueError), not a TypeError from sorting None against str —
+    directly and through the ``Collection.from_images`` facade."""
+    from geedim_spark.api import Collection
+
+    df = spark.createDataFrame([("LANDSAT/LC08/C02/T1_L2",), (None,)],
+                               "collection string")
+    with pytest.raises(ValueError, match="Incompatible"):
+        co.check_compatible_collections(df)
+    with pytest.raises(ValueError, match="Incompatible"):
+        Collection.from_images(Collection(df))
+    # NULL alone is one (unnamed) collection, as before
+    assert co.check_compatible_collections(df.where("collection IS NULL")) \
+        == [None]
+
 
 def test_compatibility_check_is_anchored(spark):
     """Regression: unanchored regex let ids with extra suffixes/prefixes

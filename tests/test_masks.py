@@ -9,6 +9,7 @@ import pytest
 
 from geedim_spark import synth
 from geedim_spark.operators import masks
+from tests.reference import masks as ref_masks
 
 
 def _landsat_strip_bands(w=100, h=100):
@@ -444,26 +445,6 @@ def test_qa60_valid_nat_assumes_populated():
     assert m["CLOUD_MASK"].sum() == 4 * 8  # qa bits honoured
 
 
-def test_mask_stats_with_metrics_matches_mask_stats(spark):
-    """Regression: the metrics variant must route through the same
-    per-collection dispatch as masks.mask_stats (S2 rows diverged when the
-    dispatch moved to masks_for) and the same bestEffort decimation (a
-    1024x1024 image is over MAX_REGION_STAT_PIXELS, so both count every
-    2nd row/column)."""
-    from geedim_spark.plans import metrics as mx
-
-    for imgs in (synth.images_df(spark, 30).filter("fmt = 'raw'"),
-                 synth.images_df(spark, 3, w=1024, h=1024)):
-        pm = mx.PipelineMetrics(spark)
-        got = sorted(map(tuple, mx.mask_stats_with_metrics(imgs, pm).collect()))
-        want = sorted(map(tuple, masks.mask_stats(imgs).collect()))
-        assert got == want
-        snap = pm.snapshot()
-        assert snap["images"] == len(want)
-        assert snap["pixels"] == sum(r[1] for r in want)
-    assert {r[1] for r in want} == {512 * 512}
-
-
 def test_focal_decomposition_equals_naive():
     """The vertical-segment disk decomposition must equal the per-offset
     union/intersection for every radius and boundary case."""
@@ -472,11 +453,11 @@ def test_focal_decomposition_equals_naive():
         m = rng.random(shape) < 0.15
         for r in (1, 2, 3, 5, 7):
             naive_max = np.zeros_like(m)
-            for dy, dx in masks._disk_offsets(r):
+            for dy, dx in ref_masks._disk_offsets(r):
                 naive_max |= masks._shift(m, dy, dx, False)
             assert np.array_equal(masks.focal_max(m, r), naive_max), (shape, r)
             assert np.array_equal(
-                masks.focal_min(m, r), masks._focal_min_naive(m, r)
+                masks.focal_min(m, r), ref_masks._focal_min_naive(m, r)
             ), (shape, r)
 
 

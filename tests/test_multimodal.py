@@ -1,12 +1,12 @@
-"""Multimodal plumbing: real codecs, stub decoders, frame sampling."""
+"""Multimodal plumbing: real codecs, stub decoders, aspect buckets and the
+metadata quality gate."""
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pytest
 
-from geedim_spark import codecs, synth
+from geedim_spark import synth
 from geedim_spark.operators import multimodal as mm
 
 
@@ -29,27 +29,6 @@ def test_stub_decode_deterministic_and_marked(spark):
     assert a.shape == (3, 6, 8) and np.array_equal(a, b)
     with pytest.raises(NotImplementedError, match="no decoder"):
         mm.decode_pixels(buf, "tiff", 8, 6)
-
-
-def test_frame_sample(spark):
-    rng = np.random.default_rng(9)
-    frames = rng.integers(0, 255, size=(10, 4, 6), dtype=np.int64).astype(np.uint8)
-    df = spark.createDataFrame(
-        pd.DataFrame([{"video_id": "VID/0", "bytes": mm.encode_video(frames)}])
-    )
-    out = mm.frame_sample(df, every_n=3).collect()
-    assert [r["frame_idx"] for r in sorted(out, key=lambda r: r["frame_idx"])] == [0, 3, 6, 9]
-    f3 = next(r for r in out if r["frame_idx"] == 3)
-    assert np.array_equal(codecs.decode(bytes(f3["frame_bytes"]))[0], frames[3])
-
-
-def test_resize_media(spark):
-    imgs = synth.images_df(spark, 4).filter("fmt = 'raw'")
-    out = mm.resize_media(imgs, 20, 20).collect()
-    for r in out:
-        px = codecs.decode(bytes(r["bytes"]))
-        assert px.shape == (2, 20, 20)
-        assert r["w"] == 20 and r["h"] == 20
 
 
 def test_aspect_bucket_known_assignments(spark):

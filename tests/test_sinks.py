@@ -1,10 +1,9 @@
-"""Secondary sinks: structured dtype view, xarray coord math, medoid cap."""
+"""Secondary sinks: structured dtype view, medoid cap."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pytest
 
 from geedim_spark import codecs
 from geedim_spark.operators import composite as comp
@@ -16,18 +15,6 @@ def test_to_structured_view():
     s = sinks.to_structured(arr, ["B2", "B3"])
     assert s.shape == (3, 4) and s.dtype.names == ("B2", "B3")
     assert np.array_equal(s["B3"], arr[1])
-
-
-def test_xarray_coords_from_transform():
-    tf = [10.0, 0, 100.0, 0, -10.0, 500.0]
-    c = sinks.xarray_coords(tf, h=3, w=4)
-    assert c["x"].tolist() == [105.0, 115.0, 125.0, 135.0]
-    assert c["y"].tolist() == [495.0, 485.0, 475.0]
-
-
-def test_to_xarray_gated():
-    with pytest.raises(ImportError):
-        sinks.to_xarray(np.zeros((1, 2, 2)), [1, 0, 0, 0, -1, 2], ["B1"])
 
 
 def test_medoid_stack_cap(spark):

@@ -1,11 +1,10 @@
-"""Snapshot manifest: commit, isolation, resume, pruning, metrics."""
+"""Snapshot manifest: commit, isolation, resume, partition pruning."""
 
 from __future__ import annotations
 
 import pytest
 
 from geedim_spark import synth
-from geedim_spark.plans.metrics import PipelineMetrics, mask_stats_with_metrics
 from geedim_spark.sources import snapshots as snap
 
 
@@ -53,15 +52,6 @@ def test_resume_pending_keys(spark, table_dir):
     assert len(got) == 2
 
 
-def test_prune_partitions(spark, table_dir):
-    df = synth.images_meta_df(spark, 60).select("image_id", "collection", "x0")
-    snap.write_snapshot(df, table_dir, "collection", stats_cols=("x0",))
-    all_keys = snap.prune_partitions(table_dir, "x0")
-    assert len(all_keys) == 3
-    none = snap.prune_partitions(table_dir, "x0", lo=1e9)
-    assert none == []
-
-
 def test_cell_prefix_partitioning_prunes_scan(spark, table_dir):
     """§4 partition-pruning claim end-to-end: tiles partitioned by a coarse
     parent cell; a cell-prefix predicate reaches the scan as a
@@ -69,11 +59,11 @@ def test_cell_prefix_partitioning_prunes_scan(spark, table_dir):
     from pyspark.sql import functions as F
     from geedim_spark import cells
 
+    # the res-2 cell of the footprint centre: ix * 4 + iy
+    ix = cells.col_cell_index((F.col("x0") + F.col("x1")) / 2, cells.WORLD_X0, 2)
+    iy = cells.col_cell_index((F.col("y0") + F.col("y1")) / 2, cells.WORLD_Y0, 2)
     imgs = synth.images_meta_df(spark, 200).withColumn(
-        "cell_prefix",
-        cells.col_cell((F.col("x0") + F.col("x1")) / 2,
-                       (F.col("y0") + F.col("y1")) / 2, 2),
-    )
+        "cell_prefix", ix * 4 + iy)
     snap.write_snapshot(
         imgs.select("image_id", "x0", "y0", "cell_prefix"),
         table_dir, "cell_prefix",
@@ -85,26 +75,6 @@ def test_cell_prefix_partitioning_prunes_scan(spark, table_dir):
     # pruned read returns exactly that partition's rows
     want = imgs.filter(F.col("cell_prefix") == 5).count()
     assert one.count() == want > 0
-
-
-def test_metrics_accumulators(spark):
-    imgs = synth.images_df(spark, 24).filter("fmt = 'raw'")
-    metrics = PipelineMetrics(spark)
-    out = mask_stats_with_metrics(imgs, metrics)
-    n = out.count()
-    m = metrics.snapshot()
-    assert m["images"] == n
-    assert m["pixels"] == n * 40 * 40
-    assert 0 < m["fill_coverage"] <= 1.0
-
-
-def test_lineage_emission(spark, tmp_path):
-    from geedim_spark.plans.metrics import emit_lineage
-    p = str(tmp_path / "lineage.jsonl")
-    emit_lineage(spark, p, "test_job", {"rows": 5})
-    import json
-    rec = json.loads(open(p).read().strip())
-    assert rec["job"] == "test_job" and rec["rows"] == 5
 
 
 def test_snapshot_isolation_under_overwrite(spark, table_dir):

@@ -69,7 +69,8 @@ def test_geo_filter_bounds_across_antimeridian(spark):
     """Footprints and an ROI straddling ±180°: the geo join finds the
     wrap matches the planar grid structurally cannot."""
     import numpy as np
-    from geedim_spark import geometry
+
+    from tests.reference import geometry
 
     images = spark.createDataFrame(
         [

@@ -5,108 +5,43 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pytest
 
 from geedim_spark import codecs
 from geedim_spark.operators import masks, stencil
+from tests.reference.stencil import assemble_tiles
 
 
-def _image_rows(masks_by_id: dict[str, np.ndarray]):
-    """Encode cloudless masks as 2-band images: B1 carries the mask scaled
-    so fill/cloud strips reproduce it via the landsat kernel is overkill —
-    use MOCK/CONST (cloudless == B1 != 0)."""
-    rows = []
-    for image_id, mk in masks_by_id.items():
-        px = np.zeros((2, *mk.shape), np.uint16)
-        px[0] = mk.astype(np.uint16) * 7  # nonzero where cloudless
-        rows.append({
-            "image_id": image_id, "bytes": codecs.encode_raw(px),
-            "collection": "MOCK/CONST",
-        })
-    return pd.DataFrame(rows)
+def _landsat_rows(fill: np.ndarray, cloud: np.ndarray) -> pd.DataFrame:
+    """One Landsat image whose B1 carries ``fill`` and whose QA_PIXEL
+    cloud bit carries ``cloud`` (mask with ``mask_shadows=False``)."""
+    px = np.zeros((2, *fill.shape), np.uint16)
+    px[0] = fill.astype(np.uint16) * 7
+    px[1][cloud] = 1 << 9
+    return pd.DataFrame([{
+        "image_id": "IMG/0", "bytes": codecs.encode_raw(px),
+        "collection": "LANDSAT/LC09/C02/T1_L2",
+    }])
 
 
-@pytest.fixture
-def random_masks():
+def test_halo_insufficient_is_detectably_different(spark):
+    """Sanity: with halo < clamp reach the tile borders differ from the
+    whole image — documents why the halo_px contract matters (the exact
+    tests are not accidental passes)."""
     rng = np.random.default_rng(21)
-    return {
-        f"IMG/{i:08d}": rng.random((37, 43)) > 0.03  # sparse cloud sources
-        for i in range(4)
-    }
-
-
-def test_tiled_cloud_dist_equals_whole_image(spark, random_masks):
-    scale, max_dist = 1.0, 12.0
-    halo = 12  # ceil(max_dist / scale)
+    fill = np.ones((37, 43), bool)
+    cloud = rng.random((37, 43)) < 0.03  # sparse cloud sources
     tiles = stencil.mask_tiles(
-        spark.createDataFrame(_image_rows(random_masks)), tile_h=16, tile_w=16
+        spark.createDataFrame(_landsat_rows(fill, cloud)), tile_h=16,
+        tile_w=16, mask_shadows=False,
     )
     out = stencil.halo_apply(
-        tiles, stencil.cloud_dist_kernel(scale, max_dist),
-        halo_px=halo, tile_h=16, tile_w=16, out_dtype="float64",
-    )
-    rows = out.collect()
-    by_img = {}
-    for r in rows:
-        by_img.setdefault(r["image_id"], []).append(r)
-    for image_id, mk in random_masks.items():
-        got = stencil.assemble_tiles(by_img[image_id], 16, 16)
-        # the tiled kernel floors to the uint16 metre grid exactly like
-        # masks.cloud_dist (mask.py:124 toUint16)
-        want = np.floor(
-            np.clip(np.sqrt(masks.edt_squared(~mk)) * scale, 0, max_dist)
-        )
-        assert np.array_equal(got, want), image_id
-
-
-def test_tiled_focal_max_equals_whole_image(spark, random_masks):
-    # dilate the cloud (inverse) mask by radius 3
-    inv = {k: ~v for k, v in random_masks.items()}
-    tiles = stencil.mask_tiles(
-        spark.createDataFrame(_image_rows(inv)), tile_h=16, tile_w=16
-    )
-    out = stencil.halo_apply(
-        tiles, stencil.focal_max_kernel(3), halo_px=3,
-        tile_h=16, tile_w=16, out_dtype="uint8",
-    )
-    by_img = {}
-    for r in out.collect():
-        by_img.setdefault(r["image_id"], []).append(r)
-    for image_id, mk in inv.items():
-        got = stencil.assemble_tiles(by_img[image_id], 16, 16, dtype="uint8")
-        want = masks.focal_max(mk, 3).astype(np.uint8)
-        assert np.array_equal(got, want), image_id
-
-
-def test_tiled_focal_min_edge_semantics(spark):
-    mk = np.ones((20, 20), bool)
-    mk[8:12, 8:12] = False
-    tiles = stencil.mask_tiles(
-        spark.createDataFrame(_image_rows({"IMG/0": mk})), tile_h=8, tile_w=8
-    )
-    out = stencil.halo_apply(
-        tiles, stencil.focal_min_kernel(2), halo_px=2,
-        tile_h=8, tile_w=8, out_dtype="uint8",
-    )
-    got = stencil.assemble_tiles(out.collect(), 8, 8, dtype="uint8")
-    want = masks.focal_min(mk, 2).astype(np.uint8)
-    assert np.array_equal(got, want)
-
-
-def test_halo_insufficient_is_detectably_different(spark, random_masks):
-    """Sanity: with halo < clamp reach the borders CAN differ — documents
-    why the halo_px contract matters (not an accidental pass)."""
-    image_id, mk = next(iter(random_masks.items()))
-    tiles = stencil.mask_tiles(
-        spark.createDataFrame(_image_rows({image_id: mk})), tile_h=16, tile_w=16
-    )
-    out = stencil.halo_apply(
-        tiles, stencil.cloud_dist_kernel(1.0, 50.0),  # reach 50 >> halo 4
+        tiles, stencil.cloud_dist_code_kernel(1.0, 50.0),  # reach 50 >> halo 4
         halo_px=4, tile_h=16, tile_w=16, out_dtype="float64",
     )
-    got = stencil.assemble_tiles(out.collect(), 16, 16)
-    want = np.floor(np.clip(np.sqrt(masks.edt_squared(~mk)), 0, 50.0))
-    assert got.shape == want.shape  # runs fine; equality not guaranteed
+    got = assemble_tiles(out.collect(), 16, 16)
+    want = np.floor(np.clip(np.sqrt(masks.edt_squared(cloud)), 0, 50.0))
+    assert got.shape == want.shape
+    assert not np.array_equal(got, want)
 
 
 def test_tiled_code_edt_equals_whole_image_fill_semantics(spark):
@@ -117,22 +52,15 @@ def test_tiled_code_edt_equals_whole_image_fill_semantics(spark):
     fill = rng.random((h, w)) > 0.1
     cloud = (rng.random((h, w)) < 0.05) & fill
     cloudless = fill & ~cloud
-    px = np.zeros((2, h, w), np.uint16)
-    px[0] = fill.astype(np.uint16) * 7
-    px[1][cloud] = 1 << 9
-    rows = pd.DataFrame([{
-        "image_id": "IMG/0", "bytes": codecs.encode_raw(px),
-        "collection": "LANDSAT/LC09/C02/T1_L2",
-    }])
     tiles = stencil.mask_tiles(
-        spark.createDataFrame(rows), tile_h=16, tile_w=16, plane="code",
-        mask_shadows=False,
+        spark.createDataFrame(_landsat_rows(fill, cloud)), tile_h=16,
+        tile_w=16, mask_shadows=False,
     )
     out = stencil.halo_apply(
         tiles, stencil.cloud_dist_code_kernel(1.0, 12.0),
         halo_px=12, tile_h=16, tile_w=16, out_dtype="float64",
     )
-    got = stencil.assemble_tiles(out.collect(), 16, 16)
+    got = assemble_tiles(out.collect(), 16, 16)
     # whole-image EDT with cloud-only sources, floored to the uint16 metre
     # grid (the kernel applies masks.cloud_dist's toUint16 semantics so
     # q-mosaic tie-breaks match the whole-image path)

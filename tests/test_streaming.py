@@ -7,6 +7,7 @@ import pytest
 from geedim_spark import synth
 from geedim_spark.sources import snapshots
 from geedim_spark.streaming import ingest
+from tests.reference import streaming as ref_streaming
 
 
 def test_stream_windowed_counts_match_batch(spark, tmp_path):
@@ -28,7 +29,7 @@ def test_stream_windowed_counts_match_batch(spark, tmp_path):
         got[k] = max(got.get(k, 0), r["n"])
     want = {
         (r["window_start"], r["event_type"]): r["n"]
-        for r in sw.windowed_counts_batch(events).collect()
+        for r in ref_streaming.windowed_counts_batch(events).collect()
     }
     assert got == want and len(want) > 5
 
@@ -80,35 +81,6 @@ def test_stream_ingest_commits_snapshots(spark, tmp_path):
     q2 = ingest.stream_mask_stats(spark, source, table, ckpt, available_now=True)
     q2.awaitTermination(120)
     assert snapshots.read_snapshot(spark, table).count() == n_raw
-
-
-def test_lineage_listener_records_batches(spark, tmp_path):
-    """Custom StreamingQueryListener: started + per-batch progress rows with
-    exact input row counts, terminated on drain."""
-    from geedim_spark.streaming import listener as lin
-
-    source = str(tmp_path / "incoming")
-    table = str(tmp_path / "stats_table")
-    ckpt = str(tmp_path / "ckpt")
-    log = str(tmp_path / "lineage.jsonl")
-
-    synth.images_df(spark, 24).coalesce(4).write.parquet(source)
-
-    with lin.lineage(spark, log):
-        q = ingest.stream_mask_stats(spark, source, table, ckpt,
-                                     available_now=True)
-        q.awaitTermination(180)
-        assert lin.wait_for_event(log, "terminated", timeout=60) is not None
-
-    recs = lin.read_lineage(log)
-    events = [r["event"] for r in recs]
-    assert "started" in events and "terminated" in events
-    progress = [r for r in recs if r["event"] == "progress"]
-    assert progress, "no per-batch progress records"
-    # maxFilesPerTrigger=4 over 4 files -> all 24 rows accounted for
-    assert sum(p["num_input_rows"] for p in progress) == 24
-    # every progress record carries source offsets (per-batch lineage)
-    assert all(p["sources"] and p["sources"][0]["end_offset"] for p in progress)
 
 
 def test_stream_ingest_multi_batch_append(spark, tmp_path):
@@ -297,7 +269,7 @@ def test_stream_stream_join_matches_batch(spark, tmp_path):
         within="2 hours", sink_table="ssj_test")
     assert q.awaitTermination(180)
     got = sorted(map(tuple, spark.table("ssj_test").collect()))
-    want = sorted(map(tuple, sj.event_join_batch(
+    want = sorted(map(tuple, ref_streaming.event_join_batch(
         events, left_type="view", right_type="click",
         within="2 hours").collect()))
     assert got == want and len(want) > 0

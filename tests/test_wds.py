@@ -3,14 +3,31 @@ layout-independent shard bytes, manifest integrity, overwrite guard."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tarfile
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from geedim_spark import synth
 from geedim_spark.sources import wds
+
+
+def _manifest_ok(out_dir):
+    """{shard: tar sha256 == the committed manifest's} for every row of
+    ``out_dir/_manifest`` (a missing tar counts as a mismatch)."""
+    ok = {}
+    for r in pq.read_table(os.path.join(out_dir, "_manifest")).to_pylist():
+        path = r["path"]
+        if os.path.exists(path):
+            with open(path, "rb") as fh:
+                ok[r["shard"]] = hashlib.sha256(fh.read()).hexdigest() \
+                    == r["tar_sha256"]
+        else:
+            ok[r["shard"]] = False
+    return ok
 
 
 @pytest.fixture(scope="module")
@@ -49,8 +66,8 @@ def test_wds_roundtrip_byte_exact(spark, images, tmp_path):
     }
     assert got == expect
     # integrity check passes for every shard
-    ok = wds.verify_manifest(spark, out).collect()
-    assert len(ok) == len(rows) and all(r["ok"] for r in ok)
+    ok = _manifest_ok(out)
+    assert len(ok) == len(rows) and all(ok.values())
 
 
 def test_wds_deterministic_across_layout(spark, images, tmp_path):
@@ -119,7 +136,7 @@ def test_wds_resume_fills_only_missing_shards(spark, images, tmp_path):
     # survivors were not rewritten
     assert {p: os.stat(p).st_mtime_ns for p in before} == before
     assert wds.read_wds_shards(spark, out).count() == 60
-    ok = wds.verify_manifest(spark, out).collect()
-    assert len(ok) == 4 and all(r["ok"] for r in ok)
+    ok = _manifest_ok(out)
+    assert len(ok) == 4 and all(ok.values())
     with pytest.raises(ValueError, match="mutually exclusive"):
         wds.write_wds_shards(images, out, overwrite=True, resume=True)
