@@ -849,11 +849,12 @@ def q_tiled_portions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _staged_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synth images materialised to parquet once per (n) — for MULTI-PASS
-    queries.  search() executes the images lineage 3-4x (bounds cover,
-    stats kernel, output side); over the mapInPandas generator every pass
-    re-encodes blobs (a UDF barrier defeats column pruning), while over
-    parquet the meta-only passes are pruned scans that never read the bytes
-    column (the production shape: ReadSchema drops `bytes`)."""
+    queries.  search() executes the images lineage more than once (the
+    bounds-cover id pass, the time-sort sample, the row pass its mask kernel
+    reads); over the mapInPandas generator every pass re-encodes blobs (a
+    UDF barrier defeats column pruning), while over parquet the meta-only
+    passes are pruned scans that never read the bytes column (the
+    production shape: ReadSchema drops `bytes`)."""
     n, _ = _sizes(sf_dir)
     path = f"/tmp/geedim_spark_staged_images_n{n}_{synth.recipe_hash()}"
     if not os.path.exists(f"{path}/_SUCCESS"):
@@ -2592,8 +2593,9 @@ def _ducksizes(sf: float) -> tuple[int, int]:
 
 
 def _lsh_bucket_sql(dim: int = ORACLE_EMB_DIM, n_planes: int = 4) -> str:
-    """SQL twin of similarity.lsh_bucket_quantised: same seeded integer
-    planes, exact int64 dot products, same sign->bit packing."""
+    """SQL twin of the quantised LSH bucket (the reference twin
+    ``lsh_bucket_quantised`` in tests/reference/similarity.py): same seeded
+    integer planes, exact int64 dot products, same sign->bit packing."""
     planes = similarity.lsh_int_planes(dim, n_planes)
     terms = []
     for i, p in enumerate(planes):

@@ -8,11 +8,13 @@ plumbing once, so an operator is just its column list, its output schema
 and its per-row function.  Batch-vectorised kernels use
 :func:`map_batches`, which :func:`map_rows` is built on.  Grouped kernels
 (composite stacks, halo tiles, per-image and per-shard file sinks) use
-:func:`map_groups`, the same contract over one ``groupBy`` group.
+:func:`map_groups`, the same contract over one ``groupBy`` group.  A
+per-row kernel that adds or replaces columns of rows it keeps whole uses
+:func:`with_columns`, whose other columns pass through as Arrow.
 
 All of them install :func:`install_zip_cache_guard` in the worker, a fix
 for a fixed per-task cost that every Python kernel task pays.  This is the
-only module that calls ``mapInPandas`` / ``applyInPandas``.
+only module that calls ``mapInPandas`` / ``applyInPandas`` / ``mapInArrow``.
 """
 
 from __future__ import annotations
@@ -22,7 +24,10 @@ import sys
 from collections.abc import Callable, Iterable
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 
@@ -129,6 +134,38 @@ def map_rows(
         return pd.DataFrame(rows, columns=names)
 
     return map_batches(df.select(*cols), st, _rows)
+
+
+def with_columns(
+    df: DataFrame,
+    cols: list[str],
+    schema: str | StructType,
+    fn: Callable[..., tuple],
+) -> DataFrame:
+    """``df.withColumns`` for a per-row kernel: ``fn(*values)`` gets the
+    row's ``cols`` values (None for NULL, timestamps naive session-local)
+    and returns one tuple in ``schema`` order.  A field naming a column of
+    ``df`` replaces it in place; others are appended.  Other columns pass
+    through as Arrow (``mapInArrow``): pandas would turn a long column
+    holding a NULL into float64 and a NaN into NULL.  Order kept, no shuffle."""
+    st = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    new_types = dict(zip(st.fieldNames(), to_arrow_schema(st).types))
+    names = df.columns + [n for n in new_types if n not in df.columns]
+    fields = {f.name: f for f in df.schema.fields + st.fields}  # new field wins
+
+    def _batches(it):
+        install_zip_cache_guard()
+        for batch in it:
+            # tz-aware timestamps -> naive session-local, as map_rows kernels get them
+            args = [pc.local_timestamp(a) if getattr(a.type, "tz", None) else a
+                    for a in (batch.column(c) for c in cols)]
+            rows = [fn(*values) for values in zip(*(a.to_pylist() for a in args))]
+            new = {n: pa.array([r[i] for r in rows], t)
+                   for i, (n, t) in enumerate(new_types.items())}
+            yield pa.RecordBatch.from_arrays(
+                [new[n] if n in new else batch.column(n) for n in names], names=names)
+
+    return df.mapInArrow(_batches, StructType([fields[n] for n in names]))
 
 
 def map_groups(

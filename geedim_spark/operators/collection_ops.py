@@ -10,10 +10,10 @@ Replicates the reference's ``ImageCollectionAccessor.filter()`` lifecycle
    FILL_PORTION / CLOUDLESS_PORTION (the predicate-ordering rule,
    collection.py:604-611; Catalyst can't reorder across the pixel-UDF
    barrier, so the API layer does);
-4. portion computation (mask_stats over decoded pixels) + thresholds
-   (collection.py:627-632); requesting portions without a region is an
-   error (collection.py:590-594);
-5. sort by capture time (collection.py:639).
+4. sort by capture time (collection.py:639), over the cheap rows;
+5. one kernel pass masks each remaining image once and appends its portions
+   to its row, then the thresholds (collection.py:627-632); portions need
+   a region (collection.py:590-594).
 """
 
 from __future__ import annotations
@@ -23,10 +23,9 @@ import datetime as dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geedim_spark.kernels import with_columns
 from geedim_spark.operators import masks
 from geedim_spark.operators.spatial_join import filter_bounds_semi
-
-_PORTION_PROPS = ("FILL_PORTION", "CLOUDLESS_PORTION")
 
 
 def filter_date(images: DataFrame, start=None, end=None) -> DataFrame:
@@ -117,20 +116,21 @@ def search(
     mask_opts: dict | None = None,
     collection_id: str | None = None,
 ) -> DataFrame:
-    """Filter an image collection; returns matching images + portion columns,
-    sorted by capture time.  ``custom_filter`` accepts the declared schema
-    abbreviations (e.g. ``"SAA <= 180 and CLOUDLESS >= 60"``) when
-    ``collection_id`` is given — see :func:`expand_schema_filter`."""
+    """Filter an image collection in the module docstring's steps; returns
+    the matching rows (input multiplicity kept) sorted by capture time.
+    ``custom_filter`` accepts the declared schema abbreviations (e.g.
+    ``"SAA <= 180 and CLOUDLESS >= 60"``) when ``collection_id`` is given
+    — see :func:`expand_schema_filter`."""
     if custom_filter and collection_id is not None:
         custom_filter = expand_schema_filter(custom_filter, collection_id)
     filter_wants_portions = bool(custom_filter) and any(
-        p.lower() in custom_filter.lower() for p in _PORTION_PROPS
+        p in custom_filter.lower() for p in ("fill_portion", "cloudless_portion")
     )
-    want_portions = fill_portion is not None or cloudless_portion is not None
-    if (want_portions or filter_wants_portions) and rois is None:
-        # collection.py:590-594 guard — a custom filter NAMING the portion
-        # properties needs a region just as much as the kwargs do
-        # (whole-image portions are values the reference never produces)
+    want_portions = (fill_portion is not None or cloudless_portion is not None
+                     or filter_wants_portions)
+    if want_portions and rois is None:
+        # collection.py:590-594: portions, as kwargs or named in the filter,
+        # need a region (the reference never produces whole-image portions)
         raise ValueError(
             "fill_portion / cloudless_portion (as kwargs or referenced in "
             "custom_filter) requires a region (rois)."
@@ -141,32 +141,31 @@ def search(
         out = filter_date(out, start, end)
     if rois is not None:
         out = filter_bounds_semi(out, rois)
-
     # predicate-ordering rule: cheap custom filter before pixel decode when
     # it doesn't reference portion properties (collection.py:604-611)
-    pre_applied = False
-    if custom_filter and not any(p.lower() in custom_filter.lower() for p in _PORTION_PROPS):
+    if custom_filter and not filter_wants_portions:
         out = out.filter(F.expr(custom_filter))
-        pre_applied = True
-
-    if want_portions or (custom_filter and not pre_applied):
-        stats = masks.with_portions(masks.mask_stats(out, **(mask_opts or {})))
-        out = out.join(
-            stats.select(
-                "image_id",
-                F.col("fill_portion").alias("FILL_PORTION"),
-                F.col("cloudless_portion").alias("CLOUDLESS_PORTION"),
-            ),
-            "image_id",
-        )
-        if fill_portion is not None:
-            out = out.filter(F.col("FILL_PORTION") >= fill_portion)
-        if cloudless_portion is not None:
-            out = out.filter(F.col("CLOUDLESS_PORTION") >= cloudless_portion)
-        if custom_filter and not pre_applied:
-            out = out.filter(F.expr(custom_filter))
-
-    return out.orderBy("time_start")  # collection.py:639
+    # sort the cheap rows (collection.py:639): the kernel and the filters
+    # below keep row order, and the range sampler never runs the kernel
+    out = out.orderBy("time_start")
+    if not want_portions:
+        return out
+    counts = with_columns(
+        out, masks._IMAGE_COLS,
+        "total_px long, fill_px long, cloud_px long, shadow_px long, cloudless_px long",
+        lambda *row: masks.mask_stats_row(*row, **(mask_opts or {}))[1:],
+    )
+    out = masks.with_portions(counts).select(
+        *out.columns,
+        F.col("fill_portion").alias("FILL_PORTION"),
+        F.col("cloudless_portion").alias("CLOUDLESS_PORTION"),
+    )
+    for col, lo in (("FILL_PORTION", fill_portion), ("CLOUDLESS_PORTION", cloudless_portion)):
+        if lo is not None:
+            out = out.filter(F.col(col) >= lo)
+    if filter_wants_portions:
+        out = out.filter(F.expr(custom_filter))
+    return out
 
 
 MAX_EXPORT_IMAGES = 5000  # hard cap per export (collection.py:102)

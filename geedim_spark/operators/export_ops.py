@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from geedim_spark import codecs
 from geedim_spark.functions.dtypes import cast_pixels
 from geedim_spark.kernels import map_rows
+from geedim_spark.operators import masks
 from geedim_spark.operators.tiler import tile_shape, tile_windows
 
 _TILE_SCHEMA = (
@@ -72,27 +73,29 @@ def assemble_image(tile_rows, bands: int, h: int, w: int, dtype: str) -> np.ndar
     return out
 
 
-def select_bands(
-    images: DataFrame,
-    band_regex: str,
-    band_names=("B1", "QA_PIXEL"),
-) -> DataFrame:
+def select_bands(images: DataFrame, band_regex: str) -> DataFrame:
     """P1 band select by name regex (the reference's
     ``select('B.*|SR_B.*')`` pattern, image.py:796-798; mask.py:176):
-    decode, keep matching bands in order, re-encode."""
+    decode, keep the bands whose names under the row's collection
+    (:func:`masks.band_names_for`) fully match, in order, re-encode.  A
+    regex no family's band matches fails at plan time; a row whose own
+    bands match nothing fails naming the image."""
     import re
 
-    keep_idx = [i for i, n in enumerate(band_names) if re.fullmatch(band_regex, n)]
-    if not keep_idx:
-        raise ValueError(f"no bands match {band_regex!r} in {band_names}")
+    every = (*masks.BAND_NAMES, *masks.S2_BAND_NAMES)
+    if not any(re.fullmatch(band_regex, n) for n in every):
+        raise ValueError(f"no bands match {band_regex!r} in {every}")
 
-    def _row(image_id, caption, buf):
+    def _row(image_id, caption, buf, coll):
         px = codecs.decode(bytes(buf))
-        sel = np.ascontiguousarray(px[keep_idx])
-        yield image_id, caption, codecs.encode_raw(sel), len(keep_idx)
+        names = masks.band_names_for(coll)[: px.shape[0]]
+        keep = [i for i, n in enumerate(names) if re.fullmatch(band_regex, n)]
+        if not keep:
+            raise ValueError(f"no bands of {image_id} ({list(names)}) match {band_regex!r}")
+        yield image_id, caption, codecs.encode_raw(np.ascontiguousarray(px[keep])), len(keep)
 
     return map_rows(
-        images, _CAPTIONED_COLS,
+        images, [*_CAPTIONED_COLS, "collection"],
         "image_id string, caption string, bytes binary, n_bands int", _row,
     )
 

@@ -48,8 +48,9 @@ from pyspark.sql import functions as F
 from geedim_spark import codecs
 from geedim_spark.kernels import map_rows
 
-# synthetic band layout of the input table (2-band: data + QA)
+# synthetic 2-band layouts (data + QA) per mask family; see band_names_for
 BAND_NAMES = ("B1", "QA_PIXEL")
+S2_BAND_NAMES = ("B1", "QA60")
 
 MAX_REGION_STAT_PIXELS = 1_000_000  # mask.py:78 maxPixels=1e6 bestEffort
 
@@ -454,9 +455,7 @@ def band_names_for(collection: str) -> tuple[str, ...]:
     """Synthetic-universe band layout per mask family: band 0 is the
     reflectance band, band 1 the QA band under its family name (QA60 for
     Sentinel-2, QA_PIXEL otherwise)."""
-    if _sensor_for(collection) == "s2":
-        return ("B1", "QA60")
-    return BAND_NAMES
+    return S2_BAND_NAMES if _sensor_for(collection) == "s2" else BAND_NAMES
 
 
 def qa60_valid(time_start) -> bool:

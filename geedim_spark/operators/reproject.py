@@ -12,7 +12,7 @@ source pixel grid is MAINTAINED (the output transform keeps the source
 scale and sits at an integer pixel offset, and pixels are bit-identical
 — a pure crop/pad, no interpolation).
 
-Spark-first shape: one Arrow-batched ``kernels.map_rows`` pass — per-image
+Spark-first shape: one Arrow-batched ``kernels.with_columns`` pass — per-image
 work only, no shuffle, embarrassingly parallel at any scale (each task
 regrids its own images; for rasters too large for one task the tiled
 stencil path in ``operators/stencil.py`` is the scale escape hatch).
@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 
 from geedim_spark import codecs
 from geedim_spark.functions.dtypes import cast_pixels
-from geedim_spark.kernels import map_rows
+from geedim_spark.kernels import with_columns
 
 _R = 6378137.0  # spherical Mercator radius (EPSG:3857 definition)
 
@@ -371,80 +371,45 @@ def reproject_images(
     kernels compute in float64 and cast last with saturation,
     ``functions/dtypes.py``).
 
-    Scale shape: narrow per-image map with ALL other input columns
-    passed THROUGH the kernel (no metadata re-join — a join here would
-    shuffle every byte blob twice); no shuffle, no driver loop; a
-    1000-executor cluster regrids 1000 images at a time.
+    Scale shape: narrow per-image map; every other input column passes
+    through the kernel as Arrow (``kernels.with_columns``: no metadata
+    re-join, which would shuffle every byte blob twice); no shuffle, no
+    driver loop; a 1000-executor cluster regrids 1000 images at a time.
     """
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, IntegerType, StringType, StructField,
-        StructType,
-    )
-
     if like is not None:
         crs, crs_transform, shape = grid_from_like(like)
-    has_fixed = "transform" in images.columns
     validate_export_args(
-        has_fixed, crs=crs, crs_transform=crs_transform, shape=shape,
-        region=region, scale=scale,
+        "transform" in images.columns, crs=crs, crs_transform=crs_transform,
+        shape=shape, region=region, scale=scale,
     )
     kw = dict(crs=crs, crs_transform=crs_transform, shape=shape,
               region=region, scale=scale)
+    # the grid columns the kernel rewrites; fmt and the footprint bbox only
+    # when the input has them
+    ddl = "bytes binary, crs string, transform array<double>, h int, w int"
+    has_fmt = "fmt" in images.columns
+    if has_fmt:
+        ddl += ", fmt string"
+    has_bbox = all(c in images.columns for c in ("x0", "y0", "x1", "y1"))
+    if has_bbox:
+        ddl += ", x0 double, y0 double, x1 double, y1 double"
 
-    # output schema = input schema with the grid columns RETYPED/replaced
-    # (transform array<double>, crs string, h/w int, fmt string, bbox
-    # doubles) and every other column passed through untouched
-    replaced = {
-        "bytes": None, "crs": StringType(),
-        "transform": ArrayType(DoubleType()),
-        "h": IntegerType(), "w": IntegerType(),
-        "fmt": StringType(),
-        "x0": DoubleType(), "y0": DoubleType(),
-        "x1": DoubleType(), "y1": DoubleType(),
-    }
-    fields = []
-    for f in images.schema.fields:
-        if f.name in replaced and replaced[f.name] is not None:
-            fields.append(StructField(f.name, replaced[f.name]))
-        else:
-            fields.append(f)
-    names = [f.name for f in images.schema.fields]
-    for extra in ("crs", "transform", "h", "w"):
-        if extra not in names:
-            fields.append(StructField(extra, replaced[extra]))
-    out_schema = StructType(fields)
-    out_names = out_schema.fieldNames()
-    has_bbox = all(c in names for c in ("x0", "y0", "x1", "y1"))
-
-    def _row(*values):
-        row = dict(zip(names, values))
-        px = codecs.decode(bytes(row["bytes"]))
-        src_t = tuple(float(v) for v in row["transform"])
-        src_crs = row["crs"]
-        grid = resolve_grid(
-            src_crs, src_t, (px.shape[1], px.shape[2]), **kw
-        )
+    def _row(buf, src_crs, transform):
+        px = codecs.decode(bytes(buf))
+        src_t = tuple(float(v) for v in transform)
+        grid = resolve_grid(src_crs, src_t, (px.shape[1], px.shape[2]), **kw)
         out_dtype = dtype or px.dtype.name
-        nodata = codecs.NODATA_VALS[out_dtype]
-        arr = reproject_array(
-            px, src_crs, src_t, grid, resampling=resampling,
-            nodata=nodata,
-        )
+        arr = reproject_array(px, src_crs, src_t, grid, resampling=resampling,
+                              nodata=codecs.NODATA_VALS[out_dtype])
         arr = cast_pixels(arr, out_dtype)
         t = grid.transform
-        row.update(
-            bytes=codecs.encode_raw(np.ascontiguousarray(arr)),
-            crs=grid.crs, transform=list(t),
-            h=grid.shape[0], w=grid.shape[1],
-        )
-        if "fmt" in row:
-            row["fmt"] = "raw"
+        out = (codecs.encode_raw(np.ascontiguousarray(arr)), grid.crs,
+               list(t), grid.shape[0], grid.shape[1])
+        if has_fmt:
+            out += ("raw",)
         if has_bbox:
-            row.update(
-                x0=t[2], y1=t[5],
-                x1=t[2] + grid.shape[1] * t[0],
-                y0=t[5] + grid.shape[0] * t[4],
-            )
-        yield tuple(row[c] for c in out_names)
+            out += (t[2], t[5] + grid.shape[0] * t[4],
+                    t[2] + grid.shape[1] * t[0], t[5])
+        return out
 
-    return map_rows(images, names, out_schema, _row)
+    return with_columns(images, ["bytes", "crs", "transform"], ddl, _row)

@@ -134,13 +134,14 @@ def filter_bounds_semi(
     return images.join(F.broadcast(matched), "image_id", "left_semi")
 
 
+_MAX_SALT = 256  # most salt buckets one hot key splits into
+
+
 def adaptive_salted_join(
     big: DataFrame,
     small: DataFrame,
     key: str,
     rows_per_task: int = 100_000,
-    max_salt: int = 256,
-    how: str = "inner",
 ) -> DataFrame:
     """Skew-adaptive equi-join (SURVEY §7.3 hard-part 3): the salt factor
     per key is sized from the key's actual row count, so hot keys pre-split
@@ -152,15 +153,11 @@ def adaptive_salted_join(
     fixed salt either under-splits the Zipfian head or multiplies the tail
     by the factor for nothing.
     """
-    if how not in ("inner", "left", "left_semi", "left_anti"):
-        raise ValueError(
-            f"adaptive_salted_join supports inner/left-side joins only (got {how!r})"
-        )
     counts = big.groupBy(key).agg(F.count(F.lit(1)).alias("_cnt"))
     factors = counts.select(
         key,
         F.least(
-            F.lit(max_salt),
+            F.lit(_MAX_SALT),
             F.greatest(F.lit(1), F.ceil(F.col("_cnt") / F.lit(rows_per_task))),
         ).cast("int").alias("_n_salt"),
     )
@@ -186,7 +183,7 @@ def adaptive_salted_join(
         .withColumn("_salt", F.explode(F.sequence(F.lit(0), F.col("_n_salt") - 1)))
     )
     out = (
-        big_s.join(small_s.drop("_n_salt"), [key, "_salt"], how)
+        big_s.join(small_s.drop("_n_salt"), [key, "_salt"])
         .drop("_salt", "_n_salt")
     )
     # handle for targeted cache release (clearCache() would nuke unrelated

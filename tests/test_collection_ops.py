@@ -212,3 +212,78 @@ def test_revisit_stats_closed_form(spark):
             .executedPlan().toString())
     spec = [ln for ln in plan.splitlines() if "windowspecdefinition" in ln]
     assert spec and all("cell_x" in ln for ln in spec)
+
+
+def test_search_keeps_input_multiplicity(spark):
+    """A collection holding every image twice (``from_images(c, c)``)
+    searches to every matching image twice: the portions ride on each row,
+    so nothing joins them back by id and multiplies the duplicates."""
+    from geedim_spark.api import Collection
+
+    imgs = synth.images_df(spark, 60).filter("collection LIKE 'LANDSAT/%'")
+    c = Collection(imgs)
+    kw = dict(rois=synth.rois_df(spark, 60), fill_portion=0.0)
+    once = [r["image_id"] for r in c.search(**kw).df.collect()]
+    twice = [r["image_id"] for r in Collection.from_images(c, c).search(**kw).df.collect()]
+    assert once
+    assert sorted(twice) == sorted(once + once)
+
+
+def test_search_portion_path_passes_rows_through(spark, tmp_path):
+    """On the portion path every input column comes back unchanged (a long
+    above 2**53 next to a NULL, a NaN double), the portions equal
+    mask_stats + with_portions bit for bit, rows come back ascending by
+    capture time, and the executed plan runs one Python kernel with no join
+    above it."""
+    from pyspark.sql import functions as F
+
+    from geedim_spark.operators import masks
+
+    big = 2**53 + 1
+    n = F.substring("image_id", 5, 8).cast("long")
+    path = str(tmp_path / "images")
+    (synth.images_df(spark, 60, scalar_filter="fmt = 'raw'")
+     .withColumn("big", F.when(n % 2 == 0, F.lit(big) + n))
+     .withColumn("nan", F.when(n % 3 == 0, F.lit(float("nan"))).otherwise(n * 0.5))
+     .repartition(4).write.parquet(path))
+    images = spark.read.parquet(path)
+    assert images.rdd.getNumPartitions() >= 4
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+    found = co.search(images, start="2024-01-01", end="2025-01-01",
+                      rois=synth.rois_df(spark, 60), fill_portion=0.0)
+    rows = found.collect()
+    assert len(rows) > 4
+
+    want = {r["image_id"]: r for r in images.collect()}
+    assert found.columns[-2:] == ["FILL_PORTION", "CLOUDLESS_PORTION"]
+    assert sorted(found.columns[:-2]) == sorted(images.columns)
+    for r in rows:
+        assert repr([r[c] for c in images.columns]) == repr(list(want[r["image_id"]]))
+    assert any(r["big"] is None for r in rows)
+    assert any(r["big"] is not None and r["big"] > 2**53 for r in rows)
+    assert any(r["nan"] != r["nan"] for r in rows)
+
+    ref = {
+        r["image_id"]: (r["fill_portion"], r["cloudless_portion"])
+        for r in masks.with_portions(masks.mask_stats(images)).collect()
+    }
+    assert [(r["FILL_PORTION"], r["CLOUDLESS_PORTION"]) for r in rows] == [
+        ref[r["image_id"]] for r in rows]
+    ts = [r["time_start"] for r in rows]
+    assert ts == sorted(ts)
+
+    plan = found._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    lines = final.splitlines()
+    kernel = [i for i, line in enumerate(lines) if "MapInArrow" in line]
+    assert len(kernel) == 1 and "MapInPandas" not in final, final
+    # the kernel's ancestors: each earlier line indented less than the last
+    depth, ancestors = len(lines[kernel[0]]) - len(lines[kernel[0]].lstrip(" +-:")), []
+    for line in reversed(lines[:kernel[0]]):
+        d = len(line) - len(line.lstrip(" +-:"))
+        if d < depth:
+            ancestors.append(line)
+            depth = d
+    assert not [a for a in ancestors if "Join" in a], final

@@ -177,10 +177,37 @@ def test_map_groups_rows_per_group(spark):
     assert rows == [(1, 5, "g1"), (2, 7, "g2"), (2, 8, "g2")]
 
 
+def test_with_columns_replaces_appends_and_passes_through(spark):
+    """``with_columns`` replaces a named column in place, appends the rest,
+    and hands back every other column exactly: a long above 2**53 in a
+    batch that also holds a NULL, and a NaN, both of which a pandas round
+    trip changes.  The kernel sees None for NULL and naive timestamps."""
+    import datetime as dt
+
+    df = spark.createDataFrame(
+        [(1, 2**53 + 1, float("nan"), dt.datetime(2024, 1, 1, 5)),
+         (2, None, None, None)],
+        "i long, big long, d double, t timestamp").coalesce(1)
+
+    def fn(i, t):
+        return i * 10, -1 if t is None else t.hour + (t.tzinfo is not None)
+
+    out = kernels.with_columns(df, ["i", "t"], "i long, hour long", fn)
+    assert out.columns == ["i", "big", "d", "t", "hour"]
+    rows = out.collect()
+    assert repr([tuple(r) for r in rows]) == repr([
+        (10, 2**53 + 1, float("nan"), dt.datetime(2024, 1, 1, 5), 5),
+        (20, None, None, None, -1),
+    ])
+    empty = kernels.with_columns(df.limit(0), ["i", "t"], "i long, hour long", fn)
+    assert empty.schema == out.schema and empty.collect() == []
+
+
 def test_only_kernels_calls_pandas_map_apis():
-    """``mapInPandas`` / ``applyInPandas`` belong to the kernel layer
-    (``map_batches``, ``map_rows``, ``map_groups``); a direct call anywhere
-    else in the package is a per-operator copy of it.  Streaming's
+    """``mapInPandas`` / ``applyInPandas`` / ``mapInArrow`` belong to the
+    kernel layer (``map_batches``, ``map_rows``, ``map_groups``,
+    ``with_columns``); a direct call anywhere else in the package is a
+    per-operator copy of it.  Streaming's
     ``applyInPandasWithState`` is a different API and is not covered."""
     root = os.path.dirname(kernels.__file__)
     calls = []
@@ -195,7 +222,7 @@ def test_only_kernels_calls_pandas_map_apis():
                 f"{os.path.relpath(path, root)}:{n.lineno} {n.attr}"
                 for n in ast.walk(tree)
                 if isinstance(n, ast.Attribute)
-                and n.attr in ("mapInPandas", "applyInPandas")
+                and n.attr in ("mapInPandas", "applyInPandas", "mapInArrow")
             ]
     assert not calls, calls
 

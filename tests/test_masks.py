@@ -286,6 +286,30 @@ def test_band_select_regex(spark):
         export_ops.select_bands(imgs, "SR_B.*")
 
 
+def test_band_select_names_bands_per_collection(spark):
+    """select_bands names each row's bands under its own collection: QA60
+    picks Sentinel-2's QA band, and a Landsat row, whose QA band is
+    QA_PIXEL, fails naming the image."""
+    from pyspark.errors import PythonException
+
+    from geedim_spark import api
+    from geedim_spark import codecs as cd
+    from geedim_spark.operators import export_ops
+
+    imgs = synth.images_df(spark, 6, scalar_filter="fmt = 'raw'")
+    s2 = imgs.filter("collection LIKE 'COPERNICUS/S2%'")
+    rows = api.Image(s2).prepare_for_export(band_regex="QA60").df.collect()
+    assert rows
+    src = {r["image_id"]: cd.decode(bytes(r["bytes"])) for r in s2.collect()}
+    for r in rows:
+        px = cd.decode(bytes(r["bytes"]))
+        assert px.shape[0] == 1
+        assert np.array_equal(px[0], src[r["image_id"]][1])
+    landsat = imgs.filter("collection LIKE 'LANDSAT/%'")
+    with pytest.raises(PythonException, match=r"no bands of IMG/\d+ .* match 'QA60'"):
+        export_ops.select_bands(landsat, "QA60").collect()
+
+
 def test_stats_stride_decimation():
     assert masks.stats_stride(100) == 1
     assert masks.stats_stride(1_000_000) == 1
