@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from geedim_spark import schema as gd_schema
 from geedim_spark import synth
+from geedim_spark.kernels import map_rows
 from geedim_spark.operators import collection_ops, composite as comp_ops, pipeline
 from geedim_spark.operators import export_ops, masks
 from geedim_spark.sources import snapshots
@@ -211,10 +212,10 @@ class Collection:
         ``region`` / ``scale`` / ``like`` is given — reprojection onto
         the export grid (operators/reproject.py: validation per
         image.py:804-818, grid preservation per image.py:820-833,
-        resampling 'near'/'bilinear'/'bicubic').  Metadata columns are
-        re-attached, the georeferencing columns (transform/crs/w/h and
-        the footprint bbox) updated from the resolved grid, and ``fmt``
-        rewritten to 'raw'.
+        resampling 'near'/'bilinear'/'bicubic').  Every other column
+        passes through; the georeferencing columns (transform/crs/w/h and
+        the footprint bbox) are updated from the resolved grid, and
+        ``fmt`` rewritten to 'raw'.
 
         ORDERING: run this AFTER any mask computation/application — the
         cast saturates the QA bands, garbling cloud bits for any later
@@ -228,32 +229,24 @@ class Collection:
             v is not None
             for v in (crs, crs_transform, shape, region, scale, like)
         )
-        if not scale_offset and not dtype and not spatial:
-            return self
-        df = self.df
-        if spatial:
-            from geedim_spark.operators import reproject as _rp
+        if not spatial:
+            df = export_ops.with_export_pixels(self.df, scale_offset, dtype)
+            return Collection(df, self.cloud_kwargs)
+        from geedim_spark.operators import reproject as _rp
 
-            if scale_offset:
-                # scale/offset first (float64), interpolate, cast last
-                prepared = export_ops.prepare_for_export(df, scale_offset)
-                meta = df.drop("bytes", "fmt", "caption")
-                df = meta.join(prepared, "image_id") \
-                    .withColumn("fmt", F.lit("raw"))
-                dtype = dtype or "float64"
-            # every metadata column passes THROUGH the reprojection
-            # kernel (grid columns + footprint bbox rewritten in place) —
-            # no metadata re-join, which would shuffle the byte blobs
-            out = _rp.reproject_images(
-                df, crs=crs, crs_transform=crs_transform, shape=shape,
-                region=region, scale=scale, like=like,
-                resampling=resampling, dtype=dtype,
-            )
-            return Collection(out, self.cloud_kwargs)
-        prepared = export_ops.prepare_for_export(self.df, scale_offset, dtype)
-        meta = self.df.drop("bytes", "fmt", "caption")
-        df = meta.join(prepared, "image_id").withColumn("fmt", F.lit("raw"))
-        return Collection(df, self.cloud_kwargs)
+        df = self.df
+        if scale_offset:
+            # scale/offset first (float64), interpolate, cast last
+            df = export_ops.with_export_pixels(df, scale_offset)
+            dtype = dtype or "float64"
+        # every metadata column passes THROUGH the reprojection kernel
+        # (grid columns + footprint bbox rewritten in place)
+        out = _rp.reproject_images(
+            df, crs=crs, crs_transform=crs_transform, shape=shape,
+            region=region, scale=scale, like=like,
+            resampling=resampling, dtype=dtype,
+        )
+        return Collection(out, self.cloud_kwargs)
 
     def download(
         self,
@@ -271,12 +264,21 @@ class Collection:
         work = self.df
         if resume:
             work = snapshots.pending_keys(work, table_dir, partition_col)
-        tiles = pipeline.mask_and_tile(work, **{**self.cloud_kwargs, **tiler_kwargs})
-        keyed = tiles.join(
-            self.df.select("image_id", partition_col), "image_id"
-        ) if partition_col not in tiles.columns else tiles
+        opts = {**self.cloud_kwargs, **tiler_kwargs}
+        tiles = pipeline.mask_and_tile(work, **opts)
+        if partition_col not in tiles.columns:
+            # the tile rows carry the partition key, so nothing joins back
+            # on image_id; it crosses pandas as a string (a long beside a
+            # NULL would come back a float) and is cast back after
+            row, work = pipeline.tile_row(**opts), masks._with_time_start(work)
+            key = F.col(partition_col)
+            tiles = map_rows(
+                work.withColumn("_key", key.cast("string")), [*pipeline.TILE_COLS, "_key"],
+                f"{pipeline.TILE_SCHEMA}, `{partition_col}` string",
+                lambda *v: (t + v[-1:] for t in row(*v[:-1])),
+            ).withColumn(partition_col, key.cast(work.schema[partition_col].dataType))
         return snapshots.write_snapshot(
-            keyed, table_dir, partition_col, stats_cols=("fill_px",)
+            tiles, table_dir, partition_col, stats_cols=("fill_px",)
         )
 
     # -- conveniences ------------------------------------------------------
@@ -545,32 +547,22 @@ class Image:
 
     def mask_clouds(self) -> "Image":
         """updateMask(CLOUDLESS_MASK) analog — non-cloudless pixels to
-        nodata; other columns rejoined.  The kernel re-encodes RAW and
-        rewrites fmt, so the source's fmt column is dropped with bytes."""
-        masked = masks.mask_clouds(self.df, **self.cloud_kwargs)
-        other = self.df.drop("bytes", "fmt")
-        return Image(other.join(masked, "image_id"), dict(self.cloud_kwargs))
+        nodata, ``bytes`` re-encoded RAW and ``fmt`` rewritten in place."""
+        return Image(masks.with_clouds_masked(self.df, **self.cloud_kwargs),
+                     dict(self.cloud_kwargs))
 
     # -- export surface (image.py:741-1176) ---------------------------------
     def prepare_for_export(self, scale_offset=None, dtype=None,
                            band_regex=None, **grid_kwargs) -> "Image":
-        """``grid_kwargs`` (crs / crs_transform / shape / region / scale /
-        like / resampling) route through the Collection grid path —
-        reprojection onto the export grid (operators/reproject.py)."""
+        """``band_regex`` band select, then :meth:`Collection.prepare_for_export`
+        (``grid_kwargs``: crs / crs_transform / shape / region / scale /
+        like / resampling — reprojection onto the export grid)."""
         df = self.df
         if band_regex is not None:
-            sel = export_ops.select_bands(df, band_regex)
-            # re-attach metadata (select_bands keeps only id/caption/bytes;
-            # the grid path needs crs/transform)
-            df = self.df.drop("bytes", "fmt", "caption", "n_bands") \
-                .join(sel, "image_id").withColumn("fmt", F.lit("raw"))
-        if any(v is not None for v in grid_kwargs.values()):
-            coll = Collection(df, dict(self.cloud_kwargs)).prepare_for_export(
-                scale_offset=scale_offset, dtype=dtype, **grid_kwargs)
-            return Image(coll.df, dict(self.cloud_kwargs))
-        df = export_ops.prepare_for_export(df, scale_offset=scale_offset,
-                                           dtype=dtype)
-        return Image(df, dict(self.cloud_kwargs))
+            df = export_ops.with_bands_selected(df, band_regex)
+        coll = Collection(df, dict(self.cloud_kwargs)).prepare_for_export(
+            scale_offset=scale_offset, dtype=dtype, **grid_kwargs)
+        return Image(coll.df, dict(self.cloud_kwargs))
 
     def to_tiles(self, **tiler_kwargs) -> DataFrame:
         """Primary sink (toGeoTIFF analog): the tiles table."""

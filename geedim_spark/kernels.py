@@ -1,16 +1,17 @@
-"""The shared Arrow kernel layer.
+"""The shared Arrow kernel layer: one driver per kernel shape.
 
-Every per-image raster operator has the same Spark shape: select a few
-columns, stream them to Python in Arrow batches (``mapInPandas``), run a
-numpy kernel once per input row, and turn the rows the kernel emits back
-into an Arrow batch of a declared schema.  :func:`map_rows` owns that
-plumbing once, so an operator is just its column list, its output schema
-and its per-row function.  Batch-vectorised kernels use
-:func:`map_batches`, which :func:`map_rows` is built on.  Grouped kernels
-(composite stacks, halo tiles, per-image and per-shard file sinks) use
-:func:`map_groups`, the same contract over one ``groupBy`` group.  A
-per-row kernel that adds or replaces columns of rows it keeps whole uses
-:func:`with_columns`, whose other columns pass through as Arrow.
+- :func:`with_columns` (``mapInArrow``): a per-row kernel that keeps the
+  image row and replaces or appends columns (rewrites the ``bytes`` blob
+  in place, appends mask counts); the other columns pass through as
+  Arrow, so no caller joins a kernel's output back on ``image_id``.
+- :func:`map_rows`: a per-row kernel that drops the blob and emits zero or
+  more rows of a declared schema (stats, tiles, bucket pairs).  Through
+  :func:`with_columns` every blob would travel back from Python only to
+  be dropped; a key the caller needs is appended by the row function.
+- :func:`map_batches` (``mapInPandas``): batch-vectorised kernels, and
+  the loop under :func:`map_rows`.
+- :func:`map_groups` (``applyInPandas``): one ``groupBy`` group per call
+  (composite stacks, halo tiles, per-image and per-shard file sinks).
 
 All of them install :func:`install_zip_cache_guard` in the worker, a fix
 for a fixed per-task cost that every Python kernel task pays.  This is the

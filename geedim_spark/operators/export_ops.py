@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 
 from geedim_spark import codecs
 from geedim_spark.functions.dtypes import cast_pixels
-from geedim_spark.kernels import map_rows
+from geedim_spark.kernels import map_rows, with_columns
 from geedim_spark.operators import masks
 from geedim_spark.operators.tiler import tile_shape, tile_windows
 
@@ -73,34 +73,39 @@ def assemble_image(tile_rows, bands: int, h: int, w: int, dtype: str) -> np.ndar
     return out
 
 
-def select_bands(images: DataFrame, band_regex: str) -> DataFrame:
+def with_bands_selected(images: DataFrame, band_regex: str) -> DataFrame:
     """P1 band select by name regex (the reference's
     ``select('B.*|SR_B.*')`` pattern, image.py:796-798; mask.py:176):
     decode, keep the bands whose names under the row's collection
-    (:func:`masks.band_names_for`) fully match, in order, re-encode.  A
-    regex no family's band matches fails at plan time; a row whose own
-    bands match nothing fails naming the image."""
+    (:func:`masks.band_names_for`) fully match, in order, re-encode.  One
+    :func:`kernels.with_columns` pass: ``bytes`` and ``fmt`` ('raw') are
+    replaced in place and ``n_bands`` appended.  A regex no family's band
+    matches fails at plan time; a row whose own bands match nothing fails
+    naming the image."""
     import re
 
     every = (*masks.BAND_NAMES, *masks.S2_BAND_NAMES)
     if not any(re.fullmatch(band_regex, n) for n in every):
         raise ValueError(f"no bands match {band_regex!r} in {every}")
 
-    def _row(image_id, caption, buf, coll):
+    def _row(image_id, buf, coll):
         px = codecs.decode(bytes(buf))
         names = masks.band_names_for(coll)[: px.shape[0]]
         keep = [i for i, n in enumerate(names) if re.fullmatch(band_regex, n)]
         if not keep:
             raise ValueError(f"no bands of {image_id} ({list(names)}) match {band_regex!r}")
-        yield image_id, caption, codecs.encode_raw(np.ascontiguousarray(px[keep])), len(keep)
+        return codecs.encode_raw(np.ascontiguousarray(px[keep])), "raw", len(keep)
 
-    return map_rows(
-        images, [*_CAPTIONED_COLS, "collection"],
-        "image_id string, caption string, bytes binary, n_bands int", _row,
-    )
+    return with_columns(images, ["image_id", "bytes", "collection"],
+                        "bytes binary, fmt string, n_bands int", _row)
 
 
-def prepare_for_export(
+def select_bands(images: DataFrame, band_regex: str) -> DataFrame:
+    """:func:`with_bands_selected` narrowed to (image_id, caption, bytes, n_bands)."""
+    return with_bands_selected(images, band_regex).select(*_CAPTIONED_COLS, "n_bands")
+
+
+def with_export_pixels(
     images: DataFrame,
     scale_offset: dict[int, tuple[float, float]] | None = None,
     dtype: str | None = None,
@@ -108,16 +113,13 @@ def prepare_for_export(
     """Plan-rewriting half of prepareForExport (image.py:741-862):
     per-band STAC scale/offset (image.py:137-172) then dtype cast with
     saturation (image.py:571-596).  No-op bands pass through unaltered
-    (grid preservation analog: untouched pixels stay bit-identical).
-
-    Output schema is ALWAYS (image_id, caption, bytes) — including the
-    no-op path, so the result shape cannot flip with parameter values
-    (callers needing the metadata columns re-join on image_id;
-    ``api.Collection.prepare_for_export`` does exactly that)."""
+    (grid preservation analog: untouched pixels stay bit-identical).  One
+    :func:`kernels.with_columns` pass replacing ``bytes`` and ``fmt``
+    ('raw') in place; with neither option it returns ``images`` as is."""
     if not scale_offset and not dtype:
-        return images.select(*_CAPTIONED_COLS)
+        return images
 
-    def _row(image_id, caption, buf):
+    def _row(buf):
         px = codecs.decode(bytes(buf))
         work = px.astype(np.float64) if scale_offset else px
         if scale_offset:
@@ -127,12 +129,15 @@ def prepare_for_export(
             work = cast_pixels(work, dtype)
         elif scale_offset:
             work = cast_pixels(work, "float64")
-        yield image_id, caption, codecs.encode_raw(np.ascontiguousarray(work))
+        return codecs.encode_raw(np.ascontiguousarray(work)), "raw"
 
-    return map_rows(
-        images, _CAPTIONED_COLS,
-        "image_id string, caption string, bytes binary", _row,
-    )
+    return with_columns(images, ["bytes"], "bytes binary, fmt string", _row)
+
+
+def prepare_for_export(images: DataFrame, scale_offset=None, dtype=None) -> DataFrame:
+    """:func:`with_export_pixels` narrowed to (image_id, caption, bytes),
+    the no-op path included: the shape cannot flip with parameter values."""
+    return with_export_pixels(images, scale_offset, dtype).select(*_CAPTIONED_COLS)
 
 
 def pixel_histogram(images: DataFrame, band: int = 0) -> DataFrame:

@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geedim_spark import codecs
-from geedim_spark.kernels import map_rows
+from geedim_spark.kernels import map_rows, with_columns
 
 # synthetic 2-band layouts (data + QA) per mask family; see band_names_for
 BAND_NAMES = ("B1", "QA_PIXEL")
@@ -756,24 +756,27 @@ def cloud_dist_stats(
     )
 
 
-_MASKED_SCHEMA = "image_id string, bytes binary, fmt string"
-
-
-def mask_clouds(images: DataFrame, **mask_opts) -> DataFrame:
+def with_clouds_masked(images: DataFrame, **mask_opts) -> DataFrame:
     """Apply the cloudless mask to the data bands: non-cloudless pixels set
-    to nodata (updateMask(CLOUDLESS_MASK) analog, mask.py:131-133).  Returns
-    (image_id, bytes, fmt) — pixels are re-encoded RAW (masking a lossy
-    stream exactly requires decoding it), so the row's ``fmt`` is rewritten
-    to 'raw'; callers joining back must take THIS fmt, not the source's."""
-    def _row(image_id, buf, coll, ts):
+    to nodata (updateMask(CLOUDLESS_MASK) analog, mask.py:131-133).  One
+    :func:`kernels.with_columns` pass: ``bytes`` is re-encoded RAW (masking
+    a lossy stream exactly requires decoding it) and ``fmt`` rewritten to
+    'raw' in place; every other column passes through."""
+    def _row(buf, coll, ts=None):
         if _sensor_for(coll) == "none":
             px = codecs.decode(bytes(buf))
         else:
             px, _, m = image_masks(buf, coll, ts, **mask_opts)
             px[0][~m["CLOUDLESS_MASK"]] = codecs.NODATA_VALS[px.dtype.name]
-        yield image_id, codecs.encode(px, "raw"), "raw"
+        return codecs.encode(px, "raw"), "raw"
 
-    return map_rows(_with_time_start(images), _IMAGE_COLS, _MASKED_SCHEMA, _row)
+    cols = ["bytes", "collection"] + [c for c in ["time_start"] if c in images.columns]
+    return with_columns(images, cols, "bytes binary, fmt string", _row)
+
+
+def mask_clouds(images: DataFrame, **mask_opts) -> DataFrame:
+    """:func:`with_clouds_masked` narrowed to (image_id, bytes, fmt)."""
+    return with_clouds_masked(images, **mask_opts).select("image_id", "bytes", "fmt")
 
 
 # ---------------------------------------------------------------------------

@@ -25,65 +25,21 @@ from geedim_spark.kernels import map_rows
 from geedim_spark.operators import masks
 from geedim_spark.operators.tiler import tile_shape, tile_windows
 
-_SCHEMA = (
+TILE_SCHEMA = (
     "image_id string, caption string, band_start int, band_stop int, "
     "row_start int, row_stop int, col_start int, col_stop int, "
     "fill_px long, cloudless_px long, dist_sum long, tile_bytes binary"
 )
+TILE_COLS = ["image_id", "caption", "bytes", "collection", "time_start"]
 
 
-def mask_and_tile(
-    images: DataFrame,
-    scale: float = 10.0,
-    max_cloud_dist: float = 5000.0,
-    dist_decimate: int = 4,
-    max_tile_size: float = 4,
-    max_tile_dim: int = 10000,
-    max_tile_bands: int = 1024,
-    apply_cloud_mask: bool = True,
-    focal_open_px: int = 0,
-    focal_dilate_px: int = 0,
-    export_dtype: str | None = None,
-    band_regex: str | None = None,
-    scale_offset: bool = False,
-    **mask_opts,
-) -> DataFrame:
-    """images -> masked tile rows, single decode per image.
-
-    ``focal_open_px``/``focal_dilate_px`` optionally run the reference's
-    morphological open + dilate on the combined mask (mask.py:466-472 —
-    part of the S2 qa/prob pipelines) before the cloudless mask is applied.
-
-    ``export_dtype`` saturating-casts the EXPORTED pixels AFTER the masks
-    are computed and applied, in the reference's order (addMaskBands ->
-    maskClouds -> prepareForExport, image.py:741-862): casting first would
-    saturate the QA bands and garble every cloud bit.  Masked pixels take
-    the target dtype's nodata.
-
-    ``scale`` feeds both the cloud-distance geometry and (unless the
-    caller overrides it in ``mask_opts``) the S2 shadow/morphology
-    pixel-size — one physical quantity, one route.
-
-    ``scale_offset`` applies the catalog's per-band STAC scale/offset
-    (sources.band_props; reference image.py:137-172 via prepareForExport)
-    AFTER the masks are computed and BEFORE any ``export_dtype`` cast —
-    the reference's order.  Identity factors leave the image's dtype
-    untouched (prepare_for_export's no-op band semantics); any
-    non-identity factor promotes the image to float64.
-
-    ``band_regex`` exports only the bands whose (per-collection) names
-    fully match — the reference's band selection on download
-    (cli.py:364-372 -bn/--band-name -> image.py:796-798 select).  The
-    ORDER matters and is the reference's: masks are computed from the
-    FULL band set first (a QA-only or reflectance-only selection still
-    cloud-masks correctly), then the selected bands are sliced for
-    tiling.  An image whose band set matches nothing raises loudly.
-
-    ``dist_sum`` in the output is PER-IMAGE (the coarse cloud-distance sum
-    over fill pixels), replicated onto every tile row of that image —
-    aggregate it with FIRST/MAX per image, never SUM over tiles (fill_px /
-    cloudless_px ARE per-tile).
-    """
+def tile_row(scale=10.0, max_cloud_dist=5000.0, dist_decimate=4,
+             max_tile_size=4, max_tile_dim=10000, max_tile_bands=1024,
+             apply_cloud_mask=True, focal_open_px=0, focal_dilate_px=0,
+             export_dtype=None, band_regex=None, scale_offset=False,
+             **mask_opts):
+    """:func:`mask_and_tile`'s per-image row function for its options:
+    ``row(*TILE_COLS values)`` yields one ``TILE_SCHEMA`` tuple per tile."""
     mask_opts.setdefault("scale", scale)
 
     def _row(image_id, caption, buf, coll, ts):
@@ -168,8 +124,63 @@ def mask_and_tile(
                 codecs.encode_raw(px[b0:b1, r0:r1, c0:c1]),
             )
 
-    return map_rows(
-        masks._with_time_start(images),
-        ["image_id", "caption", "bytes", "collection", "time_start"],
-        _SCHEMA, _row,
-    )
+    return _row
+
+
+def mask_and_tile(
+    images: DataFrame,
+    scale: float = 10.0,
+    max_cloud_dist: float = 5000.0,
+    dist_decimate: int = 4,
+    max_tile_size: float = 4,
+    max_tile_dim: int = 10000,
+    max_tile_bands: int = 1024,
+    apply_cloud_mask: bool = True,
+    focal_open_px: int = 0,
+    focal_dilate_px: int = 0,
+    export_dtype: str | None = None,
+    band_regex: str | None = None,
+    scale_offset: bool = False,
+    **mask_opts,
+) -> DataFrame:
+    """images -> masked tile rows, single decode per image.
+
+    ``focal_open_px``/``focal_dilate_px`` optionally run the reference's
+    morphological open + dilate on the combined mask (mask.py:466-472 —
+    part of the S2 qa/prob pipelines) before the cloudless mask is applied.
+
+    ``export_dtype`` saturating-casts the EXPORTED pixels AFTER the masks
+    are computed and applied, in the reference's order (addMaskBands ->
+    maskClouds -> prepareForExport, image.py:741-862): casting first would
+    saturate the QA bands and garble every cloud bit.  Masked pixels take
+    the target dtype's nodata.
+
+    ``scale`` feeds both the cloud-distance geometry and (unless the
+    caller overrides it in ``mask_opts``) the S2 shadow/morphology
+    pixel-size — one physical quantity, one route.
+
+    ``scale_offset`` applies the catalog's per-band STAC scale/offset
+    (sources.band_props; reference image.py:137-172 via prepareForExport)
+    AFTER the masks are computed and BEFORE any ``export_dtype`` cast —
+    the reference's order.  Identity factors leave the image's dtype
+    untouched (prepare_for_export's no-op band semantics); any
+    non-identity factor promotes the image to float64.
+
+    ``band_regex`` exports only the bands whose (per-collection) names
+    fully match — the reference's band selection on download
+    (cli.py:364-372 -bn/--band-name -> image.py:796-798 select).  The
+    ORDER matters and is the reference's: masks are computed from the
+    FULL band set first (a QA-only or reflectance-only selection still
+    cloud-masks correctly), then the selected bands are sliced for
+    tiling.  An image whose band set matches nothing raises loudly.
+
+    ``dist_sum`` in the output is PER-IMAGE (the coarse cloud-distance sum
+    over fill pixels), replicated onto every tile row of that image —
+    aggregate it with FIRST/MAX per image, never SUM over tiles (fill_px /
+    cloudless_px ARE per-tile).
+    """
+    row = tile_row(scale, max_cloud_dist, dist_decimate, max_tile_size,
+                   max_tile_dim, max_tile_bands, apply_cloud_mask,
+                   focal_open_px, focal_dilate_px, export_dtype, band_regex,
+                   scale_offset, **mask_opts)
+    return map_rows(masks._with_time_start(images), TILE_COLS, TILE_SCHEMA, row)

@@ -18,6 +18,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from geedim_spark.kernels import map_rows
 from geedim_spark.operators import masks
 from geedim_spark.sources import snapshots
 
@@ -26,6 +27,30 @@ IMAGES_SCHEMA = (
     "v int, f_px int, c_px int, x0 double, y0 double, x1 double, y1 double, "
     "caption string, time_start timestamp, bytes binary, phash long"
 )
+
+
+def _ingest(spark, source_dir, checkpoint_dir, available_now, commit):
+    """Stream ``source_dir``'s image files, run ``commit(raw_rows, batch_id)``
+    on each micro-batch holding raw rows and return the StreamingQuery.
+    foreachBatch re-runs the source scan for every action on a batch: the
+    one-row emptiness probe, then the commit's one-read snapshot write."""
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        raw = batch_df.filter("fmt = 'raw'")
+        if not raw.isEmpty():
+            commit(raw, batch_id)
+
+    src = (
+        spark.readStream.schema(IMAGES_SCHEMA)
+        .option("maxFilesPerTrigger", 4)
+        .parquet(source_dir)
+    )
+    writer = (
+        src.writeStream.foreachBatch(_batch)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def stream_mask_stats(
@@ -41,46 +66,29 @@ def stream_mask_stats(
     stops — the test/CI mode; pass False for a continuous ingest.
     Per-batch progress is on the returned query (``recentProgress``).
     """
-    src = (
-        spark.readStream.schema(IMAGES_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(source_dir)
-    )
+    def _commit(raw: DataFrame, batch_id: int) -> None:
+        # mask_stats' counts with the row's collection appended: the
+        # partition key rides on the stats row, no join back on image_id
+        stats = map_rows(
+            masks._with_time_start(raw), masks._IMAGE_COLS,
+            masks._STATS_SCHEMA + ", collection string",
+            lambda image_id, buf, coll, ts: [
+                masks.mask_stats_row(image_id, buf, coll, ts) + (coll,)],
+        )
+        # append: collections interleave across micro-batches — an
+        # overwrite commit would repoint each collection partition at
+        # ONLY this batch's rows, discarding earlier batches
+        # token = (stream identity, batch id): the checkpoint dir is
+        # stable across restarts of THIS stream but distinct between
+        # streams, so two streams ingesting one table can never
+        # mistake each other's batch N for a replay
+        snapshots.write_snapshot(
+            stats, table_dir, "collection",
+            stats_cols=("fill_px",), mode="append",
+            commit_token=f"{os.path.abspath(checkpoint_dir)}:batch-{batch_id}",
+        )
 
-    def _commit(batch_df: DataFrame, batch_id: int) -> None:
-        # persist: foreachBatch re-runs the source scan for EVERY action on
-        # batch_df (count, the two reads in the join, the snapshot write) —
-        # cache once so each micro-batch reads its files exactly once.
-        batch_df = batch_df.persist()
-        try:
-            if batch_df.count() == 0:
-                return
-            stats = masks.mask_stats(batch_df.filter("fmt = 'raw'"))
-            enriched = stats.join(
-                batch_df.select("image_id", "collection"), "image_id"
-            )
-            # append: collections interleave across micro-batches — an
-            # overwrite commit would repoint each collection partition at
-            # ONLY this batch's rows, discarding earlier batches
-            # token = (stream identity, batch id): the checkpoint dir is
-            # stable across restarts of THIS stream but distinct between
-            # streams, so two streams ingesting one table can never
-            # mistake each other's batch N for a replay
-            snapshots.write_snapshot(
-                enriched, table_dir, "collection",
-                stats_cols=("fill_px",), mode="append",
-                commit_token=f"{os.path.abspath(checkpoint_dir)}:batch-{batch_id}",
-            )
-        finally:
-            batch_df.unpersist()
-
-    writer = (
-        src.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _ingest(spark, source_dir, checkpoint_dir, available_now, _commit)
 
 
 def stream_score_join_stats(
@@ -107,34 +115,14 @@ def stream_score_join_stats(
 
     Returns the StreamingQuery.
     """
-    src = (
-        spark.readStream.schema(IMAGES_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(source_dir)
-    )
+    def _commit(raw: DataFrame, batch_id: int) -> None:
+        stats = masks.s2_score_mask_stats(raw, scores, score_thresh=score_thresh)
+        snapshots.write_snapshot(
+            stats, table_dir, "image_id",
+            stats_cols=("cloudless_px",), mode="append",
+            commit_token=(
+                f"{os.path.abspath(checkpoint_dir)}:score-batch-{batch_id}"
+            ),
+        )
 
-    def _commit(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.filter("fmt = 'raw'").persist()
-        try:
-            if batch_df.limit(1).count() == 0:
-                return
-            stats = masks.s2_score_mask_stats(
-                batch_df, scores, score_thresh=score_thresh
-            )
-            snapshots.write_snapshot(
-                stats, table_dir, "image_id",
-                stats_cols=("cloudless_px",), mode="append",
-                commit_token=(
-                    f"{os.path.abspath(checkpoint_dir)}:score-batch-{batch_id}"
-                ),
-            )
-        finally:
-            batch_df.unpersist()
-
-    writer = (
-        src.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _ingest(spark, source_dir, checkpoint_dir, available_now, _commit)

@@ -7,8 +7,9 @@ import numpy as np
 import pytest
 
 from geedim_spark import codecs, synth
-from geedim_spark.api import Collection
+from geedim_spark.api import Collection, Image
 from geedim_spark.sources import snapshots
+from tests.plans import final_plan, joins_above_python_maps, python_maps
 
 
 def test_chained_search_composite_download(spark, tmp_path):
@@ -199,3 +200,120 @@ def test_image_metadata_accessor_surface(spark):
     empty = Image(synth.images_df(spark, 3).where("1=0"))
     assert empty.id is None and empty.shape is None
     assert empty.fixed is False and empty.bounded is False
+
+
+# (name, Collection -> frame, kernel passes it adds): every api method that
+# runs a per-image kernel over the image rows
+_PER_IMAGE_METHODS = [
+    ("Image.mask_clouds", lambda c: Image(c.df).mask_clouds().df, 1),
+    ("Image.prepare_for_export",
+     lambda c: Image(c.df).prepare_for_export(dtype="uint8").df, 1),
+    ("Image.prepare_for_export(band_regex)",
+     lambda c: Image(c.df).prepare_for_export(band_regex="B1").df, 1),
+    ("Collection.prepare_for_export(dtype)",
+     lambda c: c.prepare_for_export(dtype="uint8").df, 1),
+    ("Collection.prepare_for_export(scale_offset, scale)",
+     lambda c: c.prepare_for_export(scale_offset={0: (2.0, 1.0)}, scale=20.0).df, 2),
+]
+_per_image_method = pytest.mark.parametrize(
+    "name, method, passes", _PER_IMAGE_METHODS, ids=[m[0] for m in _PER_IMAGE_METHODS])
+
+
+def test_image_prepare_for_export_keeps_the_row(spark):
+    """Image.prepare_for_export without grid kwargs returns the whole image
+    row, so a chained mask_clouds finds its collection column; with an
+    identity cast the masked pixels equal masks.mask_clouds'."""
+    from geedim_spark.operators import masks
+
+    img = Image(Collection.from_synthetic(spark, 6, scalar_filter="fmt = 'raw'").df)
+    out = img.prepare_for_export(dtype="uint16").mask_clouds().df
+    assert out.columns == img.df.columns
+    want = {r["image_id"]: bytes(r["bytes"]) for r in masks.mask_clouds(img.df).collect()}
+    rows = out.collect()
+    assert len(rows) == len(want) > 0
+    for r in rows:
+        assert r["fmt"] == "raw" and bytes(r["bytes"]) == want[r["image_id"]]
+
+
+@pytest.fixture(scope="module")
+def twice(spark):
+    """(ids, ``from_images(c, c)``): a Landsat collection holding every id twice."""
+    c = Collection.from_synthetic(spark, 12, scalar_filter="fmt = 'raw'")
+    c = Collection(c.df.filter("collection LIKE 'LANDSAT/%'"))
+    ids = sorted(r["image_id"] for r in c.df.select("image_id").collect())
+    assert len(ids) >= 2
+    return ids, Collection.from_images(c, c)
+
+
+@_per_image_method
+def test_per_image_method_keeps_row_and_multiplicity(twice, name, method, passes):
+    """Over ``from_images(c, c)`` the method returns every input column
+    and 2 rows per id: no kernel output is joined back on image_id."""
+    from pyspark.sql import functions as F
+
+    ids, cc = twice
+    out = method(cc)
+    assert out.columns[:len(cc.df.columns)] == cc.df.columns
+    per_id = out.groupBy("image_id").agg(F.count(F.lit(1)).alias("n")).collect()
+    assert sorted((r["image_id"], r["n"]) for r in per_id) == [(i, 2) for i in ids]
+
+
+def test_download_keeps_multiplicity(spark, twice, tmp_path):
+    """download over ``from_images(c, c)`` writes each image's 8 tiles
+    twice, not once per (tile, duplicate) pair."""
+    ids, cc = twice
+    table = str(tmp_path / "twice")
+    cc.download(table, max_tile_dim=21, max_tile_bands=1)
+    assert snapshots.read_snapshot(spark, table).count() == 2 * len(ids) * 8
+
+
+def test_download_partition_key_is_exact(spark, tmp_path):
+    """A partition key the tiles do not carry rides through the tile
+    kernel unchanged: a long above 2**53 beside a NULL keeps every
+    digit."""
+    from pyspark.sql import functions as F
+
+    big = F.when(F.col("i") % 2 == 0, F.col("i") + 2**53 + 1)
+    c = Collection(synth.images_df(spark, 8, scalar_filter="fmt = 'raw'").withColumn("k", big))
+    table = str(tmp_path / "keyed")
+    c.download(table, "k")
+    want = sorted((r["k"] or 0, r["image_id"]) for r in c.df.collect())
+    got = snapshots.read_snapshot(spark, table).select("k", "image_id").distinct()
+    assert sorted((r["k"] or 0, r["image_id"]) for r in got.collect()) == want
+    assert any(k > 2**53 and k % 2 for k, _ in want) and any(k == 0 for k, _ in want)
+
+
+@pytest.fixture(scope="module")
+def found(spark, tmp_path_factory):
+    """A portion search over 60 staged images."""
+    path = str(tmp_path_factory.mktemp("found") / "images")
+    synth.images_df(spark, 60, scalar_filter="fmt = 'raw'").repartition(4) \
+        .write.parquet(path)
+    out = Collection.from_parquet(spark, path).search(
+        start="2024-01-01", end="2025-01-01", rois=synth.rois_df(spark, 60),
+        fill_portion=0.0)
+    assert out.count() > 4
+    return out
+
+
+def _assert_runs_search_once(out, passes):
+    """``out``'s executed plan holds search's kernel once plus ``passes``
+    kernels of its own, with no join above any Python map node."""
+    out.collect()
+    lines = final_plan(out)
+    assert len(python_maps(lines)) == 1 + passes, "\n".join(lines)
+    assert not joins_above_python_maps(lines), "\n".join(lines)
+
+
+@_per_image_method
+def test_per_image_method_runs_search_once(found, name, method, passes):
+    _assert_runs_search_once(method(found), passes)
+
+
+def test_download_runs_search_once(found, tmp_path, monkeypatch):
+    written = []
+    write = snapshots.write_snapshot
+    monkeypatch.setattr(snapshots, "write_snapshot",
+                        lambda df, *a, **k: written.append(df) or write(df, *a, **k))
+    found.download(str(tmp_path / "tiles"))
+    _assert_runs_search_once(written[0], 1)

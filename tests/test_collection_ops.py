@@ -7,6 +7,7 @@ import pytest
 
 from geedim_spark import synth
 from geedim_spark.operators import collection_ops as co
+from tests.plans import final_plan, joins_above_python_maps, python_maps
 
 
 def test_portion_without_region_raises(spark):
@@ -273,17 +274,6 @@ def test_search_portion_path_passes_rows_through(spark, tmp_path):
     ts = [r["time_start"] for r in rows]
     assert ts == sorted(ts)
 
-    plan = found._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "isFinalPlan=true" in final
-    lines = final.splitlines()
-    kernel = [i for i, line in enumerate(lines) if "MapInArrow" in line]
-    assert len(kernel) == 1 and "MapInPandas" not in final, final
-    # the kernel's ancestors: each earlier line indented less than the last
-    depth, ancestors = len(lines[kernel[0]]) - len(lines[kernel[0]].lstrip(" +-:")), []
-    for line in reversed(lines[:kernel[0]]):
-        d = len(line) - len(line.lstrip(" +-:"))
-        if d < depth:
-            ancestors.append(line)
-            depth = d
-    assert not [a for a in ancestors if "Join" in a], final
+    lines = final_plan(found)
+    assert len(python_maps(lines)) == 1 and "MapInPandas" not in "\n".join(lines)
+    assert not joins_above_python_maps(lines), "\n".join(lines)

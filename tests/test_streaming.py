@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+
 import pytest
 
 from geedim_spark import synth
@@ -101,6 +105,26 @@ def test_stream_ingest_multi_batch_append(spark, tmp_path):
     back = snapshots.read_snapshot(spark, table)
     assert back.count() == n_raw
     assert back.select("image_id").distinct().count() == n_raw
+
+
+def test_stream_ingest_keeps_duplicate_rows(spark, tmp_path):
+    """A source dir holding one parquet file twice commits each image's
+    stats row twice, with the row's own collection: the stats are not
+    joined back onto the batch on image_id."""
+    source = str(tmp_path / "incoming_dup")
+    table = str(tmp_path / "stats_dup")
+    synth.images_df(spark, 12).coalesce(1).write.parquet(source)
+    (part,) = glob.glob(os.path.join(source, "part-*.parquet"))
+    shutil.copy(part, os.path.join(source, "copy-" + os.path.basename(part)))
+
+    q = ingest.stream_mask_stats(spark, source, table, str(tmp_path / "ckpt_dup"),
+                                 available_now=True)
+    q.awaitTermination(180)
+
+    raw = synth.images_df(spark, 12).filter("fmt = 'raw'")
+    want = sorted((r["image_id"], r["collection"]) for r in raw.collect()) * 2
+    got = snapshots.read_snapshot(spark, table).select("image_id", "collection")
+    assert sorted(tuple(r) for r in got.collect()) == sorted(want)
 
 
 def test_stream_session_windows_match_batch(spark, tmp_path):
