@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 from geedim_spark import schema as gd_schema
 from geedim_spark import synth
-from geedim_spark.kernels import map_rows
 from geedim_spark.operators import collection_ops, composite as comp_ops, pipeline
 from geedim_spark.operators import export_ops, masks
 from geedim_spark.sources import snapshots
@@ -265,18 +264,10 @@ class Collection:
         if resume:
             work = snapshots.pending_keys(work, table_dir, partition_col)
         opts = {**self.cloud_kwargs, **tiler_kwargs}
-        tiles = pipeline.mask_and_tile(work, **opts)
-        if partition_col not in tiles.columns:
-            # the tile rows carry the partition key, so nothing joins back
-            # on image_id; it crosses pandas as a string (a long beside a
-            # NULL would come back a float) and is cast back after
-            row, work = pipeline.tile_row(**opts), masks._with_time_start(work)
-            key = F.col(partition_col)
-            tiles = map_rows(
-                work.withColumn("_key", key.cast("string")), [*pipeline.TILE_COLS, "_key"],
-                f"{pipeline.TILE_SCHEMA}, `{partition_col}` string",
-                lambda *v: (t + v[-1:] for t in row(*v[:-1])),
-            ).withColumn(partition_col, key.cast(work.schema[partition_col].dataType))
+        # the partition key rides on each tile row as Arrow: nothing joins
+        # back on image_id, and a long keeps every digit
+        keep = dict.fromkeys(("image_id", "caption", partition_col))
+        tiles = pipeline.mask_and_tile(work, keep=list(keep), **opts)
         return snapshots.write_snapshot(
             tiles, table_dir, partition_col, stats_cols=("fill_px",)
         )
@@ -572,7 +563,7 @@ class Image:
                  dtype: str = "uint16"):
         """toNumPy analog (image.py:1087-1176): assemble one image's tiles
         driver-side.  Test-scale only by design."""
-        # filter BEFORE export_tiles: a predicate above the mapInPandas
+        # filter BEFORE export_tiles: a predicate above the Python map
         # barrier cannot be pushed down, so every image in the frame would
         # be decoded and re-encoded just to assemble one
         one = Image(self.df.where(F.col("image_id") == image_id),

@@ -1,17 +1,27 @@
-"""The shared Arrow kernel layer: one driver per kernel shape.
+"""The shared kernel layer: one driver per kernel shape.
 
-- :func:`with_columns` (``mapInArrow``): a per-row kernel that keeps the
-  image row and replaces or appends columns (rewrites the ``bytes`` blob
-  in place, appends mask counts); the other columns pass through as
-  Arrow, so no caller joins a kernel's output back on ``image_id``.
-- :func:`map_rows`: a per-row kernel that drops the blob and emits zero or
-  more rows of a declared schema (stats, tiles, bucket pairs).  Through
-  :func:`with_columns` every blob would travel back from Python only to
-  be dropped; a key the caller needs is appended by the row function.
-- :func:`map_batches` (``mapInPandas``): batch-vectorised kernels, and
-  the loop under :func:`map_rows`.
+- :func:`map_rows` (``mapInArrow``), the one per-row driver: ``fn`` gets
+  one row's values and yields zero or more rows of a declared schema
+  (stats, tiles, bucket pairs).  ``keep`` names columns that never enter
+  Python: they are prepended to the declared schema (a declared field
+  replaces a kept column of its name) and repeated onto each row an
+  input row yields (Arrow ``take``; passed through with no copy when
+  every input row yields exactly one).  A key such as ``download``'s
+  partition column rides through a kernel that way, so nothing joins a
+  kernel's output back on ``image_id``.
+- :func:`with_columns`: :func:`map_rows` with one row out per row in,
+  keeping every column of the input and selecting back into its column
+  order (a blob rewritten in place, mask counts appended).
+- :func:`map_batches` (``mapInPandas``): batch-vectorised kernels.
 - :func:`map_groups` (``applyInPandas``): one ``groupBy`` group per call
   (composite stacks, halo tiles, per-image and per-shard file sinks).
+
+The row driver hands ``fn`` Arrow's ``to_pylist`` values: None for NULL
+(a NULL array element too), NaN stays NaN, longs keep every digit, and
+timestamps are naive session-local ``datetime``s.  Each emitted column is
+built with ``pa.array(values, type)``; no kernel emits a timestamp, and a
+naive one would be read as UTC.  A pandas round trip would turn a long
+beside a NULL into float64 and a NaN into NULL.
 
 All of them install :func:`install_zip_cache_guard` in the worker, a fix
 for a fixed per-task cost that every Python kernel task pays.  This is the
@@ -107,34 +117,50 @@ def map_batches(
     return df.mapInPandas(_batches, schema=schema)
 
 
+def _struct(schema: str | StructType) -> StructType:
+    return schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+
+
 def map_rows(
     df: DataFrame,
     cols: list[str],
     schema: str | StructType,
     fn: Callable[..., Iterable[tuple]],
+    keep: Iterable[str] = (),
 ) -> DataFrame:
-    """Run ``fn(*values)`` once per row of ``df.select(*cols)`` and return
-    the rows it yields as a frame of ``schema``.
-
-    ``fn`` receives the row's values in ``cols`` order and yields zero or
-    more output tuples in ``schema`` field order (one per image for stats
-    kernels, one per tile for tiling kernels).  Rows keep their input order
-    within a partition; no shuffle.  ``schema`` is a DDL string or a
-    ``StructType``; its field names label every output batch, including
-    the empty ones.
+    """Run ``fn(*values)`` once per row of ``df`` on its ``cols`` values and
+    return the tuples it yields, in ``schema`` field order, as a frame of
+    ``keep`` + ``schema``: each yielded row is led by its input row's
+    ``keep`` values, which ``fn`` does not see unless ``cols`` names them
+    too.  A ``keep`` column that ``schema`` declares is replaced by the
+    emitted field.  Rows keep their input order within a partition; no
+    shuffle.
     """
-    st = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
-    names = st.fieldNames()
+    st = _struct(schema)
+    keep = [k for k in keep if k not in st.fieldNames()]
+    types = to_arrow_schema(st).types
+    out = StructType([df.schema[k] for k in keep] + st.fields)
+    names = out.fieldNames()
 
-    def _rows(pdf):
-        rows = [
-            out
-            for values in zip(*(pdf[c] for c in cols))
-            for out in fn(*values)
-        ]
-        return pd.DataFrame(rows, columns=names)
+    def _batches(it):
+        # a global reference: unpickling it imports geedim_spark in the worker
+        install_zip_cache_guard()
+        for batch in it:
+            # tz-aware timestamps -> naive session-local
+            args = [pc.local_timestamp(a) if getattr(a.type, "tz", None) else a
+                    for a in (batch.column(c) for c in cols)]
+            emitted = [list(fn(*values)) for values in zip(*(a.to_pylist() for a in args))]
+            rows = [r for e in emitted for r in e]
+            kept = [batch.column(k) for k in keep]
+            if kept and any(len(e) != 1 for e in emitted):
+                idx = pa.array([i for i, e in enumerate(emitted) for _ in e], pa.int64())
+                kept = [a.take(idx) for a in kept]
+            # strict: a tuple of the wrong length fails the task
+            columns = list(zip(*rows, strict=True)) or [()] * len(types)
+            new = [pa.array(c, t) for c, t in zip(columns, types, strict=True)]
+            yield pa.RecordBatch.from_arrays(kept + new, names=names)
 
-    return map_batches(df.select(*cols), st, _rows)
+    return df.select(*dict.fromkeys(keep + list(cols))).mapInArrow(_batches, out)
 
 
 def with_columns(
@@ -143,30 +169,12 @@ def with_columns(
     schema: str | StructType,
     fn: Callable[..., tuple],
 ) -> DataFrame:
-    """``df.withColumns`` for a per-row kernel: ``fn(*values)`` gets the
-    row's ``cols`` values (None for NULL, timestamps naive session-local)
-    and returns one tuple in ``schema`` order.  A field naming a column of
-    ``df`` replaces it in place; others are appended.  Other columns pass
-    through as Arrow (``mapInArrow``): pandas would turn a long column
-    holding a NULL into float64 and a NaN into NULL.  Order kept, no shuffle."""
-    st = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
-    new_types = dict(zip(st.fieldNames(), to_arrow_schema(st).types))
-    names = df.columns + [n for n in new_types if n not in df.columns]
-    fields = {f.name: f for f in df.schema.fields + st.fields}  # new field wins
-
-    def _batches(it):
-        install_zip_cache_guard()
-        for batch in it:
-            # tz-aware timestamps -> naive session-local, as map_rows kernels get them
-            args = [pc.local_timestamp(a) if getattr(a.type, "tz", None) else a
-                    for a in (batch.column(c) for c in cols)]
-            rows = [fn(*values) for values in zip(*(a.to_pylist() for a in args))]
-            new = {n: pa.array([r[i] for r in rows], t)
-                   for i, (n, t) in enumerate(new_types.items())}
-            yield pa.RecordBatch.from_arrays(
-                [new[n] if n in new else batch.column(n) for n in names], names=names)
-
-    return df.mapInArrow(_batches, StructType([fields[n] for n in names]))
+    """``df.withColumns`` for a per-row kernel: :func:`map_rows` where
+    ``fn(*values)`` returns exactly one tuple in ``schema`` order.  A field
+    naming a column of ``df`` replaces it in place; others are appended.
+    Every other column is kept, so the image row survives the kernel."""
+    out = map_rows(df, cols, schema, lambda *values: (fn(*values),), keep=df.columns)
+    return out.select(*df.columns, *(n for n in out.columns if n not in df.columns))
 
 
 def map_groups(
@@ -178,7 +186,7 @@ def map_groups(
     """Run ``fn(pdf)`` once per group of ``df.groupBy(*keys)``
     (``applyInPandas``; ``pdf`` holds every column of ``df``) and return the
     tuples it yields, in ``schema`` field order, as a frame of ``schema``."""
-    st = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    st = _struct(schema)
     names = st.fieldNames()
 
     def _group(pdf):

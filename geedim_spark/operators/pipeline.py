@@ -16,6 +16,7 @@ writes; tile rows are ~tile_size bytes, so
 from __future__ import annotations
 
 import re
+from collections.abc import Iterable
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -25,24 +26,72 @@ from geedim_spark.kernels import map_rows
 from geedim_spark.operators import masks
 from geedim_spark.operators.tiler import tile_shape, tile_windows
 
-TILE_SCHEMA = (
-    "image_id string, caption string, band_start int, band_stop int, "
-    "row_start int, row_stop int, col_start int, col_stop int, "
-    "fill_px long, cloudless_px long, dist_sum long, tile_bytes binary"
+_TILE_SCHEMA = (
+    "band_start int, band_stop int, row_start int, row_stop int, "
+    "col_start int, col_stop int, fill_px long, cloudless_px long, "
+    "dist_sum long, tile_bytes binary"
 )
-TILE_COLS = ["image_id", "caption", "bytes", "collection", "time_start"]
 
 
-def tile_row(scale=10.0, max_cloud_dist=5000.0, dist_decimate=4,
-             max_tile_size=4, max_tile_dim=10000, max_tile_bands=1024,
-             apply_cloud_mask=True, focal_open_px=0, focal_dilate_px=0,
-             export_dtype=None, band_regex=None, scale_offset=False,
-             **mask_opts):
-    """:func:`mask_and_tile`'s per-image row function for its options:
-    ``row(*TILE_COLS values)`` yields one ``TILE_SCHEMA`` tuple per tile."""
+def mask_and_tile(
+    images: DataFrame,
+    scale: float = 10.0,
+    max_cloud_dist: float = 5000.0,
+    dist_decimate: int = 4,
+    max_tile_size: float = 4,
+    max_tile_dim: int = 10000,
+    max_tile_bands: int = 1024,
+    apply_cloud_mask: bool = True,
+    focal_open_px: int = 0,
+    focal_dilate_px: int = 0,
+    export_dtype: str | None = None,
+    band_regex: str | None = None,
+    scale_offset: bool = False,
+    keep: Iterable[str] = ("image_id", "caption"),
+    **mask_opts,
+) -> DataFrame:
+    """images -> masked tile rows, single decode per image.
+
+    ``focal_open_px``/``focal_dilate_px`` optionally run the reference's
+    morphological open + dilate on the combined mask (mask.py:466-472 —
+    part of the S2 qa/prob pipelines) before the cloudless mask is applied.
+
+    ``export_dtype`` saturating-casts the EXPORTED pixels AFTER the masks
+    are computed and applied, in the reference's order (addMaskBands ->
+    maskClouds -> prepareForExport, image.py:741-862): casting first would
+    saturate the QA bands and garble every cloud bit.  Masked pixels take
+    the target dtype's nodata.
+
+    ``scale`` feeds both the cloud-distance geometry and (unless the
+    caller overrides it in ``mask_opts``) the S2 shadow/morphology
+    pixel-size — one physical quantity, one route.
+
+    ``scale_offset`` applies the catalog's per-band STAC scale/offset
+    (sources.band_props; reference image.py:137-172 via prepareForExport)
+    AFTER the masks are computed and BEFORE any ``export_dtype`` cast —
+    the reference's order.  Identity factors leave the image's dtype
+    untouched (prepare_for_export's no-op band semantics); any
+    non-identity factor promotes the image to float64.
+
+    ``band_regex`` exports only the bands whose (per-collection) names
+    fully match — the reference's band selection on download
+    (cli.py:364-372 -bn/--band-name -> image.py:796-798 select).  The
+    ORDER matters and is the reference's: masks are computed from the
+    FULL band set first (a QA-only or reflectance-only selection still
+    cloud-masks correctly), then the selected bands are sliced for
+    tiling.  An image whose band set matches nothing raises loudly.
+
+    ``dist_sum`` in the output is PER-IMAGE (the coarse cloud-distance sum
+    over fill pixels), replicated onto every tile row of that image —
+    aggregate it with FIRST/MAX per image, never SUM over tiles (fill_px /
+    cloudless_px ARE per-tile).
+
+    ``keep`` columns of ``images`` lead every tile row of their image, as
+    Arrow (``kernels.map_rows``): ``download`` adds its partition key.
+    """
     mask_opts.setdefault("scale", scale)
 
-    def _row(image_id, caption, buf, coll, ts):
+    def _row(image_id, buf, coll, ts):
         px, names, m = masks.image_masks(buf, coll, ts, **mask_opts)
         cl = m["CLOUDLESS_MASK"]
         # S2 kernels already ran the reference's open+dilate internally
@@ -89,14 +138,14 @@ def tile_row(scale=10.0, max_cloud_dist=5000.0, dist_decimate=4,
             px[0][~cl] = codecs.NODATA_VALS[px.dtype.name]
 
         if band_regex is not None:
-            keep = [i for i, n in enumerate(names)
-                    if re.fullmatch(band_regex, n)]
-            if not keep:
+            picked = [i for i, n in enumerate(names)
+                      if re.fullmatch(band_regex, n)]
+            if not picked:
                 raise ValueError(
                     f"no bands of {image_id} ({list(names)}) match "
                     f"band_regex {band_regex!r}"
                 )
-            px = np.ascontiguousarray(px[keep])
+            px = np.ascontiguousarray(px[picked])
 
         nbands, h, w = px.shape
         tshape = tile_shape(
@@ -119,68 +168,10 @@ def tile_row(scale=10.0, max_cloud_dist=5000.0, dist_decimate=4,
             px.shape, tshape
         ):
             yield (
-                image_id, caption, b0, b1, r0, r1, c0, c1,
+                b0, b1, r0, r1, c0, c1,
                 int(fsum[ri, ci]), int(clsum[ri, ci]), dist_sum,
                 codecs.encode_raw(px[b0:b1, r0:r1, c0:c1]),
             )
 
-    return _row
-
-
-def mask_and_tile(
-    images: DataFrame,
-    scale: float = 10.0,
-    max_cloud_dist: float = 5000.0,
-    dist_decimate: int = 4,
-    max_tile_size: float = 4,
-    max_tile_dim: int = 10000,
-    max_tile_bands: int = 1024,
-    apply_cloud_mask: bool = True,
-    focal_open_px: int = 0,
-    focal_dilate_px: int = 0,
-    export_dtype: str | None = None,
-    band_regex: str | None = None,
-    scale_offset: bool = False,
-    **mask_opts,
-) -> DataFrame:
-    """images -> masked tile rows, single decode per image.
-
-    ``focal_open_px``/``focal_dilate_px`` optionally run the reference's
-    morphological open + dilate on the combined mask (mask.py:466-472 —
-    part of the S2 qa/prob pipelines) before the cloudless mask is applied.
-
-    ``export_dtype`` saturating-casts the EXPORTED pixels AFTER the masks
-    are computed and applied, in the reference's order (addMaskBands ->
-    maskClouds -> prepareForExport, image.py:741-862): casting first would
-    saturate the QA bands and garble every cloud bit.  Masked pixels take
-    the target dtype's nodata.
-
-    ``scale`` feeds both the cloud-distance geometry and (unless the
-    caller overrides it in ``mask_opts``) the S2 shadow/morphology
-    pixel-size — one physical quantity, one route.
-
-    ``scale_offset`` applies the catalog's per-band STAC scale/offset
-    (sources.band_props; reference image.py:137-172 via prepareForExport)
-    AFTER the masks are computed and BEFORE any ``export_dtype`` cast —
-    the reference's order.  Identity factors leave the image's dtype
-    untouched (prepare_for_export's no-op band semantics); any
-    non-identity factor promotes the image to float64.
-
-    ``band_regex`` exports only the bands whose (per-collection) names
-    fully match — the reference's band selection on download
-    (cli.py:364-372 -bn/--band-name -> image.py:796-798 select).  The
-    ORDER matters and is the reference's: masks are computed from the
-    FULL band set first (a QA-only or reflectance-only selection still
-    cloud-masks correctly), then the selected bands are sliced for
-    tiling.  An image whose band set matches nothing raises loudly.
-
-    ``dist_sum`` in the output is PER-IMAGE (the coarse cloud-distance sum
-    over fill pixels), replicated onto every tile row of that image —
-    aggregate it with FIRST/MAX per image, never SUM over tiles (fill_px /
-    cloudless_px ARE per-tile).
-    """
-    row = tile_row(scale, max_cloud_dist, dist_decimate, max_tile_size,
-                   max_tile_dim, max_tile_bands, apply_cloud_mask,
-                   focal_open_px, focal_dilate_px, export_dtype, band_regex,
-                   scale_offset, **mask_opts)
-    return map_rows(masks._with_time_start(images), TILE_COLS, TILE_SCHEMA, row)
+    return map_rows(masks._with_time_start(images), masks._IMAGE_COLS,
+                    _TILE_SCHEMA, _row, keep)

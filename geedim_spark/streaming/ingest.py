@@ -67,13 +67,11 @@ def stream_mask_stats(
     Per-batch progress is on the returned query (``recentProgress``).
     """
     def _commit(raw: DataFrame, batch_id: int) -> None:
-        # mask_stats' counts with the row's collection appended: the
-        # partition key rides on the stats row, no join back on image_id
+        # mask_stats' counts led by the row's collection: the partition
+        # key rides on the stats row, no join back on image_id
         stats = map_rows(
-            masks._with_time_start(raw), masks._IMAGE_COLS,
-            masks._STATS_SCHEMA + ", collection string",
-            lambda image_id, buf, coll, ts: [
-                masks.mask_stats_row(image_id, buf, coll, ts) + (coll,)],
+            masks._with_time_start(raw), masks._IMAGE_COLS, masks._STATS_SCHEMA,
+            lambda *values: [masks.mask_stats_row(*values)], keep=["collection"],
         )
         # append: collections interleave across micro-batches — an
         # overwrite commit would repoint each collection partition at

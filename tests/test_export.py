@@ -327,12 +327,13 @@ def test_map_rows_operators_schema_and_rows(spark, kernel_inputs, case):
 
 
 def test_per_image_operators_use_map_rows():
-    """The per-image raster operators run through the shared kernel
-    drivers: kernels.with_columns when they keep the image row (mask,
-    band-select, scale/cast or reproject its blob in place),
-    kernels.map_rows when they emit stats or tiles.  A direct
-    mapInPandas/mapInArrow call in these modules (in composite: in
-    _pixel_tiles) is a new per-operator copy of a driver's batch loop."""
+    """The per-image raster operators run through the one per-row driver,
+    kernels.map_rows on Arrow: through kernels.with_columns when they keep
+    the image row (mask, band-select, scale/cast or reproject its blob in
+    place), directly when they emit stats or tiles, with ``keep`` carrying
+    any key through as Arrow.  A direct mapInPandas/mapInArrow call in
+    these modules (in composite: in _pixel_tiles) is a new per-operator
+    copy of the driver's batch loop."""
     import ast
     import inspect
 
@@ -351,17 +352,3 @@ def test_per_image_operators_use_map_rows():
             if isinstance(n, ast.Attribute) and n.attr in ("mapInPandas", "mapInArrow")
         ]
         assert not calls, f"{where} calls a Spark map API at lines {calls}"
-
-
-def test_tile_row_takes_mask_and_tile_options():
-    """download builds its keyed tiles from pipeline.tile_row and
-    mask_and_tile forwards its options to it positionally: both must name
-    the same options, in the same order, with the same defaults."""
-    import inspect
-
-    from geedim_spark.operators import pipeline
-
-    row = inspect.signature(pipeline.tile_row).parameters
-    op = inspect.signature(pipeline.mask_and_tile).parameters
-    assert [(p.name, p.default) for p in row.values()] == [
-        (p.name, p.default) for p in list(op.values())[1:]]

@@ -2,9 +2,9 @@
 zip-directory guard (``install_zip_cache_guard``: unit tests on a temp zip
 without Spark, and a Spark test that every Python worker an engine kernel
 ran on is patched while the driver is not), the grouped-map driver
-``map_groups``, the rule that only ``kernels.py`` calls Spark's pandas
-map APIs, and the rule that every library definition is reachable from an
-entry point."""
+``map_groups``, the per-row drivers on hostile values, the rule that only
+``kernels.py`` calls Spark's pandas and Arrow map APIs, and the rule that
+every library definition is reachable from an entry point."""
 
 from __future__ import annotations
 
@@ -177,11 +177,11 @@ def test_map_groups_rows_per_group(spark):
     assert rows == [(1, 5, "g1"), (2, 7, "g2"), (2, 8, "g2")]
 
 
-def test_with_columns_replaces_appends_and_passes_through(spark):
+def _with_columns_case(spark):
     """``with_columns`` replaces a named column in place, appends the rest,
     and hands back every other column exactly: a long above 2**53 in a
-    batch that also holds a NULL, and a NaN, both of which a pandas round
-    trip changes.  The kernel sees None for NULL and naive timestamps."""
+    batch that also holds a NULL, and a NaN.  The kernel sees None for
+    NULL and naive timestamps."""
     import datetime as dt
 
     df = spark.createDataFrame(
@@ -192,14 +192,54 @@ def test_with_columns_replaces_appends_and_passes_through(spark):
     def fn(i, t):
         return i * 10, -1 if t is None else t.hour + (t.tzinfo is not None)
 
-    out = kernels.with_columns(df, ["i", "t"], "i long, hour long", fn)
-    assert out.columns == ["i", "big", "d", "t", "hour"]
-    rows = out.collect()
-    assert repr([tuple(r) for r in rows]) == repr([
+    def run(frame):
+        return kernels.with_columns(frame, ["i", "t"], "i long, hour long", fn)
+
+    return df, run, ["i", "big", "d", "t", "hour"], [
         (10, 2**53 + 1, float("nan"), dt.datetime(2024, 1, 1, 5), 5),
         (20, None, None, None, -1),
-    ])
-    empty = kernels.with_columns(df.limit(0), ["i", "t"], "i long, hour long", fn)
+    ]
+
+
+def _map_rows_case(spark):
+    """``map_rows`` emits a long above 2**53 beside a NULL, and a NaN, and
+    repeats its ``keep`` columns (the same long and NULL, an array with a
+    NULL element) onto every row an input row yields: two rows for one
+    input, none for another.  A kept column the schema declares (``x``)
+    is replaced by the emitted one."""
+    df = spark.createDataFrame(
+        [(1, 2**53 + 1, [1, None], "a"), (2, 7, [2], "b"), (3, None, None, "c")],
+        "i long, big long, arr array<long>, x string").coalesce(1)
+
+    def fn(i):
+        if i == 1:
+            yield 2**53 + 1, float("nan")
+            yield None, 0.5
+        elif i == 3:
+            yield i * 10, float("nan")
+
+    def run(frame):
+        return kernels.map_rows(frame, ["i"], "n long, x double", fn,
+                                keep=["big", "arr", "x"])
+
+    return df, run, ["big", "arr", "n", "x"], [
+        (2**53 + 1, [1, None], 2**53 + 1, float("nan")),
+        (2**53 + 1, [1, None], None, 0.5),
+        (None, None, 30, float("nan")),
+    ]
+
+
+@pytest.mark.parametrize("case", [_with_columns_case, _map_rows_case],
+                         ids=["with_columns", "map_rows"])
+def test_row_drivers_keep_hostile_values(spark, case):
+    """Each per-row driver round-trips values a pandas transport changes
+    (a long beside a NULL comes back float64, a NaN comes back NULL), in
+    its declared column order, and keeps that schema on an empty input."""
+    df, run, columns, want = case(spark)
+    out = run(df)
+    assert out.columns == columns
+    assert repr([tuple(r) for r in out.collect()]) == repr(want)
+    empty = run(df.limit(0))
     assert empty.schema == out.schema and empty.collect() == []
 
 
@@ -207,8 +247,18 @@ def test_only_kernels_calls_pandas_map_apis():
     """``mapInPandas`` / ``applyInPandas`` / ``mapInArrow`` belong to the
     kernel layer (``map_batches``, ``map_rows``, ``map_groups``,
     ``with_columns``); a direct call anywhere else in the package is a
-    per-operator copy of it.  Streaming's
+    per-operator copy of it.  Inside it, ``map_rows`` is the one
+    ``mapInArrow`` call (the per-row driver) and ``map_batches`` the one
+    ``mapInPandas`` call, so a second row loop fails here.  Streaming's
     ``applyInPandasWithState`` is a different API and is not covered."""
+    with open(kernels.__file__) as fh:
+        layer = ast.parse(fh.read())
+    owners = {}
+    for top in layer.body:
+        for n in ast.walk(top):
+            if isinstance(n, ast.Attribute) and n.attr in ("mapInPandas", "mapInArrow"):
+                owners.setdefault(n.attr, []).append(getattr(top, "name", n.lineno))
+    assert owners == {"mapInArrow": ["map_rows"], "mapInPandas": ["map_batches"]}, owners
     root = os.path.dirname(kernels.__file__)
     calls = []
     for dirpath, _, files in os.walk(root):

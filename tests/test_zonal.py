@@ -88,7 +88,7 @@ def test_zonal_stats_validation_and_plan(spark):
         zonal.zonal_stats(img, bad)
     with pytest.raises(Exception, match="band 7 out of range"):
         zonal.zonal_stats(img, zones, band=7).collect()
-    # scale shape: one narrow mapInPandas pass, zones broadcast in the
+    # scale shape: one narrow Python map pass, zones broadcast in the
     # closure -> no shuffle anywhere
     plan = (zonal.zonal_stats(img, zones)._jdf.queryExecution()
             .executedPlan().toString())
