@@ -961,23 +961,24 @@ def q_composite_tiled_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_composite_tiled_qmosaic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tile-keyed q-mosaic over the Landsat-like family: per-tile cloud
-    distance (exact EDT on each tile's own cloudless block) drives an
-    argmax composite.  For the strip world the per-tile EDT has a closed
-    form (fill strips only ever intersect tile column 0, cloud strips only
-    tile column 1), so the whole argmax pipeline value-checks in SQL.
+    """Tile-keyed q-mosaic over the Landsat-like family, 20 px tiles at the
+    default 5000 m clamp: each image's whole-image CLOUD_DIST (computed in
+    the decode stage, exact EDT) drives the per-tile argmax composite.  For
+    the strip world the distance has a closed form (the horizontal
+    distance to the cloud strip), so the whole argmax pipeline
+    value-checks in SQL.
 
     Every input has a nonzero fill AND cloud strip (i%5<>0, i%7<>0).
-    Invalid (nodata) pixels are NOT distance sources (mask.py:102-104), so
-    tc=0 tiles (fill strip, no cloud strip) saturate at the 5000 clamp and
-    exercise the (time DESC, id) tie order, while tc=1 tiles rank by the
-    finite distance to the cloud strip.  What this pins: cloud-only EDT
-    sources, the valid-set masking, the (cd DESC, time DESC, id)
-    preference ordering, and the symmetric dropping of all-masked columns.
-    Strip cd curves share a slope, so the winner is constant per tile by
-    geometry — per-pixel winner VARIATION is covered by the direct argmax
-    unit test (test_qmosaic_argmax_clouddist) and EDT value exactness by
-    the `cloud_dist` query; this query pins the pipeline between them."""
+    Invalid (nodata) pixels are NOT distance sources (mask.py:102-104),
+    and tc=0 tiles hold no cloud, so their distances cross the tile edge
+    — a per-tile EDT would saturate them at the clamp.  What this pins:
+    cloud-only EDT sources, whole-image distances in every tile, the
+    valid-set masking, the (cd DESC, time DESC, id) preference ordering,
+    and the symmetric dropping of all-masked columns.  Strip cd curves
+    share a slope, so the winner is constant per column range by geometry
+    — per-pixel winner VARIATION is covered by the direct argmax unit test
+    (test_qmosaic_argmax_clouddist) and EDT value exactness by the
+    `cloud_dist` query; this query pins the pipeline between them."""
     n, _ = _sizes(sf_dir)
     imgs = synth.images_df(
         spark, min(n, 900),
@@ -990,18 +991,19 @@ def q_composite_tiled_qmosaic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_qmosaic_halo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whole-image-EDT q-mosaic at tile-bounded memory
-    (composite_tiled_qmosaic_halo): the halo join supplies each 16 px tile
-    the exact whole-image CLOUD_DIST (clamp 200 m -> 20 px halo), so the
-    per-column winner is the global distance argmax — no per-tile
-    saturation branch in the oracle, unlike composite_tiled_qmosaic."""
+    """Tile-keyed q-mosaic on 16 px tiles (a ragged last tile column) with a
+    200 m clamp (20 px, wider than a tile): each tile carries its image's
+    whole-image CLOUD_DIST, so the per-column winner is the global
+    distance argmax, clamp included.  The name (and the oracle's comment)
+    date from the halo-join route that first computed this result."""
     n, _ = _sizes(sf_dir)
     imgs = synth.images_df(
         spark, min(n, 900),
         scalar_filter="fmt = 'raw' AND i % 3 = 1 AND i % 5 <> 0 AND i % 7 <> 0",
     )
-    tiles = composite.composite_tiled_qmosaic_halo(
-        imgs, tile_h=16, tile_w=16, scale=synth.SCALE, max_cloud_dist=200.0
+    tiles = composite.composite_tiled(
+        imgs, "q-mosaic", tile_h=16, tile_w=16, scale=synth.SCALE,
+        max_cloud_dist=200.0,
     )
     return _tiled_column_profile(tiles, "qmosaic_v")
 
@@ -3215,15 +3217,12 @@ def oracle_sql(sf: float = 0.01) -> dict[str, str]:
             valid AS (SELECT * FROM cols WHERE x >= f_px AND x < w - c_px),
             cd AS (
               -- sources are CLOUD pixels only (mask.py:102-104: invalid /
-              -- nodata pixels are non-cloud): tc=0 tiles have no cloud strip
-              -- so every valid pixel saturates at the 5000 clamp and the
-              -- (time DESC, id) tie order decides; tc=1 tiles rank by the
-              -- horizontal distance to the cloud strip
+              -- nodata pixels are non-cloud); the WHOLE-IMAGE distance at
+              -- every tile column is the horizontal distance to the cloud
+              -- strip, so tc=0 tiles rank across the tile edge
               SELECT image_id, v, time_start, tc, xl,
                      LEAST(5000, CAST({synth.SCALE} AS BIGINT) *
-                       CASE WHEN tc = 1 AND c_px > 0
-                            THEN (w - c_px) - x ELSE 9999999 END
-                     ) AS cdv
+                           ((w - c_px) - x)) AS cdv
               FROM valid),
             win AS (
               SELECT tc, xl, v,

@@ -94,8 +94,7 @@ class Collection:
         medoid_max_stack: int = 64,
     ) -> DataFrame:
         """Tile-keyed composite — **the form to use at scale** (the shuffle
-        key is the tile grid, task memory is bounded by
-        n_images x tile_size; :meth:`composite` stacks whole images per
+        key is the tile grid; :meth:`composite` stacks whole images per
         group and is the test-scale twin).
 
         Composite decision matrix:
@@ -104,20 +103,14 @@ class Collection:
         shape                   use
         ======================  =============================================
         test scale / small      :meth:`composite` (whole-image stack)
-        scale, pixelwise        this method — mosaic/mean/median/mode/medoid
-        methods                 tile bit-exactly
-        scale, ``q-mosaic``     this method — routes to the HALO-join EDT
-                                (whole-image CLOUD_DIST semantics at
-                                tile-bounded memory)
-        scale, ``q-mosaic``     ``operators.composite.composite_tiled`` —
-        with per-TILE EDT       cheaper (no halo join) but a cloudless tile
-        semantics               saturates at the clamp; opt in explicitly
+        scale, any method       this method — every method equals the
+                                whole-image composite bit-for-bit;
+                                ``q-mosaic`` takes each image's CLOUD_DIST
+                                from the whole image in the decode stage
         ======================  =============================================
 
-        Both routes of this method run the same (tr, tc) reducer
-        (``composite._reduce_tiles``); the two q-mosaic forms differ only
-        in where each input's CLOUD_DIST tile comes from (the halo join,
-        or an EDT of the tile itself).
+        Memory: the decode stage holds one whole image per task, the
+        (tr, tc) reduce holds n_images x tile_size.
 
         Returns the raw tiled frame (tr, tc, bytes, n_inputs) — assemble
         with ``export_ops.assemble_image`` / the sinks, which is how the
@@ -135,16 +128,10 @@ class Collection:
         """
         src = comp_ops.sort_for_composite(self.df, method, date=date,
                                           by_portion=by_portion)
-        if method == "q-mosaic":
-            return comp_ops.composite_tiled_qmosaic_halo(
-                src, tile_h=tile_h, tile_w=tile_w,
-                mask_opts=self.cloud_kwargs, scale=scale,
-                max_cloud_dist=max_cloud_dist,
-            )
         return comp_ops.composite_tiled(
             src, method, tile_h=tile_h, tile_w=tile_w,
             mask_opts=self.cloud_kwargs, scale=scale,
-            medoid_max_stack=medoid_max_stack,
+            max_cloud_dist=max_cloud_dist, medoid_max_stack=medoid_max_stack,
         )
 
     def composite(self, method: str = "q-mosaic", date: str | None = None,
@@ -153,8 +140,7 @@ class Collection:
 
         NOTE this stacks every co-located image on one task — right for
         the reference-parity surface and test scale; at scale use
-        :meth:`composite_tiled`, whose ``q-mosaic`` routes to the
-        halo-join EDT (whole-image semantics, tile-bounded memory).
+        :meth:`composite_tiled`, which gives the same pixels per tile.
 
         The raw composite kernel emits (group_id, bytes, n_inputs); this
         re-attaches the image-table columns (grid, id, caption, a
@@ -169,15 +155,13 @@ class Collection:
             src, method, mask_opts=self.cloud_kwargs
         )
         name = method.upper().replace("-", "_")
-        # limit(1) for w/h only: the export guard enforces one (w, h) grid,
-        # so any row carries them — but time_start differs per image, so a
-        # bare limit(1) was nondeterministic across parallelism; use a MIN
-        # aggregate (the reference sets the composite time range to min/max
-        # of the inputs, collection.py:710-724).  Over a parquet source the
-        # agg is a pruned scalar scan; over a UDF-generated lineage it costs
-        # one extra pass — determinism wins.
-        meta = self.df.limit(1).select("w", "h").crossJoin(
-            F.broadcast(self.df.agg(F.min("time_start").alias("time_start")))
+        # one aggregate for the grid and the time: the export guard allows
+        # one (w, h) grid, so MIN is any row's; the reference sets the
+        # composite time range from the inputs' min/max
+        # (collection.py:710-724).  One extra pass over the input lineage.
+        meta = self.df.agg(
+            F.min("w").alias("w"), F.min("h").alias("h"),
+            F.min("time_start").alias("time_start"),
         )
         decorated = out.crossJoin(F.broadcast(meta)).select(
             F.concat(F.lit(f"{name}-COMP-"), F.col("group_id")).alias("image_id"),

@@ -348,14 +348,17 @@ _TILED_SCHEMA = "tr int, tc int, bytes binary, n_inputs int"
 
 
 def _pixel_tiles(
-    images: DataFrame, tile_h: int, tile_w: int, mask_opts: dict
+    images: DataFrame, tile_h: int, tile_w: int, mask_opts: dict,
+    method: str = "mosaic", scale: float = 10.0,
+    max_cloud_dist: float = 5000.0,
 ) -> DataFrame:
-    """Stage 1 of the tile-keyed composites: decode each image once, emit
+    """Stage 1 of :func:`composite_tiled`: decode each image once, emit
     pixel tiles plus a 3-state validity plane per tile (0 = invalid /
-    1 = filled-cloudy / 2 = cloudless — one uint8 plane carries both masks
-    so q-mosaic reducers can compute CLOUD_DIST with cloud-only sources,
-    mask.py:102-104).  A caller-attached ``sort_key`` is honoured;
-    otherwise capture time is the order."""
+    1 = filled-cloudy / 2 = cloudless; the reducer reads ``>= 2``).  For
+    ``q-mosaic`` the image's CLOUD_DIST band is computed here, on the
+    whole image (mask.py:88-124, as composite_collection does), and each
+    tile's crop rides along as ``dist_bytes`` (uint16).  A caller-attached
+    ``sort_key`` is honoured; otherwise capture time is the order."""
     # _with_time_start backfills NULL when the column is absent (a frame
     # carrying only a caller-attached sort_key is a valid input, same as
     # composite_collection)
@@ -364,6 +367,7 @@ def _pixel_tiles(
         images = images.withColumn(
             "sort_key", F.col("time_start").cast("double")
         )
+    qmosaic = method == "q-mosaic"
 
     def _row(image_id, buf, coll, ts, sk):
         px, _, m = masks.image_masks(buf, coll, ts, **mask_opts)
@@ -371,6 +375,12 @@ def _pixel_tiles(
             m["FILL_MASK"].astype(np.uint8)
             + m["CLOUDLESS_MASK"].astype(np.uint8)
         )
+        planes = [px, valid[None]]
+        if qmosaic:
+            planes.append(masks.cloud_dist(
+                m["CLOUDLESS_MASK"], scale, max_cloud_dist,
+                fill=m["FILL_MASK"],
+            )[None])
         _, h, w = px.shape
         n_tr = -(-h // tile_h)
         n_tc = -(-w // tile_w)
@@ -379,14 +389,14 @@ def _pixel_tiles(
         ):
             yield (
                 image_id, sk, tr, tc, n_tr, n_tc,
-                codecs.encode_raw(px[:, r0:r1, c0:c1]),
-                codecs.encode_raw(valid[None, r0:r1, c0:c1]),
+                *(codecs.encode_raw(p[:, r0:r1, c0:c1]) for p in planes),
             )
 
     return map_rows(
         images, [*masks._IMAGE_COLS, "sort_key"],
         "image_id string, sort_key double, tr int, tc int, "
-        "n_tr int, n_tc int, tile_bytes binary, valid_bytes binary",
+        "n_tr int, n_tc int, tile_bytes binary, valid_bytes binary"
+        + (", dist_bytes binary" if qmosaic else ""),
         _row,
     )
 
@@ -406,22 +416,18 @@ def composite_tiled(
     that survives 10^12 images: a whole-image stack (composite_collection)
     needs every co-located image on one task, while here each (tr, tc) cell
     stacks only its own tile rows, so the shuffle key cardinality is the
-    tile grid and memory per task is bounded by n_images x tile_size.
+    tile grid.
 
-    Stage 1 (narrow): decode each image once, emit its tiles.
-    Stage 2 (shuffle on (tr, tc)): stack + reduce per tile.
+    Stage 1 (narrow): decode and mask each image once, emit its tiles; it
+    holds one whole image per task.
+    Stage 2 (shuffle on (tr, tc)): stack + reduce per tile; it holds
+    n_images x tile_size per task.
 
-    Tiling exactness: mosaic/mean/median/mode/medoid are PIXELWISE, so the
-    tiled result equals the whole-image composite bit-for-bit (tested in
-    test_composite.py).  q-mosaic's CLOUD_DIST is an EDT — here it is
-    computed per tile (a cloudless tile reports the clamp distance), which
-    equals the whole-image EDT only when every tile dimension is >=
-    ceil(max_cloud_dist/scale); smaller tiles give *per-tile* q-mosaic
-    semantics (what the driver query documents and oracles).  For
-    whole-image EDT semantics at scale use
-    :func:`composite_tiled_qmosaic_halo` — the DEFAULT q-mosaic route of
-    ``api.Collection.composite_tiled``; this per-tile form is the
-    explicit opt-in for when the saturation caveat is acceptable.
+    Tiling exactness: every method equals the whole-image composite
+    bit-for-bit (tested in test_composite.py).  mosaic/mean/median/mode/
+    medoid are PIXELWISE; q-mosaic's CLOUD_DIST is an EDT, so stage 1
+    computes it on the whole image and ships each tile's crop with the
+    pixels — the reducer never sees a tile edge.
 
     A caller-attached ``sort_key`` column (sort_for_composite) is honoured,
     matching composite_collection; otherwise capture time is the order.
@@ -437,17 +443,8 @@ def composite_tiled(
     keeps reporting the ORIGINAL group size so the truncation is visible
     downstream (n_inputs > medoid_max_stack == truncated).
     """
-    tiles = _pixel_tiles(images, tile_h, tile_w, mask_opts or {})
-    return _reduce_tiles(tiles, method, scale, max_cloud_dist,
-                         medoid_metric, medoid_max_stack)
-
-
-def _reduce_tiles(tiles, method, scale, max_cloud_dist, medoid_metric="sed",
-                  medoid_max_stack=64) -> DataFrame:
-    """Stage 2 of the tile-keyed composites: reduce each (tr, tc) group.
-    q-mosaic reads each input's CLOUD_DIST tile from ``dist_bytes`` when
-    the frame carries it (the halo join), else takes the per-tile EDT."""
-    has_dist = "dist_bytes" in tiles.columns
+    tiles = _pixel_tiles(images, tile_h, tile_w, mask_opts or {}, method,
+                         scale, max_cloud_dist)
 
     def _reduce(pdf: pd.DataFrame):
         n_total, pdf = _stack_order(pdf, method, medoid_max_stack, "tile group")
@@ -456,13 +453,8 @@ def _reduce_tiles(tiles, method, scale, max_cloud_dist, medoid_metric="sed",
             [codecs.decode(bytes(b))[0] for b in pdf["valid_bytes"]]
         )
         cd = None
-        if has_dist:
+        if method == "q-mosaic":
             cd = np.stack([codecs.decode(bytes(b))[0] for b in pdf["dist_bytes"]])
-        elif method == "q-mosaic":
-            cd = np.stack([
-                masks.cloud_dist(c >= 2, scale, max_cloud_dist, fill=c >= 1)
-                for c in codes
-            ])
         yield (
             int(pdf["tr"].iloc[0]), int(pdf["tc"].iloc[0]),
             _encode_composite(stack, codes >= 2, method, cd, medoid_metric),
@@ -470,61 +462,6 @@ def _reduce_tiles(tiles, method, scale, max_cloud_dist, medoid_metric="sed",
         )
 
     return map_groups(tiles, ["tr", "tc"], _TILED_SCHEMA, _reduce)
-
-
-def composite_tiled_qmosaic_halo(
-    images: DataFrame,
-    tile_h: int = 16,
-    tile_w: int = 16,
-    mask_opts: dict | None = None,
-    scale: float = 10.0,
-    max_cloud_dist: float = 5000.0,
-) -> DataFrame:
-    """Tile-keyed q-mosaic with WHOLE-IMAGE CLOUD_DIST semantics at
-    tile-bounded memory — removes composite_tiled's one documented
-    q-mosaic caveat (per-tile EDT saturates tiles far from any cloud).
-
-    Plan: (1) ONE decode+mask pass (_pixel_tiles) whose uint8 valid plane
-    IS the 3-state code plane (0 invalid / 1 filled-cloudy / 2 cloudless);
-    the frame is persisted (MEMORY_AND_DISK, lazy) because both the halo
-    branch and the final join consume it — without the cache the expensive
-    kernel would run twice per image; (2) halo-join EDT over the code
-    tiles (stencil.halo_apply + cloud_dist_code_kernel, halo = the clamp
-    reach, so each tile's distances equal the whole-image transform
-    exactly incl. the uint16 floor); (3) equi-join dist tiles back onto
-    the pixel tiles on the compact (image_id, tr, tc) key; (4)
-    composite_tiled's (tr, tc) reducer, reading the joined distances.  Two
-    shuffles on integer grid keys, task memory bounded by
-    n_images x tile_size — the same scale contract as composite_tiled.
-    The returned frame carries the cache handle as ``_tile_cache`` for
-    targeted unpersist; long sessions can ``spark.catalog.clearCache()``.
-    """
-    import math
-
-    from pyspark import StorageLevel
-
-    from geedim_spark.operators import stencil
-
-    halo = math.ceil(max_cloud_dist / scale)
-    tiles = _pixel_tiles(images, tile_h, tile_w, mask_opts or {}).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    codes = tiles.select(
-        "image_id", "tr", "tc", "n_tr", "n_tc",
-        F.col("valid_bytes").alias("tile_bytes"),
-    )
-    dists = stencil.halo_apply(
-        codes, stencil.cloud_dist_code_kernel(scale, max_cloud_dist),
-        halo_px=halo, tile_h=tile_h, tile_w=tile_w, out_dtype="float64",
-    ).select(
-        "image_id", "tr", "tc", F.col("tile_bytes").alias("dist_bytes")
-    )
-    out = _reduce_tiles(
-        tiles.join(dists, ["image_id", "tr", "tc"]),
-        "q-mosaic", scale, max_cloud_dist,
-    )
-    out._tile_cache = tiles
-    return out
 
 
 def composite_metadata(images: DataFrame, method: str) -> DataFrame:

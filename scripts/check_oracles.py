@@ -63,13 +63,16 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql(sf) if entrymod.oracle_sql.__code__.co_argcount else entrymod.oracle_sql()
 
-    failures = []
+    failures, leaked, n_run = [], [], 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
         t0 = time.time()
         sdf = fn(spark, sf_dir).toPandas()
         t_spark = time.time() - t0
+        n_run += 1
+        if not spark._jsparkSession.sharedState().cacheManager().isEmpty():
+            leaked.append(name)
         # persist-once intermediates (minhash banding, tf-idf tf, dsir
         # buckets) stack up over a 100+-query session otherwise
         spark.catalog.clearCache()
@@ -94,7 +97,9 @@ def main() -> int:
                 print("    first diffs (spark vs duck):")
                 print(pd.concat([a[neq].head(3), b[neq].head(3)]).to_string()[:800])
 
-    print(f"\n{'ALL OK' if not failures else 'FAILURES: ' + ', '.join(failures)}")
+    print(f"\ncache left behind by {len(leaked)} queries: {', '.join(leaked) or 'none'}")
+    print(f"{n_run - len(failures)}/{n_run} "
+          f"{'ALL OK' if not failures else 'FAILURES: ' + ', '.join(failures)}")
     return 1 if failures else 0
 
 

@@ -123,11 +123,10 @@ def test_image_facade_mask_export_roundtrip(spark, tmp_path):
     assert (out[0, :, :16] == 1).all()  # nodata 0 scaled: 0*2+1
 
 
-def test_composite_tiled_qmosaic_routes_to_halo(spark):
-    """api.Collection.composite_tiled('q-mosaic') — the default scale path
-    — must produce the HALO-join EDT result (whole-image CLOUD_DIST
-    semantics), not the per-tile-EDT variant, and pixelwise methods must
-    match operators.composite.composite_tiled bit-for-bit."""
+def test_composite_tiled_equals_operator(spark):
+    """api.Collection.composite_tiled is one operators.composite.
+    composite_tiled call for every method: q-mosaic (clamp and scale
+    forwarded) and mean match the operator bit-for-bit."""
     from geedim_spark.operators import composite as comp_ops
 
     coll = Collection.from_synthetic(
@@ -140,22 +139,29 @@ def test_composite_tiled_qmosaic_routes_to_halo(spark):
             for r in df.collect()
         )
 
-    got = coll.composite_tiled(
-        "q-mosaic", tile_h=16, tile_w=16, scale=synth.SCALE,
-        max_cloud_dist=200.0,
-    )
-    src = comp_ops.sort_for_composite(coll.df, "q-mosaic")
-    want = comp_ops.composite_tiled_qmosaic_halo(
-        src, tile_h=16, tile_w=16, scale=synth.SCALE, max_cloud_dist=200.0
-    )
-    assert canon(got) == canon(want)
+    for method, kw in [("q-mosaic", {"scale": synth.SCALE, "max_cloud_dist": 200.0}),
+                       ("mean", {})]:
+        got = coll.composite_tiled(method, tile_h=16, tile_w=16, **kw)
+        want = comp_ops.composite_tiled(
+            comp_ops.sort_for_composite(coll.df, method), method,
+            tile_h=16, tile_w=16, **kw,
+        )
+        assert canon(got) == canon(want), method
 
-    got_mean = coll.composite_tiled("mean", tile_h=16, tile_w=16)
-    want_mean = comp_ops.composite_tiled(
-        comp_ops.sort_for_composite(coll.df, "mean"), "mean",
-        tile_h=16, tile_w=16,
-    )
-    assert canon(got_mean) == canon(want_mean)
+
+def test_composite_tiled_qmosaic_leaves_no_cache_or_join(spark):
+    """The default q-mosaic decodes each image once and reduces its tiles:
+    no join above a Python map node, nothing left in Spark's cache and no
+    handle hung on the frame."""
+    spark.catalog.clearCache()  # what earlier tests cached is not this call's
+    out = Collection.from_synthetic(
+        spark, 12, scalar_filter="fmt = 'raw' AND i % 3 = 1"
+    ).composite_tiled("q-mosaic")
+    assert out.collect()
+    lines = final_plan(out)
+    assert not joins_above_python_maps(lines), "\n".join(lines)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert not hasattr(out, "_tile_cache")
 
 
 def test_image_metadata_accessor_surface(spark):

@@ -274,11 +274,11 @@ def test_composite_tiled_honours_sort_key(spark):
     assert (px == 11).all()  # i=1 is closest to the target date, not i=3
 
 
-def test_tiled_halo_qmosaic_equals_whole_image(spark):
-    """composite_tiled_qmosaic_halo == composite_collection('q-mosaic')
-    bit-for-bit: the halo-join CLOUD_DIST gives whole-image EDT semantics
-    at tile-bounded memory (strip distances are exact scale multiples, so
-    the uint16 band and the float kernel agree)."""
+def test_tiled_qmosaic_equals_whole_image(spark):
+    """composite_tiled('q-mosaic') == composite_collection('q-mosaic')
+    bit-for-bit: each tile carries its image's whole-image CLOUD_DIST.  The
+    120 m clamp reaches 12 px, close to the 16 px tile, so a per-tile EDT
+    would saturate tiles whose nearest cloud lies in a neighbour."""
     from geedim_spark import synth
     from tests.reference.stencil import assemble_tiles
 
@@ -291,8 +291,9 @@ def test_tiled_halo_qmosaic_equals_whole_image(spark):
     assert len(whole_rows) == 1
     whole = codecs.decode(bytes(whole_rows[0]["bytes"]))
 
-    tiles = comp.composite_tiled_qmosaic_halo(
-        imgs, tile_h=16, tile_w=16, scale=10.0, max_cloud_dist=120.0
+    tiles = comp.composite_tiled(
+        imgs, "q-mosaic", tile_h=16, tile_w=16, scale=10.0,
+        max_cloud_dist=120.0,
     ).collect()
     got = np.stack([
         assemble_tiles(
@@ -386,12 +387,12 @@ def test_medoid_metric_parameter_changes_winner():
     assert brute("sed") != brute("sam")
 
 
-def test_tiled_halo_qmosaic_equals_whole_image_random_clouds(spark):
-    """The STRONG form of halo == whole-image: random scattered clouds
-    produce diagonal (irrational-multiple-of-scale) EDT distances, so this
-    only passes because the tiled kernel applies the same uint16 floor as
-    the whole-image CLOUD_DIST band — float distances would pick different
-    argmax winners on floor-ties."""
+def test_tiled_qmosaic_equals_whole_image_random_clouds(spark):
+    """The STRONG form of tiled == whole-image q-mosaic: random scattered
+    clouds produce diagonal (irrational-multiple-of-scale) EDT distances
+    and the 170 m clamp (17 px) outreaches the 16 px tile, so this passes
+    only if every tile ranks by the same uint16 whole-image CLOUD_DIST
+    band — float or per-tile distances pick different argmax winners."""
     import pandas as pd
 
     from tests.reference.stencil import assemble_tiles
@@ -419,8 +420,9 @@ def test_tiled_halo_qmosaic_equals_whole_image_random_clouds(spark):
     ).collect()
     whole = codecs.decode(bytes(whole_rows[0]["bytes"]))
 
-    tiles = comp.composite_tiled_qmosaic_halo(
-        imgs, tile_h=16, tile_w=16, scale=10.0, max_cloud_dist=170.0
+    tiles = comp.composite_tiled(
+        imgs, "q-mosaic", tile_h=16, tile_w=16, scale=10.0,
+        max_cloud_dist=170.0,
     ).collect()
     got = np.stack([
         assemble_tiles(
